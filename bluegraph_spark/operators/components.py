@@ -30,19 +30,14 @@ initial one: no extra pass over the edges anywhere.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 @dataclass
@@ -71,80 +66,43 @@ def _sig_cols() -> list:
     ]
 
 
-def _materialize_with_sig(
-    e: DataFrame,
-    rnd: int,
-    checkpointer: SuperstepCheckpointer | None,
-) -> tuple[DataFrame, tuple[int, int]]:
-    """Checkpoint/localCheckpoint ``e``; the signature rides the same job."""
-    obs = Observation(f"cc_sig_r{rnd}_{time.time_ns()}")
-    e = e.observe(obs, *_sig_cols())
-    if checkpointer is not None:
-        e = checkpointer.save(rnd, e)
-    else:
-        e = stats_safe_local_checkpoint(e)
-    m = obs.get
-    return e, (int(m["cnt"] or 0), int(m["h"] or 0))
+def _sig(m) -> tuple[int, int]:
+    return int(m["cnt"] or 0), int(m["h"] or 0)
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    # No distinct here: duplicate (a, m) rows across star centers are
-    # harmless to small-star's min aggregate and are swept by its final
-    # distinct — dropping the dedup saves one full shuffle per round.
-    sym = e.select("a", "b").unionByName(
-        e.select(F.col("b").alias("a"), F.col("a").alias("b"))
-    )
-    mins = sym.groupBy("a").agg(F.min("b").alias("_mv"))
-    mins = mins.select("a", F.least("_mv", F.col("a")).alias("_m"))
-    return (
-        sym.join(mins, "a")
-        .filter(F.col("b") > F.col("a"))
-        .select(F.col("b").alias("a"), F.col("_m").alias("b"))
-    )
+def _sig_fields(m, prev: tuple[int, int] | None = None) -> dict[str, Any]:
+    cnt, h = _sig(m)
+    return {"edges": cnt, "hash": h, "converged": (cnt, h) == prev}
 
 
-def _small_star(e: DataFrame) -> DataFrame:
-    # input edges point downhill (b < a); group neighbors by a
-    mins = e.groupBy("a").agg(F.min("b").alias("_m"))
-    redirect = (
-        e.join(mins, "a")
-        .filter(F.col("b") != F.col("_m"))
-        .select(F.col("b").alias("a"), F.col("_m").alias("b"))
-    )
-    self_edge = mins.select("a", F.col("_m").alias("b"))
-    return redirect.unionByName(self_edge).distinct()
-
-
-def _cc_round(e: DataFrame, n_parts: int) -> tuple[DataFrame, list[DataFrame]]:
+def _cc_round(
+    loop: SuperstepLoop, e: DataFrame, n_parts: int
+) -> tuple[DataFrame, list[DataFrame]]:
     """One large-star + small-star round with an explicit exchange budget.
 
-    Semantically identical to ``_small_star(_large_star(e))`` (the
-    reference formulation, kept above for unit tests), but each star's
-    working set is repartitioned by its grouping key, sorted, and persisted
-    ONCE — the min-aggregation and the redirect join then both read the
+    Each star's working set is repartitioned by its grouping key, sorted,
+    and persisted ONCE — the min-aggregation and the redirect join then both read the
     clustered cache, so the round executes 3 shuffles (sym layout, ls
     layout, final distinct) instead of the 10 the naive plan runs when the
     unpersisted union is recomputed on both consumer branches. Skew safety
     is unchanged: min is still a partial-aggregating groupBy, never a
     whole-group window buffer. Returns (round_output, caches) — the caller
-    unpersists the caches after materializing the output.
+    releases the caches after materializing the output.
     """
-    sym = (
+    sym = loop.persist(
         e.select("a", "b")
         .unionByName(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .repartition(n_parts, "a")
         .sortWithinPartitions("a")
-        .persist()
     )
     mins = sym.groupBy("a").agg(F.min("b").alias("_mv"))
     mins = mins.select("a", F.least("_mv", F.col("a")).alias("_m"))
-    ls = (
+    ls = loop.persist(
         sym.join(mins, "a")
         .filter(F.col("b") > F.col("a"))
         .select(F.col("b").alias("a"), F.col("_m").alias("b"))
         .repartition(n_parts, "a")
         .sortWithinPartitions("a")
-        .persist()
     )
     mins2 = ls.groupBy("a").agg(F.min("b").alias("_m"))
     redirect = (
@@ -168,117 +126,64 @@ def connected_components(
 
     Returns (id, component) where component = min id of the node's
     component. ``nodes`` optionally supplies isolated vertices.
+    ``resume=True`` continues from the checkpointer's latest complete round
+    (the convergence signature is re-derived from the saved edge set).
 
     Loop discipline (same as :func:`pagerank`): the shuffle width is sized
-    from the measured edge count (~250k rows/partition) and AQE is frozen
-    for the fixed-shape round plans — both pinned on the loop's own
-    ``newSession()`` of the caller's SparkContext, so the caller's conf is
-    never mutated and concurrent planning on it is unaffected.
+    from the measured edge count and AQE is frozen for the fixed-shape
+    round plans — both pinned on the loop's own ``newSession()`` of the
+    caller's SparkContext, so the caller's conf is never mutated and
+    concurrent planning on it is unaffected.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    if nodes is not None:
-        nodes = rebind(nodes, spark)
-    # Ids keep their native type (numeric min for longs, lexicographic min
-    # for strings): long comparisons and shuffles are several times cheaper
-    # than strings at 10^9-vertex scale, and every step below only needs an
-    # orderable, hashable id type.
-    e = (
-        edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-
-    start_round = 0
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        start_round = checkpointer.latest()
-        e = checkpointer.load(spark, start_round)
-        prev_sig = (
-            checkpointer.load_metrics(start_round).get("sig_cnt"),
-            checkpointer.load_metrics(start_round).get("sig_hash"),
-        )
-    else:
-        e, prev_sig = _materialize_with_sig(e, 0, checkpointer)
-        if checkpointer is not None:
-            from bluegraph_spark.operators.pagerank import _update_metrics
-
-            _update_metrics(
-                checkpointer, 0, {"sig_cnt": prev_sig[0], "sig_hash": prev_sig[1]}
+    with SuperstepLoop(edges.sparkSession, checkpointer, resume) as loop:
+        edges, nodes = loop.bind(edges), loop.bind(nodes)
+        if loop.converged:
+            return ComponentsResult(
+                loop.result(_component_labels(loop.state, edges, nodes)),
+                loop.iteration, True, loop.history,
             )
-
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if partitions:
-        n_parts = int(partitions)
-    else:
-        # prev_sig[0] may be None on resume from a checkpoint whose metrics
-        # predate the signature record; fall back to the session width then.
-        cnt0 = prev_sig[0] if prev_sig[0] is not None else 0
-        n_parts = (
-            loop_partitions(int(cnt0), conf_parts)
-            if cnt0
-            else conf_parts
-        )
-
-    history: list[dict[str, Any]] = []
-    converged = False
-    rnd = start_round
-    # Freeze the plan for the loop: the round plan is fixed-shape over a
-    # small known-size state, so AQE's per-stage driver re-planning is
-    # pure serial overhead, and the shuffle width should match the data,
-    # not the session default. (At sandbox scale the win is modest —
-    # ~16s -> ~11s for cc_orders at sf0.1, the floor being per-stage
-    # fixed costs — but at cluster scale a mis-sized width is the
-    # difference between 1 task wave and thousands of empty tasks.)
-    # Both pins land on the loop's private session and die with it.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-    round_plan: str | None = None
-    round_exchanges: int | None = None
-    while rnd < max_rounds:
-        rnd += 1
-        t0 = time.time()
-        # Convergence signature rides the materialization job as observed
-        # metrics — no second pass over the edges.
-        e_round, caches = _cc_round(e, n_parts)
-        # try/finally: a job failure or checkpointer.save error mid-round
-        # must not leave the round's persisted working sets in the
-        # SparkContext-shared cache manager forever (the caller's other work
-        # would see the leaked executor memory).
-        try:
-            if round_plan is None:
-                from bluegraph_spark.plans.planinfo import executed_exchange_count
-
-                round_plan = e_round._jdf.queryExecution().executedPlan().toString()
-                round_exchanges = executed_exchange_count(e_round)
-            e_new, sig = _materialize_with_sig(e_round, rnd, checkpointer)
-        finally:
+        if loop.state is None:
+            # Ids keep their native type (numeric min for longs,
+            # lexicographic min for strings): every step below only needs an
+            # orderable, hashable id type. The signature rides the
+            # materialization job.
+            loop.start(
+                edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+                .filter(F.col("a") != F.col("b"))
+                .distinct(),
+                *_sig_cols(),
+                fields=_sig_fields,
+            )
+            prev_sig = (loop.record["edges"], loop.record["hash"])
+        else:
+            prev_sig = _sig(loop.state.agg(*_sig_cols()).first())
+        # On small inputs the frozen plan's win is modest (~16s -> ~11s for
+        # cc_orders at sf0.1, the floor being per-stage fixed costs), but at
+        # cluster scale a mis-sized width is the difference between 1 task
+        # wave and thousands of empty tasks.
+        n_parts = int(partitions) if partitions else loop.width(prev_sig[0])
+        loop.freeze(n_parts)
+        for _ in loop.supersteps(max_rounds):
+            e_round, caches = _cc_round(loop, loop.state, n_parts)
+            rec = loop.step(
+                e_round, *_sig_cols(), fields=lambda m: _sig_fields(m, prev_sig)
+            )
             for c in caches:
-                c.unpersist()
-        history.append(
-            {
-                "round": rnd,
-                "superstep_sec": round(time.time() - t0, 3),
-                "edges": sig[0],
-                "hash": sig[1],
-            }
+                loop.release(c)
+            prev_sig = (rec["edges"], rec["hash"])
+
+        return ComponentsResult(
+            loop.result(_component_labels(loop.state, edges, nodes)),
+            loop.iteration, loop.converged, loop.history, loop.plan,
+            loop.exchanges,
         )
-        if checkpointer is not None:
-            from bluegraph_spark.operators.pagerank import _update_metrics
 
-            _update_metrics(
-                checkpointer, rnd, {"sig_cnt": sig[0], "sig_hash": sig[1]}
-            )
-        # e_new is materialized (the signature job ran): free the superseded
-        # round's checkpoint blocks now instead of waiting for periodic GC.
-        release_local_checkpoint(e)
-        e = e_new
-        if sig == prev_sig:
-            converged = True
-            break
-        prev_sig = sig
 
-    # stars: (a=child, b=root). Roots + isolated nodes label themselves.
+def _component_labels(
+    e: DataFrame, edges: DataFrame, nodes: DataFrame | None
+) -> DataFrame:
+    """(id, component) from the star forest ``e`` (a=child, b=root); roots
+    and isolated ``nodes`` label themselves."""
     members = e.select(F.col("a").alias("id"), F.col("b").alias("component"))
     roots = e.select(F.col("b").alias("id")).distinct().withColumn(
         "component", F.col("id")
@@ -293,9 +198,6 @@ def connected_components(
             "component", F.col("id")
         )
         comp = comp.unionByName(isolated)
-    # a node can appear in members only once at convergence; distinct guards
-    # the non-converged (max_rounds hit) case
-    comp = comp.groupBy("id").agg(F.min("component").alias("component"))
-    return ComponentsResult(
-        rebind(comp, caller), rnd, converged, history, round_plan, round_exchanges
-    )
+    # a node can appear in members only once at convergence; distinct
+    # guards the non-converged (max_rounds hit) case
+    return comp.groupBy("id").agg(F.min("component").alias("component"))

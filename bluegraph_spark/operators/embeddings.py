@@ -55,10 +55,7 @@ from pyspark.sql import functions as F
 
 from bluegraph_spark.operators.linkpred import portable_hash
 from bluegraph_spark.pgframe import symmetrize_edges
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 def _l2_normalize(df: DataFrame, quantize: int) -> DataFrame:
@@ -128,6 +125,10 @@ def fastrp_embeddings(
     At 10^12 edges / 10^9 vertices, K·2 vertex-state exchanges of ~d·8
     bytes/vertex is the floor for any propagation embedder; the d
     per-element sums are plain codegen aggregates (no UDF anywhere).
+
+    No ``checkpointer``/``resume``: a run is K (2-4) fixed iterations and
+    the final fold reads every iteration's state, so a restart recomputes
+    them at about the cost of reading K checkpoints back.
     """
     if dim < 1:
         raise ValueError("dim must be >= 1")
@@ -135,65 +136,42 @@ def fastrp_embeddings(
         raise ValueError("need at least one iteration weight")
 
     # Same loop discipline as the superstep operators (pagerank/lpa/...):
-    # a private conf-isolated session, the shuffle width sized to the data,
+    # a private conf-isolated session, the CSR edge cache sized to the data,
     # and AQE frozen once the fixed-shape iteration plans start — the K
     # iteration checkpoints otherwise each fan out into several adaptive
     # stage-jobs. The per-element quantize rounding already makes the
     # embeddings partitioning-independent (test-pinned), so the re-layout
     # cannot change values.
-    from bluegraph_spark.plans.isolation import (
-        loop_partitions,
-        loop_session,
-        rebind,
-    )
+    with SuperstepLoop(edges.sparkSession) as loop:
+        edges = loop.bind(edges)
+        e0 = edges.select(
+            F.col(src).cast("string").alias("src"),
+            F.col(dst).cast("string").alias("dst"),
+            (
+                F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+            ).alias("w"),
+        )
+        if not directed:
+            e0 = symmetrize_edges(e0)
+        e = loop.edge_cache(e0, "src", partitions)
 
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        # The vertex set is read three+ times (the init projection and every
+        # iteration's zero-degree left join): materialize it once instead of
+        # re-running the union+distinct over the edge cache per consumer.
+        nodes = loop.checkpoint(
+            e.select(F.col("src").alias("id"))
+            .unionByName(e.select(F.col("dst").alias("id")))
+            .distinct()
+        )
 
-    e0 = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-        (
-            F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-        ).alias("w"),
-    )
-    if not directed:
-        e0 = symmetrize_edges(e0)
-    e0 = e0.persist()
-    if partitions:
-        n_parts = int(partitions)
-    else:
-        n_parts = loop_partitions(e0.count(), conf_parts)
-    e = e0.repartition(n_parts, "src").persist()
-    e.count()
-    e0.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-
-    # The vertex set is read three+ times (the init projection and every
-    # iteration's zero-degree left join): materialize it once instead of
-    # re-running the union+distinct over the edge cache per consumer.
-    nodes = stats_safe_local_checkpoint(
-        e.select(F.col("src").alias("id"))
-        .unionByName(e.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-
-    cur = stats_safe_local_checkpoint(
-        _l2_normalize(_init_embedding(nodes, dim, seed), quantize)
-    )
-    zeros = F.array(*[F.lit(0.0)] * dim)
-    # Every iteration state stays checkpointed until the final weighted
-    # fold is materialized (K is 2-4; V·d·K doubles is the same order as
-    # the output itself), then all intermediates are released at once —
-    # releasing a state mid-loop while the lazy fold still referenced it
-    # is a checkpoint-block-not-found crash, not a cleanup.
-    states: list[DataFrame] = [cur]
-    iters: list[DataFrame] = []
-
-    try:
+        cur = loop.checkpoint(
+            _l2_normalize(_init_embedding(nodes, dim, seed), quantize)
+        )
+        zeros = F.array(*[F.lit(0.0)] * dim)
+        # Every iteration state stays checkpointed until the final weighted
+        # fold is materialized (K is 2-4; V·d·K doubles is the same order as
+        # the output itself); the loop's exit then frees them all.
+        iters: list[DataFrame] = []
         for _ in iteration_weights:
             sums = (
                 e.join(cur.withColumnRenamed("id", "src"), "src")
@@ -216,8 +194,7 @@ def fastrp_embeddings(
                 nodes.join(sums, "id", "left")
                 .select("id", F.coalesce("emb", zeros).alias("emb"))
             )
-            cur = stats_safe_local_checkpoint(_l2_normalize(nxt, quantize))
-            states.append(cur)
+            cur = loop.checkpoint(_l2_normalize(nxt, quantize))
             iters.append(cur)
 
         folded = iters[0].select(
@@ -239,13 +216,7 @@ def fastrp_embeddings(
                     ).alias("emb"),
                 )
             )
-        out = stats_safe_local_checkpoint(folded)
-        for s in states:
-            release_local_checkpoint(s)
-        release_local_checkpoint(nodes)
-    finally:
-        e.unpersist()
-    return rebind(out, caller)
+        return loop.result(loop.checkpoint(folded))
 
 
 def fastrp_embeddings_long(

@@ -49,6 +49,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from bluegraph_spark.plans.loop import SuperstepLoop
+
 
 def portable_hash(seed: int | str, col: Column) -> Column:
     """Deterministic 60-bit non-negative hash, identical in Spark and DuckDB.
@@ -359,6 +361,11 @@ def fit_edge_predictor(
     cross-partitioning contract (same role as FastRP's): it absorbs both
     summation-order differences in the distributed average and the ≤1-ulp
     disagreement between ``java.lang.Math.exp`` and libm ``exp``.
+
+    An empty feature table raises ``ValueError``. There is no
+    ``checkpointer``/``resume``: the whole iteration state is the p+1
+    weights held in Python, and a rerun costs one aggregation job per
+    iteration.
     """
     fcols = list(feature_cols)
     # Conf-isolated loop scope (same discipline as the superstep loops):
@@ -369,84 +376,71 @@ def fit_edge_predictor(
     # materialization pass below still plans under the caller's conf copy
     # (AQE on) so the upstream feature expression keeps its adaptive join
     # plan; the pin lands after it, before the loop.
-    from bluegraph_spark.plans.isolation import (
-        loop_partitions,
-        loop_session,
-        rebind,
-    )
-    from bluegraph_spark.plans.stats_guard import (
-        release_local_checkpoint,
-        stats_safe_local_checkpoint,
-    )
+    with SuperstepLoop(features.sparkSession) as loop:
+        features = loop.bind(features)
+        y = F.col(label_col).cast("double")
+        base = features.select(
+            y.alias("_y"), *[F.col(c).cast("double").alias(c) for c in fcols]
+        )
 
-    spark = loop_session(features.sparkSession)
-    features = rebind(features, spark)
-    y = F.col(label_col).cast("double")
-    base = features.select(
-        y.alias("_y"), *[F.col(c).cast("double").alias(c) for c in fcols]
-    )
+        # ONE pass over the (possibly expensive) upstream feature
+        # expression: the standardization statistics and the row count ride
+        # the cache materialization as observed metrics (same avg/round
+        # expressions the former separate stats job ran — the quantize
+        # rounding absorbs the summation-tree difference exactly as it does
+        # across partitionings).
+        obs = Observation(f"lp_fit_stats_{time.time_ns()}")
+        cached = loop.checkpoint(
+            base.observe(
+                obs,
+                F.count(F.lit(1)).alias("_n"),
+                *[F.round(F.avg(c), quantize).alias(f"_m_{c}") for c in fcols],
+                *[
+                    F.round(F.avg(F.col(c) * F.col(c)), quantize).alias(f"_q_{c}")
+                    for c in fcols
+                ],
+            )
+        )
+        stats = obs.get
+        n_rows = int(stats["_n"] or 0)
+        if n_rows == 0:
+            raise ValueError("fit_edge_predictor: empty feature table")
+        means, stds = [], []
+        for c in fcols:
+            m = float(stats[f"_m_{c}"])
+            var = float(stats[f"_q_{c}"]) - m * m
+            s = round(math.sqrt(var), quantize) if var > 0 else 1.0
+            means.append(m)
+            stds.append(s if s > 0 else 1.0)
 
-    # ONE pass over the (possibly expensive) upstream feature expression:
-    # the standardization statistics and the row count ride the cache
-    # materialization as observed metrics (same avg/round expressions the
-    # former separate stats job ran — the quantize rounding absorbs the
-    # summation-tree difference exactly as it does across partitionings).
-    # The former shape executed the upstream join twice (stats pass, then
-    # the standardized-cache build) plus a counting job.
-    obs = Observation(f"lp_fit_stats_{time.time_ns()}")
-    cached = stats_safe_local_checkpoint(
-        base.observe(
-            obs,
-            F.count(F.lit(1)).alias("_n"),
-            *[F.round(F.avg(c), quantize).alias(f"_m_{c}") for c in fcols],
+        # Every GD iteration is one full-reduction job over this cache; at
+        # small row counts a session-wide partition fan-out just multiplies
+        # task-scheduling cost by the iteration count. Re-layout the cache
+        # at the loop width (same rows-per-partition budget as the superstep
+        # loops). The per-step round(quantize) already makes the trajectory
+        # independent of partitioning, so the values are unaffected. The
+        # standardization itself stays a lazy projection over the cache — 5
+        # codegen'd column ops per row per iteration, far below one extra
+        # materialization job. The checkpoint under the packed cache lives
+        # until the loop's exit: an eviction-triggered recompute of the pack
+        # reads it.
+        n_parts = loop.width(n_rows)
+        loop.freeze(n_parts)
+        if n_parts < cached.rdd.getNumPartitions():
+            cached = loop.persist(cached.coalesce(n_parts))
+            cached.count()
+        std = cached.select(
+            "_y",
             *[
-                F.round(F.avg(F.col(c) * F.col(c)), quantize).alias(f"_q_{c}")
-                for c in fcols
+                F.round((F.col(c) - F.lit(means[i])) / F.lit(stds[i]), quantize)
+                .alias(c)
+                for i, c in enumerate(fcols)
             ],
         )
-    )
-    stats = obs.get
-    n_rows = int(stats["_n"] or 0)
-    means, stds = [], []
-    for c in fcols:
-        m = float(stats[f"_m_{c}"])
-        var = float(stats[f"_q_{c}"]) - m * m
-        s = round(math.sqrt(var), quantize) if var > 0 else 1.0
-        means.append(m)
-        stds.append(s if s > 0 else 1.0)
 
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # Every GD iteration is one full-reduction job over this cache; at
-    # small row counts a session-wide partition fan-out just multiplies
-    # task-scheduling cost by the iteration count. Re-layout the cache at
-    # the loop width (same rows-per-partition budget as the superstep
-    # loops). The per-step round(quantize) already makes the trajectory
-    # independent of partitioning, so the values are unaffected. The
-    # standardization itself stays a lazy projection over the cache —
-    # 5 codegen'd column ops per row per iteration, far below one extra
-    # materialization job.
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_parts = loop_partitions(n_rows, conf_parts)
-    # ckpt is released only in the finally below: the packed cache's
-    # lineage still points at the checkpoint RDD, so freeing it earlier
-    # would make an eviction-triggered recompute of the pack raise.
-    ckpt = cached
-    if n_parts < cached.rdd.getNumPartitions():
-        packed = cached.coalesce(n_parts).persist()
-        packed.count()
-        cached = packed
-    std = cached.select(
-        "_y",
-        *[
-            F.round((F.col(c) - F.lit(means[i])) / F.lit(stds[i]), quantize).alias(c)
-            for i, c in enumerate(fcols)
-        ],
-    )
-
-    b = 0.0
-    w = [0.0] * len(fcols)
-    history: list[dict] = []
-    try:
+        b = 0.0
+        w = [0.0] * len(fcols)
+        history: list[dict] = []
         for it in range(1, iterations + 1):
             z = F.lit(b)
             for i, c in enumerate(fcols):
@@ -478,12 +472,6 @@ def fit_edge_predictor(
                 for i, c in enumerate(fcols)
             ]
             history.append({"iteration": it, "loss": float(row["_loss"])})
-    finally:
-        # cached is either the loop-width persisted pack or the checkpoint
-        # itself; unpersist no-ops on a checkpoint and the release no-ops
-        # on a persisted plan, so both paths free everything they hold.
-        cached.unpersist()
-        release_local_checkpoint(ckpt)
 
     return EdgePredictorModel(
         feature_cols=fcols,

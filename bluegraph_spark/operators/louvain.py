@@ -53,28 +53,23 @@ shuffles are the two aggregations ``groupBy(id, c)`` / ``groupBy(c)`` and
 the argmax window — all keyed on small per-vertex/per-community state, not
 the edge table); AQE and the shuffle width are frozen on the loop's own
 ``newSession()``; every round's labels run through
-``SuperstepCheckpointer`` when supplied (lineage cut + resume, north
-rule), otherwise ``localCheckpoint``; the move count rides the
+``SuperstepCheckpointer`` when supplied (lineage cut + metrics), otherwise
+``localCheckpoint``; the move count rides the
 materialization job as an observed metric. Coarsening shrinks the edge
 table geometrically, so level 2+ costs a fraction of level 1.
 """
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any, Callable
 
-from pyspark.sql import Column, DataFrame, Observation, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 @dataclass
@@ -92,6 +87,7 @@ def _default_parity(c: Column) -> Column:
 
 
 def _local_move_rounds(
+    loop: SuperstepLoop,
     sym: DataFrame,
     loops: DataFrame,
     labels: DataFrame,
@@ -99,12 +95,9 @@ def _local_move_rounds(
     parity_fn: Callable[[Column], Column],
     max_rounds: int,
     exact_rounds: int | None,
-    checkpointer: SuperstepCheckpointer | None,
-    cp_offset: int,
-    history: list[dict[str, Any]],
     level: int,
-) -> tuple[DataFrame, int, bool]:
-    """Run local-move rounds at one level; returns (labels, rounds, converged).
+) -> tuple[DataFrame, bool]:
+    """Run local-move rounds at one level; returns (labels, converged).
 
     ``sym``: symmetrized loop-free (src, dst, w) — persisted by the caller.
     ``loops``: (id, lw) self-loop weights (empty at level 1).
@@ -114,7 +107,7 @@ def _local_move_rounds(
     # convention). Loop terms are constant across a vertex's community
     # choices, so they cancel out of every gain comparison — they only
     # need to be IN k_i (and hence Σtot) consistently.
-    deg = (
+    deg = loop.persist(
         labels.select("id")
         .join(
             sym.groupBy(F.col("src").alias("id")).agg(F.sum("w").alias("_kd")),
@@ -126,18 +119,18 @@ def _local_move_rounds(
             "id",
             (F.coalesce("_kd", F.lit(0.0)) + F.coalesce("_kl", F.lit(0.0))).alias("k"),
         )
-        .persist()
     )
     deg.count()
 
-    rnd = 0
-    zero_streak = 0
-    converged = False
-    prev_cp: DataFrame | None = None
+    # A level's local moves start afresh. Its initial labels are not the
+    # loop's state to free: the composed assignment and the coarse graph's
+    # loop weights still read them (the loop frees them on exit).
+    loop.converged = False
+    loop.state = None
+    first = loop.iteration
     target_rounds = exact_rounds if exact_rounds is not None else max_rounds
-    while rnd < target_rounds:
-        rnd += 1
-        t0 = time.time()
+    for it in loop.supersteps(first + target_rounds):
+        rnd = it - first
         par = (rnd - 1) % 2
         # Per-round vertex state (id, c, k) — labels joined with the static
         # degree table once and reused by the community-degree aggregate
@@ -220,52 +213,27 @@ def _local_move_rounds(
             F.when(moved, F.col("c_new")).otherwise(F.col("c_own")).alias("c"),
             F.when(moved, F.lit(True)).otherwise(F.lit(False)).alias("_moved"),
         )
-        t_build = time.time() - t0
-        obs = Observation(f"louvain_l{level}_r{rnd}_{time.time_ns()}")
-        new_labels = new_labels.observe(
-            obs,
+        # The move count rides the materialization job. A level converges
+        # when two consecutive rounds move nothing (every parity class had a
+        # final chance); exact_rounds runs its rounds with no such test.
+        loop.step(
+            new_labels,
             F.sum(F.col("_moved").cast("long")).alias("moves"),
             F.count(F.lit(1)).alias("rows"),
+            fields=lambda m: {
+                "level": level,
+                "round": rnd,
+                "parity": par,
+                "moves": int(m["moves"] or 0),
+                "rows": int(m["rows"]),
+                "converged": exact_rounds is None and rnd > 1 and not m["moves"]
+                and loop.history[-1]["moves"] == 0,
+            },
         )
-        if checkpointer is not None:
-            new_labels = checkpointer.save(cp_offset + rnd, new_labels, {"pending": True})
-        else:
-            new_labels = stats_safe_local_checkpoint(new_labels)
-        t_ckpt = time.time() - t0 - t_build
-        m = obs.get
-        # The new checkpoint is materialized; free the previous in-loop
-        # checkpoint's blocks deterministically (the level's initial labels,
-        # created outside this loop, are never touched).
-        release_local_checkpoint(prev_cp)
-        prev_cp = new_labels
-        moves = int(m["moves"] or 0)
-        rec = {
-            "level": level,
-            "round": rnd,
-            "parity": par,
-            "superstep_sec": round(time.time() - t0, 3),
-            "build_sec": round(t_build, 3),
-            "ckpt_sec": round(t_ckpt, 3),
-            "moves": moves,
-            "rows": int(m["rows"]),
-        }
-        history.append(rec)
-        if __debug__ and __import__("os").environ.get("BG_LOUVAIN_DEBUG"):
-            print(rec, flush=True)
-        if checkpointer is not None:
-            from bluegraph_spark.operators.pagerank import _update_metrics
-
-            _update_metrics(checkpointer, cp_offset + rnd, rec)
-        labels = new_labels.select("id", "c")
-        if exact_rounds is None:
-            zero_streak = zero_streak + 1 if moves == 0 else 0
-            if zero_streak >= 2:
-                converged = True
-                break
-    deg.unpersist()
-    if exact_rounds is not None:
-        converged = True  # fixed-round mode: ran exactly as specified
-    return labels, rnd, converged
+        labels = loop.state.select("id", "c")
+    loop.release(deg)
+    # fixed-round mode ran exactly as specified
+    return labels, exact_rounds is not None or loop.converged
 
 
 def louvain(
@@ -292,75 +260,68 @@ def louvain(
     Conf isolation: like :func:`pagerank`, the whole loop runs on its own
     ``newSession()`` with AQE off and the shuffle width sized to the data;
     the caller's session conf is never touched.
+
+    ``checkpointer`` records every local-move round's labels and metrics,
+    numbered across levels. There is no ``resume``: a round's labels mean
+    something only together with its level's coarsened graph, self-loop
+    weights and composed assignment, which no round checkpoint holds, so a
+    restarted run starts again at level 1.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    if nodes is not None:
-        nodes = rebind(nodes, spark)
     if parity_fn is None:
         parity_fn = _default_parity
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e0 = (
-        edges.select(F.col("src"), F.col("dst"), w.alias("w"))
-        .filter(F.col("src") != F.col("dst"))
-        .persist()
-    )
-    n_edges = e0.count()
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Sized off the undirected edge count (not the doubled symmetrized
-    # count): the round's window/argmax stages degrade past ~8 tasks at
-    # this state size — measured sweep at sf0.1 (245k edges): 2 parts
-    # 15.2-16.0s, 8 parts 14.8s, 16 parts 21.7s, 31 parts 23.3s.
-    n_parts = loop_partitions(n_edges, conf_parts)
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+    with SuperstepLoop(edges.sparkSession, checkpointer) as loop:
+        edges, nodes = loop.bind(edges), loop.bind(nodes)
+        w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+        e0 = loop.persist(
+            edges.select(F.col("src"), F.col("dst"), w.alias("w"))
+            .filter(F.col("src") != F.col("dst"))
+        )
+        # Sized off the undirected edge count (not the doubled symmetrized
+        # count): the round's window/argmax stages degrade past ~8 tasks at
+        # this state size — measured sweep at sf0.1 (245k edges): 2 parts
+        # 15.2-16.0s, 8 parts 14.8s, 16 parts 21.7s, 31 parts 23.3s.
+        loop.freeze(loop.width(e0.count()))
+        sym = loop.persist(
+            symmetrize_edges(e0)
+            .repartition(loop.n_parts, "dst")
+            .sortWithinPartitions("dst")
+        )
+        sym.count()
+        loop.release(e0)
+        if nodes is None:
+            vertices = sym.select(F.col("src").alias("id")).distinct()
+        else:
+            id_type = dict(e0.dtypes).get("src", "string")
+            first = nodes.columns[0]
+            vertices = (
+                nodes.select("id")
+                if first == "id" and dict(nodes.dtypes)[first] == id_type
+                else nodes.select(F.col(first).cast(id_type).alias("id"))
+            ).distinct()
 
-    sym = (
-        symmetrize_edges(e0)
-        .repartition(n_parts, "dst")
-        .sortWithinPartitions("dst")
-        .persist()
-    )
-    sym.count()
-    # 2m rides the plan as a broadcast 1-row scalar (m = Σ undirected w;
-    # the symmetrized table counts each edge twice, so Σ sym / 2 = m and
-    # tm = 2m = Σ sym). Loops (level ≥ 2) add 2·lw each.
-    if nodes is None:
-        vertices = sym.select(F.col("src").alias("id")).distinct()
-    else:
-        id_type = dict(e0.dtypes).get("src", "string")
-        first = nodes.columns[0]
-        vertices = (
-            nodes.select("id") if first == "id" and dict(nodes.dtypes)[first] == id_type
-            else nodes.select(F.col(first).cast(id_type).alias("id"))
-        ).distinct()
+        labels = loop.checkpoint(vertices.select("id", F.col("id").alias("c")))
+        # level-1 graphs are loop-free (filtered above); loops appear at
+        # level 2+
+        loops = labels.select("id", F.lit(0.0).alias("lw")).limit(0)
 
-    labels = stats_safe_local_checkpoint(
-        vertices.select("id", F.col("id").alias("c"))
-    )
-    # level-1 graphs are loop-free (filtered above); loops appear at level 2+
-    loops = labels.select("id", F.lit(0.0).alias("lw")).limit(0)
-
-    history: list[dict[str, Any]] = []
-    total_rounds = 0
-    levels_run = 0
-    converged = False
-    # Composed original-id -> community mapping across levels.
-    assignment = labels
-    cur_sym, cur_loops = sym, loops
-    caches = [e0, sym]
-    try:
+        levels_run = 0
+        converged = False
+        # Composed original-id -> community mapping across levels.
+        assignment = labels
+        cur_sym, cur_loops = sym, loops
         for level in range(1, max_levels + 1):
             levels_run = level
-            # 2m is loop-invariant within a level; as a broadcast 1-row
-            # relation it was re-collected — re-aggregating the sym cache —
-            # by EVERY round's decision query (a BroadcastExchange submits
-            # its own collect job). One scalar collect per level instead;
+            # 2m is loop-invariant within a level: one scalar collect per
+            # level (m = Σ undirected w; the symmetrized table counts each
+            # edge twice, so tm = 2m = Σ sym, plus 2·lw per loop at level
+            # 2+). As a broadcast 1-row relation it was re-collected —
+            # re-aggregating the sym cache — by EVERY round's decision query;
             # F.lit reproduces the identical double in the gain expression.
             tm_row = (
                 cur_sym.agg(F.sum("w").alias("_s"))
-                .crossJoin(cur_loops.agg(F.coalesce(F.sum("lw"), F.lit(0.0)).alias("_l")))
+                .crossJoin(
+                    cur_loops.agg(F.coalesce(F.sum("lw"), F.lit(0.0)).alias("_l"))
+                )
                 .select((F.col("_s") + 2.0 * F.col("_l")).alias("tm"))
                 .first()
             )
@@ -373,24 +334,13 @@ def louvain(
                 if level > 1
                 else labels
             )
-            lab, rounds, conv = _local_move_rounds(
-                cur_sym,
-                cur_loops,
-                lab0,
-                tm,
-                parity_fn,
-                max_rounds,
-                exact_rounds,
-                checkpointer,
-                total_rounds,
-                history,
-                level,
+            lab, converged = _local_move_rounds(
+                loop, cur_sym, cur_loops, lab0, tm, parity_fn, max_rounds,
+                exact_rounds, level,
             )
-            total_rounds += rounds
-            converged = conv
             if level > 1:
                 # compose: original -> old community -> new community
-                assignment = stats_safe_local_checkpoint(
+                assignment = loop.checkpoint(
                     assignment.select("id", F.col("c").alias("_oc"))
                     .join(lab.select(F.col("id").alias("_oc"), "c"), "_oc")
                     .select("id", "c")
@@ -404,15 +354,18 @@ def louvain(
             # a self-loop (each undirected edge once: src < dst on the
             # coarse ids keeps the canonical form).
             mapped = (
-                cur_sym.join(lab.select(F.col("id").alias("src"), F.col("c").alias("cs")), "src")
-                .join(lab.select(F.col("id").alias("dst"), F.col("c").alias("cd")), "dst")
+                cur_sym.join(
+                    lab.select(F.col("id").alias("src"), F.col("c").alias("cs")), "src"
+                )
+                .join(
+                    lab.select(F.col("id").alias("dst"), F.col("c").alias("cd")), "dst"
+                )
                 .select("cs", "cd", "w")
             )
-            new_sym = (
+            new_sym = loop.persist(
                 mapped.filter(F.col("cs") != F.col("cd"))
                 .groupBy(F.col("cs").alias("src"), F.col("cd").alias("dst"))
                 .agg(F.sum("w").alias("w"))
-                .persist()
             )
             # intra weight: mapped counts each undirected edge twice
             old_loops_mapped = cur_loops.join(
@@ -429,16 +382,13 @@ def louvain(
             )
             n_coarse_edges = new_sym.count()
             if cur_sym is not sym:
-                cur_sym.unpersist()
-            caches.append(new_sym)
+                loop.release(cur_sym)
             cur_sym, cur_loops = new_sym, new_loops
             if n_coarse_edges == 0:
                 break
-    finally:
-        for c in caches:
-            c.unpersist()
 
-    out = assignment.select("id", F.col("c").alias("community"))
-    return LouvainResult(
-        rebind(out, caller), levels_run, total_rounds, converged, None, history
-    )
+        out = assignment.select("id", F.col("c").alias("community"))
+        return LouvainResult(
+            loop.result(out), levels_run, loop.iteration, converged, None,
+            loop.history,
+        )

@@ -30,20 +30,15 @@ observed metric; AQE and the shuffle width are frozen inside the loop.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 @dataclass
@@ -69,109 +64,69 @@ def label_propagation(
 ) -> LPAResult:
     """Deterministic synchronous LPA over undirected ``(src, dst[, w])``.
 
-    Conf isolation: like :func:`pagerank`, the superstep loop pins AQE off
-    and the shuffle width — on its own ``newSession()`` of the caller's
-    SparkContext, so the caller's conf is never mutated.
+    ``resume=True`` continues from the checkpointer's latest complete
+    superstep. Conf isolation: like :func:`pagerank`, the superstep loop
+    pins AQE off and the shuffle width — on its own ``newSession()`` of the
+    caller's SparkContext, so the caller's conf is never mutated.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    if nodes is not None:
-        nodes = rebind(nodes, spark)
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    # Ids (and therefore labels) keep their native type; the min-label
-    # tie-break uses that type's ordering (numeric for ints, lexicographic
-    # for strings). Long shuffles/joins are several times cheaper at scale.
-    e = symmetrize_edges(
-        edges.select(
-            F.col("src").alias("src"),
-            F.col("dst").alias("dst"),
-            w.alias("w"),
-        ).filter(F.col("src") != F.col("dst"))
-    )
-
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # Resume of a run already marked converged returns BEFORE building (and
-    # fully materializing) the CSR edge cache — the loop below would never
-    # run, so paying a complete pass over the edges on this path is waste.
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        last = checkpointer.latest()
-        if checkpointer.load_metrics(last).get("converged"):
-            labels = checkpointer.load(spark, last)
+    with SuperstepLoop(edges.sparkSession, checkpointer, resume) as loop:
+        if loop.converged:
             return LPAResult(
-                rebind(labels.select("id", "label"), caller), last, True,
-                checkpointer.metrics_log(),
+                loop.result(loop.state.select("id", "label")), loop.iteration,
+                True, loop.history,
             )
+        edges, nodes = loop.bind(edges), loop.bind(nodes)
+        w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+        # Ids (and therefore labels) keep their native type; the min-label
+        # tie-break uses that type's ordering (numeric for ints,
+        # lexicographic for strings).
+        e = loop.edge_cache(
+            symmetrize_edges(
+                edges.select(
+                    F.col("src").alias("src"),
+                    F.col("dst").alias("dst"),
+                    w.alias("w"),
+                ).filter(F.col("src") != F.col("dst"))
+            ),
+            "src",
+            partitions,
+        )
 
-    # One pass over the (possibly expensive) source: cache the symmetrized
-    # raw edges, size the loop partitioning off the cached count, build the
-    # CSR-blocked cache from it, then drop the raw cache.
-    e0 = e.persist()
-
-    if partitions:
-        n_parts = int(partitions)
-    else:
-        n_edges = e0.count()
-        n_parts = loop_partitions(n_edges, conf_parts)
-    e = e0.repartition(n_parts, "src").sortWithinPartitions("src").persist()
-
-    # Vertex set from the CSR cache, NOT from e0: the label-init checkpoint
-    # below runs after e0 is dropped, and a vertices plan rooted on e0
-    # would silently re-execute the full (possibly expensive) upstream edge
-    # expression at that point — measured as an extra complete
-    # co-occurrence join per LPA call on lazy inputs.
-    if nodes is None:
-        # symmetrized + self-loop-free: the src set IS the vertex set
-        vertices = e.select(F.col("src").alias("id")).distinct()
-    else:
-        id_type = dict(edges.dtypes).get("src", "string")
-        first = nodes.columns[0]
-        if dict(nodes.dtypes)[first] == id_type and first == "id":
-            # no-op alias/cast would be optimizer-stripped and strand the
-            # checkpoint-captured partitioning (see pagerank.py)
-            vertices = nodes.select("id").distinct()
+        if loop.state is not None:
+            labels = loop.state
         else:
-            vertices = nodes.select(
-                F.col(first).cast(id_type).alias("id")
-            ).distinct()
+            # Vertex set from the CSR cache, NOT from the raw edges: a
+            # vertices plan rooted on the dropped raw cache would silently
+            # re-execute the full (possibly expensive) upstream edge
+            # expression — measured as an extra complete co-occurrence join
+            # per LPA call on lazy inputs.
+            if nodes is None:
+                # symmetrized + self-loop-free: the src set IS the vertex set
+                vertices = e.select(F.col("src").alias("id")).distinct()
+            else:
+                id_type = dict(edges.dtypes).get("src", "string")
+                first = nodes.columns[0]
+                if dict(nodes.dtypes)[first] == id_type and first == "id":
+                    # no-op alias/cast would be optimizer-stripped and strand
+                    # the checkpoint-captured partitioning (see pagerank.py)
+                    vertices = nodes.select("id").distinct()
+                else:
+                    vertices = nodes.select(
+                        F.col(first).cast(id_type).alias("id")
+                    ).distinct()
+            base = vertices.repartition(loop.n_parts, "id")
+            if checkpointer is not None:
+                labels = loop.start(base.withColumn("label", F.col("id")))
+            else:
+                # Checkpoint the single-column vertex set and add label = id
+                # as a lazy projection ABOVE the scan: checkpointing (id, id
+                # AS label) lets the optimizer express the captured
+                # partitioning through the label alias instead of id, which
+                # strands both superstep joins on an unusable clustering
+                # (measured: +2 exchanges on superstep 1).
+                labels = loop.start(base).withColumn("label", F.col("id"))
 
-    # Materialize the CSR cache under AQE, then freeze the plan BEFORE the
-    # initial labels materialize: a localCheckpoint taken under AQE captures
-    # UnknownPartitioning (see pagerank.py — measured as avoidable state
-    # shuffles on superstep 1). Conf pins land on the loop's own session.
-    e.count()
-    e0.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-
-    start_iter = 0
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        # non-converged resume (the converged case returned above)
-        start_iter = checkpointer.latest()
-        labels = checkpointer.load(spark, start_iter)
-    else:
-        base = vertices.repartition(n_parts, "id")
-        if checkpointer is not None:
-            labels = checkpointer.save(0, base.withColumn("label", F.col("id")))
-        else:
-            # Checkpoint the single-column vertex set and add label = id as
-            # a lazy projection ABOVE the scan: checkpointing (id, id AS
-            # label) lets the optimizer express the captured partitioning
-            # through the label alias instead of id, which strands both
-            # superstep joins on an unusable clustering (measured: +2
-            # exchanges on superstep 1).
-            labels = stats_safe_local_checkpoint(base).withColumn("label", F.col("id"))
-
-    history: list[dict[str, Any]] = []
-    converged = False
-    it = start_iter
-    superstep_plan: str | None = None
-    superstep_exchanges: int | None = None
-    try:
-        while it < max_iter:
-            it += 1
-            t0 = time.time()
+        for _ in loop.supersteps(max_iter):
             scores = (
                 e.join(labels.select(F.col("id").alias("src"), "label"), "src")
                 .groupBy(F.col("dst").alias("id"), "label")
@@ -190,50 +145,20 @@ def label_propagation(
                 F.coalesce("_new", "label").alias("label"),
                 (F.coalesce("_new", "label") != F.col("label")).alias("_changed"),
             )
-            obs = Observation(f"lpa_iter_{it}")
-            new_labels = new_labels.observe(
-                obs,
+            # the change count rides the materialization job
+            loop.step(
+                new_labels,
                 F.sum(F.col("_changed").cast("long")).alias("changes"),
                 F.count(F.lit(1)).alias("rows"),
+                fields=lambda m: {
+                    "changes": int(m["changes"] or 0),
+                    "rows": int(m["rows"]),
+                    "converged": not m["changes"],
+                },
             )
-            if superstep_plan is None:
-                from bluegraph_spark.plans.planinfo import executed_exchange_count
+            labels = loop.state
 
-                superstep_plan = (
-                    new_labels._jdf.queryExecution().executedPlan().toString()
-                )
-                superstep_exchanges = executed_exchange_count(new_labels)
-            if checkpointer is not None:
-                new_labels = checkpointer.save(it, new_labels, {"pending": True})
-            else:
-                new_labels = stats_safe_local_checkpoint(new_labels)
-            m = obs.get
-            changes = int(m["changes"] or 0)
-            rec = {
-                "iteration": it,
-                "superstep_sec": round(time.time() - t0, 3),
-                "changes": changes,
-                "rows": int(m["rows"]),
-                "converged": changes == 0,
-            }
-            history.append(rec)
-            if checkpointer is not None:
-                from bluegraph_spark.operators.pagerank import _update_metrics
-
-                _update_metrics(checkpointer, it, rec)
-            # Successor materialized (obs.get returned): free the
-            # superseded label state's blocks deterministically rather than
-            # waiting for a periodic-GC ContextCleaner pass. The initial
-            # labels (a projection over the vertex checkpoint) no-op.
-            release_local_checkpoint(labels)
-            labels = new_labels
-            if changes == 0:
-                converged = True
-                break
-    finally:
-        e.unpersist()
-
-    return LPAResult(
-        rebind(labels.select("id", "label"), caller), it, converged, history,
-        superstep_plan, superstep_exchanges,
-    )
+        return LPAResult(
+            loop.result(labels.select("id", "label")), loop.iteration,
+            loop.converged, loop.history, loop.plan, loop.exchanges,
+        )

@@ -44,11 +44,7 @@ from typing import Any
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 @dataclass
@@ -70,201 +66,199 @@ def minimum_spanning_forest(
     src < dst form), making the forest unique hence deterministic.
     Parallel edges keep their minimum weight; self-loops are dropped
     (never in an MST).
-    """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    w = F.col(weight_col).cast("double")
-    # canonical undirected form, min weight per parallel pair
-    canon = (
-        edges.select(
-            F.least("src", "dst").alias("u"),
-            F.greatest("src", "dst").alias("v"),
-            w.alias("w"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.min("w").alias("w"))
-    )
-    obs0 = Observation(f"mst_init_{time.time_ns()}")
-    rem = stats_safe_local_checkpoint(
-        canon.select(
-            "u", "v", "w", F.col("u").alias("cu"), F.col("v").alias("cv")
-        ).observe(obs0, F.count(F.lit(1)).alias("n"))
-    )
-    n_edges = int(obs0.get["n"] or 0)
-    # Size the loop's shuffle width to the data (the round tables are the
-    # edge set and the root mapping — at suite scale a 32-wide shuffle of
-    # a 1000-row mapping is ~10 empty tasks per stage, and a Borůvka round
-    # runs ~4 small jobs; the width pin lands on the loop's own session).
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_parts = loop_partitions(n_edges, conf_parts)
-    # Same loop discipline as pagerank/cc/lpa/louvain: the round plans are
-    # fixed-shape over known-size checkpointed state, so AQE's per-stage
-    # driver re-planning only splits each round's one checkpoint job into
-    # several stage-jobs (measured: ~20 jobs/round with AQE on vs ~4
-    # without, identical output) — freeze it on the loop's own session.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
 
-    forest_parts: list[DataFrame] = []
-    history: list[dict[str, Any]] = []
-    converged = False
-    # Deterministic block release: each round's rem/pointer checkpoints are
-    # dead the moment their successor materializes — free them then rather
-    # than waiting for a periodic-GC ContextCleaner pass. The sel
-    # checkpoints are NOT released (the forest output reads them lazily),
-    # and the initial rem checkpoint survives for the empty-forest path.
-    prev_rem: DataFrame | None = None
-    # rem holds ONLY cross-component edges with current labels (invariant:
-    # cu != cv on every row — round 1 starts from singleton components
-    # cu = u, cv = v on the self-loop-free canon table; each relabel job
-    # below filters newly-intra rows out). n_cross therefore needs no
-    # separate counting job: it rides the init/relabel checkpoints.
-    n_cross = n_edges
-    rnd = 0
-    while rnd < max_rounds:
-        rnd += 1
-        t0 = time.time()
-        if n_cross == 0:
-            converged = True
+    No ``checkpointer``/``resume``: a round's state is the cross-edge set
+    plus every earlier round's chosen edges (the forest so far), and a run
+    is at most log2(V) rounds of small jobs, so rerunning costs less than
+    writing both out every round.
+    """
+    with SuperstepLoop(edges.sparkSession) as loop:
+        edges = loop.bind(edges)
+        w = F.col(weight_col).cast("double")
+        # canonical undirected form, min weight per parallel pair
+        canon = (
+            edges.select(
+                F.least("src", "dst").alias("u"),
+                F.greatest("src", "dst").alias("v"),
+                w.alias("w"),
+            )
+            .filter(F.col("u") != F.col("v"))
+            .groupBy("u", "v")
+            .agg(F.min("w").alias("w"))
+        )
+        obs0 = Observation(f"mst_init_{time.time_ns()}")
+        rem = loop.checkpoint(
+            canon.select(
+                "u", "v", "w", F.col("u").alias("cu"), F.col("v").alias("cv")
+            ).observe(obs0, F.count(F.lit(1)).alias("n"))
+        )
+        n_edges = int(obs0.get["n"] or 0)
+        # Size the loop's shuffle width to the data (the round tables are the
+        # edge set and the root mapping — at suite scale a 32-wide shuffle of
+        # a 1000-row mapping is ~10 empty tasks per stage, and a Borůvka round
+        # runs ~4 small jobs; the width pin lands on the loop's own session).
+        # Same loop discipline as pagerank/cc/lpa/louvain: the round plans are
+        # fixed-shape over known-size checkpointed state, so AQE's per-stage
+        # re-planning only splits each round's one checkpoint job into
+        # several stage-jobs (measured: ~20 jobs/round with AQE on vs ~4
+        # without, identical output) — freeze it on the loop's own session.
+        loop.freeze(loop.width(n_edges))
+
+        forest_parts: list[DataFrame] = []
+        history: list[dict[str, Any]] = []
+        converged = False
+        # Deterministic block release: each round's rem/pointer checkpoints are
+        # dead the moment their successor materializes — free them then rather
+        # than waiting for a periodic-GC ContextCleaner pass. The sel
+        # checkpoints the forest output reads survive the loop's exit.
+        # rem holds ONLY cross-component edges with current labels (invariant:
+        # cu != cv on every row — round 1 starts from singleton components
+        # cu = u, cv = v on the self-loop-free canon table; each relabel job
+        # below filters newly-intra rows out). n_cross therefore needs no
+        # separate counting job: it rides the init/relabel checkpoints.
+        n_cross = n_edges
+        rnd = 0
+        while rnd < max_rounds:
+            rnd += 1
+            t0 = time.time()
+            if n_cross == 0:
+                converged = True
+                history.append(
+                    {"round": rnd, "superstep_sec": round(time.time() - t0, 3),
+                     "cross_edges": 0, "offering_components": 0}
+                )
+                break
+            # every component's minimum incident edge under (w, u, v); struct
+            # min gives the total-order tie-break in one partial aggregation.
+            # Explode both endpoints in one pass (a union would re-execute the
+            # rem scan twice — see pgframe.symmetrize_edges).
+            edge_struct = F.struct(
+                F.col("w"), F.col("u"), F.col("v"), F.col("cu"), F.col("cv")
+            )
+            offers = rem.select(
+                F.explode(F.array(F.col("cu"), F.col("cv"))).alias("c"),
+                edge_struct.alias("e"),
+            )
+            obs_sel = Observation(f"mst_sel_{rnd}_{time.time_ns()}")
+            sel = loop.checkpoint(
+                offers.groupBy("c")
+                .agg(F.min("e").alias("e"))
+                .observe(obs_sel, F.count(F.lit(1)).alias("n"))
+            )
+            n_offering = int(obs_sel.get["n"] or 0)
+            # lazy over the sel checkpoint; deduped when the forest is assembled
+            forest_parts.append(sel.select("e.u", "e.v", "e.w").distinct())
+            # Contract via pointer jumping on the min-edge functional graph:
+            # each active component points at the component across its chosen
+            # edge. Under a total edge order this pointer graph has exactly one
+            # 2-cycle per merged cluster (the cluster's globally minimal edge
+            # is chosen by BOTH endpoints; any longer cycle would need every
+            # edge to be lighter than the next around it) and no other cycles,
+            # so rooting the 2-cycle at its smaller id and squaring the pointer
+            # table O(log depth) times canonicalizes every cluster — a few
+            # joins over the (tiny, ≤ #components) mapping table per round,
+            # instead of a full connected-components invocation (which cost
+            # more than the rest of the round put together at suite scale).
+            ptr = sel.select(
+                "c",
+                F.when(F.col("e.cu") == F.col("c"), F.col("e.cv"))
+                .otherwise(F.col("e.cu"))
+                .alias("t"),
+            )
+            two = ptr.select(F.col("c").alias("t"), F.col("t").alias("tt"))
+            parent = ptr.join(two, "t", "left").select(
+                "c",
+                F.when(
+                    (F.col("tt") == F.col("c")) & (F.col("c") < F.col("t")),
+                    F.col("c"),
+                )
+                .otherwise(F.col("t"))
+                .alias("p"),
+            )
+
+            def _square(rel: DataFrame) -> DataFrame:
+                gp = rel.select(F.col("c").alias("p"), F.col("p").alias("gp"))
+                return rel.join(gp, "p", "left").select(
+                    "c", F.coalesce("gp", "p").alias("p")
+                )
+
+            # Three squarings per materialized job (the pointer table is tiny —
+            # bounded by the live component count — so at suite scale the
+            # per-job floor dominates, and piling joins inside one job to cut
+            # the job count is a straight win; the extra joins read the
+            # round's sel checkpoint, nothing upstream re-executes). One job
+            # therefore covers pointer-chain depth 8, which roots nearly every
+            # real round in a single jump job (two squarings left typical
+            # rounds needing a second confirmation job). The first job also
+            # folds the 2-cycle rooting join in. Exit when the LAST squaring
+            # changed nothing: g == its predecessor means the mapping is
+            # idempotent under jumping, i.e. fully rooted — and g is what we
+            # keep.
+            parent_cp: DataFrame | None = None
+            for _ in range(22):  # ≥ log8 of any cluster chain; loop exits early
+                g1 = _square(_square(parent))
+                g1b = g1.select(F.col("c").alias("p"), F.col("p").alias("gp"))
+                g2 = g1.join(g1b, "p", "left").select(
+                    "c",
+                    F.coalesce("gp", "p").alias("p"),
+                    (F.coalesce("gp", "p") != F.col("p")).alias("_ch"),
+                )
+                obs = Observation(f"mst_jump_{rnd}_{time.time_ns()}")
+                g2 = g2.observe(obs, F.sum(F.col("_ch").cast("long")).alias("ch"))
+                g2 = loop.checkpoint(g2)
+                changed = int(obs.get["ch"] or 0)
+                loop.release(parent_cp)
+                parent_cp = g2
+                parent = g2.select("c", "p")
+                if changed == 0:
+                    break
+            # Relabel the surviving edges through the round's root mapping and
+            # drop the rows the contraction made intra-component, in ONE
+            # checkpointed job (the mapping is bounded by the offering
+            # component count; every offering label has a mapping row, and
+            # labels of non-offering components are unmapped — the left join +
+            # coalesce keeps them, exactly the old comp-table semantics). The
+            # next round's n_cross rides this job's observation.
+            obs_rel = Observation(f"mst_relabel_{rnd}_{time.time_ns()}")
+            new_rem = loop.checkpoint(
+                rem.join(
+                    parent.select(F.col("c").alias("cu"), F.col("p").alias("_pu")),
+                    "cu",
+                    "left",
+                )
+                .join(
+                    parent.select(F.col("c").alias("cv"), F.col("p").alias("_pv")),
+                    "cv",
+                    "left",
+                )
+                .select(
+                    "u",
+                    "v",
+                    "w",
+                    F.coalesce("_pu", "cu").alias("cu"),
+                    F.coalesce("_pv", "cv").alias("cv"),
+                )
+                .filter(F.col("cu") != F.col("cv"))
+                .observe(obs_rel, F.count(F.lit(1)).alias("n"))
+            )
+            this_cross = n_cross
+            n_cross = int(obs_rel.get["n"] or 0)
+            loop.release(parent_cp)
+            loop.release(rem)
+            rem = new_rem
             history.append(
                 {"round": rnd, "superstep_sec": round(time.time() - t0, 3),
-                 "cross_edges": 0, "offering_components": 0}
-            )
-            break
-        # every component's minimum incident edge under (w, u, v); struct
-        # min gives the total-order tie-break in one partial aggregation.
-        # Explode both endpoints in one pass (a union would re-execute the
-        # rem scan twice — see pgframe.symmetrize_edges).
-        edge_struct = F.struct(
-            F.col("w"), F.col("u"), F.col("v"), F.col("cu"), F.col("cv")
-        )
-        offers = rem.select(
-            F.explode(F.array(F.col("cu"), F.col("cv"))).alias("c"),
-            edge_struct.alias("e"),
-        )
-        obs_sel = Observation(f"mst_sel_{rnd}_{time.time_ns()}")
-        sel = stats_safe_local_checkpoint(
-            offers.groupBy("c")
-            .agg(F.min("e").alias("e"))
-            .observe(obs_sel, F.count(F.lit(1)).alias("n"))
-        )
-        n_offering = int(obs_sel.get["n"] or 0)
-        # lazy over the sel checkpoint; deduped when the forest is assembled
-        forest_parts.append(sel.select("e.u", "e.v", "e.w").distinct())
-        # Contract via pointer jumping on the min-edge functional graph:
-        # each active component points at the component across its chosen
-        # edge. Under a total edge order this pointer graph has exactly one
-        # 2-cycle per merged cluster (the cluster's globally minimal edge
-        # is chosen by BOTH endpoints; any longer cycle would need every
-        # edge to be lighter than the next around it) and no other cycles,
-        # so rooting the 2-cycle at its smaller id and squaring the pointer
-        # table O(log depth) times canonicalizes every cluster — a few
-        # joins over the (tiny, ≤ #components) mapping table per round,
-        # instead of a full connected-components invocation (which cost
-        # more than the rest of the round put together at suite scale).
-        ptr = sel.select(
-            "c",
-            F.when(F.col("e.cu") == F.col("c"), F.col("e.cv"))
-            .otherwise(F.col("e.cu"))
-            .alias("t"),
-        )
-        two = ptr.select(F.col("c").alias("t"), F.col("t").alias("tt"))
-        parent = ptr.join(two, "t", "left").select(
-            "c",
-            F.when(
-                (F.col("tt") == F.col("c")) & (F.col("c") < F.col("t")),
-                F.col("c"),
-            )
-            .otherwise(F.col("t"))
-            .alias("p"),
-        )
-
-        def _square(rel: DataFrame) -> DataFrame:
-            gp = rel.select(F.col("c").alias("p"), F.col("p").alias("gp"))
-            return rel.join(gp, "p", "left").select(
-                "c", F.coalesce("gp", "p").alias("p")
+                 "cross_edges": this_cross, "offering_components": n_offering}
             )
 
-        # Three squarings per materialized job (the pointer table is tiny —
-        # bounded by the live component count — so at suite scale the
-        # per-job floor dominates, and piling joins inside one job to cut
-        # the job count is a straight win; the extra joins read the
-        # round's sel checkpoint, nothing upstream re-executes). One job
-        # therefore covers pointer-chain depth 8, which roots nearly every
-        # real round in a single jump job (two squarings left typical
-        # rounds needing a second confirmation job). The first job also
-        # folds the 2-cycle rooting join in. Exit when the LAST squaring
-        # changed nothing: g == its predecessor means the mapping is
-        # idempotent under jumping, i.e. fully rooted — and g is what we
-        # keep.
-        parent_cp: DataFrame | None = None
-        for _ in range(22):  # ≥ log8 of any cluster chain; loop exits early
-            g1 = _square(_square(parent))
-            g1b = g1.select(F.col("c").alias("p"), F.col("p").alias("gp"))
-            g2 = g1.join(g1b, "p", "left").select(
-                "c",
-                F.coalesce("gp", "p").alias("p"),
-                (F.coalesce("gp", "p") != F.col("p")).alias("_ch"),
-            )
-            obs = Observation(f"mst_jump_{rnd}_{time.time_ns()}")
-            g2 = g2.observe(obs, F.sum(F.col("_ch").cast("long")).alias("ch"))
-            g2 = stats_safe_local_checkpoint(g2)
-            changed = int(obs.get["ch"] or 0)
-            release_local_checkpoint(parent_cp)
-            parent_cp = g2
-            parent = g2.select("c", "p")
-            if changed == 0:
-                break
-        # Relabel the surviving edges through the round's root mapping and
-        # drop the rows the contraction made intra-component, in ONE
-        # checkpointed job (the mapping is bounded by the offering
-        # component count; every offering label has a mapping row, and
-        # labels of non-offering components are unmapped — the left join +
-        # coalesce keeps them, exactly the old comp-table semantics). The
-        # next round's n_cross rides this job's observation.
-        obs_rel = Observation(f"mst_relabel_{rnd}_{time.time_ns()}")
-        new_rem = stats_safe_local_checkpoint(
-            rem.join(
-                parent.select(F.col("c").alias("cu"), F.col("p").alias("_pu")),
-                "cu",
-                "left",
-            )
-            .join(
-                parent.select(F.col("c").alias("cv"), F.col("p").alias("_pv")),
-                "cv",
-                "left",
-            )
-            .select(
-                "u",
-                "v",
-                "w",
-                F.coalesce("_pu", "cu").alias("cu"),
-                F.coalesce("_pv", "cv").alias("cv"),
-            )
-            .filter(F.col("cu") != F.col("cv"))
-            .observe(obs_rel, F.count(F.lit(1)).alias("n"))
+        if forest_parts:
+            out = forest_parts[0]
+            for p in forest_parts[1:]:
+                out = out.unionByName(p)
+            out = out.distinct()
+        else:
+            out = rem.limit(0)
+        out = out.select(
+            F.col("u").alias("src"), F.col("v").alias("dst"), F.col("w").alias("weight")
         )
-        this_cross = n_cross
-        n_cross = int(obs_rel.get["n"] or 0)
-        release_local_checkpoint(parent_cp)
-        release_local_checkpoint(prev_rem)
-        prev_rem = new_rem
-        rem = new_rem
-        history.append(
-            {"round": rnd, "superstep_sec": round(time.time() - t0, 3),
-             "cross_edges": this_cross, "offering_components": n_offering}
-        )
-
-    if forest_parts:
-        out = forest_parts[0]
-        for p in forest_parts[1:]:
-            out = out.unionByName(p)
-        out = out.distinct()
-    else:
-        out = rem.limit(0)
-    out = out.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), F.col("w").alias("weight")
-    )
-    return MSTResult(rebind(out, caller), rnd, converged, history)
+        return MSTResult(loop.result(out), rnd, converged, history)

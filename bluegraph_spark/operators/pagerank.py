@@ -29,20 +29,15 @@ Scale design:
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 @dataclass
@@ -58,6 +53,10 @@ class PageRankResult:
     # property of the design)
     superstep_plan: str | None = None
     superstep_exchanges: int | None = None
+
+
+def _dangling_mass():
+    return F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))
 
 
 def pagerank(
@@ -78,7 +77,8 @@ def pagerank(
     to the endpoint set. ``tol=0`` runs exactly ``max_iter`` supersteps
     (fixed-iteration mode, used by the DuckDB differential oracle).
     ``resume=True`` continues from the checkpointer's latest complete
-    superstep.
+    superstep; the saved state ``(id, dangling, rank, delta)`` is all the
+    next superstep needs (its dangling sum is re-derived from it).
 
     Conf isolation: the superstep loop pins plan-time session conf (AQE off,
     ``spark.sql.shuffle.partitions=n_parts`` — the exchange-free superstep
@@ -88,179 +88,143 @@ def pagerank(
     concurrently on it from other driver threads see their own settings
     throughout.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    if nodes is not None:
-        nodes = rebind(nodes, spark)
-    src, dst = "src", "dst"
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    # Ids keep their native type: joins/sorts on longs are several times
-    # cheaper than on strings at 10^9-vertex scale; callers with string ids
-    # (e.g. co-occurrence graphs) pass string columns through unchanged.
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w"))
-    if not directed:
-        e = symmetrize_edges(e)
-
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-
-    # The raw edge expression may itself be expensive (e.g. a co-occurrence
-    # self-join); cache it so sizing, out-weights, and the normalized table
-    # cost exactly ONE pass over the source, then drop it once the derived
-    # caches are materialized.
-    e = e.persist()
-
-    # Out-weight normalization (NetworkX stochastic_graph): w_uv / Σ_v w_uv.
-    # ``out`` is persisted because three consumers read it (norm, the
-    # dangling flags, and — on superstep 1 — the state recompute).
-    out = e.groupBy("src").agg(
-        F.sum("w").alias("out_w"), F.count("*").alias("_deg")
-    ).persist()
-
-    if nodes is not None:
-        # No same-name self-alias: the optimizer strips Alias(id AS id) and
-        # rewrites references to the child attribute, which strands the
-        # partitioning a later localCheckpoint captures on an attribute id
-        # absent from the logical output — measured as two avoidable O(V)
-        # state shuffles per superstep.
-        first = nodes.columns[0]
-        vertices = (
-            nodes.select("id") if first == "id"
-            else nodes.select(F.col(first).alias("id"))
-        ).distinct()
-    elif not directed:
-        # Symmetrized graph: every vertex appears as a src, so the (cached,
-        # already-distinct) out-weight table IS the vertex set — no separate
-        # union+distinct pass over the edges.
-        vertices = out.select(F.col("src").alias("id"))
-    else:
-        vertices = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-        )
-    # Size the superstep partitioning from the measured edge count: 32 task
-    # waves over a 2k-vertex graph cost more in scheduling than the work
-    # itself, while a 30M-edge graph needs every core. On the common
-    # undirected default path the vertex set IS the out-weight table, so
-    # one aggregation job yields both the edge count and N (saving the
-    # separate vertices.count() job below).
-    N = None
-    if partitions:
-        n_parts = int(partitions)
-        if nodes is None and not directed:
-            N = out.count()
-    elif nodes is None and not directed:
-        row = out.agg(
-            F.count(F.lit(1)).alias("_n"), F.sum("_deg").alias("_m")
-        ).collect()[0]
-        N = int(row["_n"] or 0)
-        n_parts = loop_partitions(int(row["_m"] or 0), conf_parts)
-    else:
-        n_edges_directed = out.agg(F.sum("_deg")).collect()[0][0] or 0
-        n_parts = loop_partitions(int(n_edges_directed), conf_parts)
-    # CSR-blocked layout (north rule): hash-partitioned by src AND sorted
-    # within partitions. InMemoryTableScan reports the cached plan's
-    # partitioning + ordering, so every superstep's sort-merge join with the
-    # rank state reuses both — no exchange and no re-sort of the big side.
-    norm = (
-        e.join(out.filter(F.col("out_w") > 0), "src")
-        .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-        .repartition(n_parts, "src")
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    # Dangling = no out-edges or zero out-weight sum.
-    has_out = out.filter(F.col("out_w") > 0).select(F.col("src").alias("id"),
-                                                    F.lit(False).alias("dangling"))
-    vstate0 = vertices.join(has_out, "id", "left").select(
-        "id", F.coalesce("dangling", F.lit(True)).alias("dangling")
-    )
-
-    if N is None:
-        N = vertices.count()
-    if N == 0:
-        e.unpersist()
-        out.unpersist()
-        norm.unpersist()
-        # empty result keeps the caller's id type (vertices schema), not a
-        # hardcoded string — unioning/joining against pagerank output must
-        # see one consistent type contract whether or not the graph is empty
-        empty = vertices.withColumn("rank", F.lit(0.0)).select("id", "rank")
-        return PageRankResult(rebind(empty, caller), 0, True, 0.0)
-
-    # Materialize the edge cache under AQE, then freeze the plan BEFORE the
-    # initial state materializes: a localCheckpoint taken while AQE is on
-    # captures UnknownPartitioning (the adaptive plan only knows its final
-    # layout after execution), which silently costs two extra O(V) state
-    # shuffles on the first superstep (measured: 3 exchanges instead of 1).
-    # Inside the loop every superstep re-runs the same fixed-shape plan over
-    # explicitly partitioned inputs, and AQE's per-stage driver re-planning
-    # is pure serial overhead there (measured at seconds per superstep). The
-    # conf pins land on the loop's own session only (see ``loop_session``).
-    norm.count()
-    e.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    # Align every loop exchange (the message groupBy) with the norm
-    # partitioning so the superstep joins stay exchange-free at the chosen
-    # width.
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-
-    history: list[dict[str, Any]] = []
-    start_iter = 0
-    state = None
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        start_iter = checkpointer.latest()
-        state = checkpointer.load(spark, start_iter)
-        last = checkpointer.load_metrics(start_iter)
-        danglesum = last["danglesum"]
-        err = last.get("err", float("inf"))
-        if last.get("converged"):
-            e.unpersist()
-            out.unpersist()
-            norm.unpersist()
+    with SuperstepLoop(edges.sparkSession, checkpointer, resume) as loop:
+        if loop.converged:
             return PageRankResult(
-                rebind(state.select("id", "rank"), caller),
-                start_iter, True, err, checkpointer.metrics_log(),
+                loop.result(loop.state.select("id", "rank")), loop.iteration,
+                True, loop.record["err"], loop.history,
             )
-    else:
-        # Pin the initial state's layout to (id-hash, n_parts) so superstep
-        # 1's joins are already exchange-free (AQE may otherwise coalesce
-        # vstate0 to a different partition count).
-        state = (
-            vstate0.withColumn("rank", F.lit(1.0 / N))
-            .withColumn("delta", F.lit(0.0))
-            .repartition(n_parts, "id")
+        edges, nodes = loop.bind(edges), loop.bind(nodes)
+        src, dst = "src", "dst"
+        w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+        # Ids keep their native type: joins/sorts on longs are several times
+        # cheaper than on strings at 10^9-vertex scale; callers with string
+        # ids (e.g. co-occurrence graphs) pass string columns through.
+        e = edges.select(
+            F.col(src).alias("src"), F.col(dst).alias("dst"), w.alias("w")
         )
-        # The uniform start's dangling sum rides the state materialization
-        # job as an observed metric — no separate aggregation pass.
-        obs0 = Observation(f"pagerank_init_{time.time_ns()}")
-        state = state.observe(
-            obs0,
-            F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias(
-                "dsum"
-            ),
-        )
-        if checkpointer is not None:
-            state = checkpointer.save(0, state, {"danglesum": None, "err": None})
-        else:
-            state = stats_safe_local_checkpoint(state)
-        danglesum = float(obs0.get["dsum"] or 0.0)
+        if not directed:
+            e = symmetrize_edges(e)
 
-    converged = False
-    err = float("inf")
-    it = start_iter
-    superstep_plan: str | None = None
-    superstep_exchanges: int | None = None
-    try:
-        while it < max_iter:
-            it += 1
-            _t0 = time.time()
+        # The raw edge expression may itself be expensive (e.g. a
+        # co-occurrence self-join); cache it so sizing, out-weights, and the
+        # normalized table cost exactly ONE pass over the source, then drop
+        # it once the derived caches are materialized.
+        e = loop.persist(e)
+
+        # Out-weight normalization (NetworkX stochastic_graph): w_uv / Σ_v
+        # w_uv. ``out`` is persisted because three consumers read it (norm,
+        # the dangling flags, and — on superstep 1 — the state recompute).
+        out = loop.persist(
+            e.groupBy("src").agg(F.sum("w").alias("out_w"), F.count("*").alias("_deg"))
+        )
+
+        if nodes is not None:
+            # No same-name self-alias: the optimizer strips Alias(id AS id)
+            # and rewrites references to the child attribute, which strands
+            # the partitioning a later localCheckpoint captures on an
+            # attribute id absent from the logical output — measured as two
+            # avoidable O(V) state shuffles per superstep.
+            first = nodes.columns[0]
+            vertices = (
+                nodes.select("id") if first == "id"
+                else nodes.select(F.col(first).alias("id"))
+            ).distinct()
+        elif not directed:
+            # Symmetrized graph: every vertex appears as a src, so the
+            # (cached, already-distinct) out-weight table IS the vertex set.
+            vertices = out.select(F.col("src").alias("id"))
+        else:
+            vertices = (
+                e.select(F.col("src").alias("id"))
+                .unionByName(e.select(F.col("dst").alias("id")))
+                .distinct()
+            )
+        # Size the superstep partitioning from the measured edge count. On
+        # the common undirected default path the vertex set IS the
+        # out-weight table, so one aggregation job yields both the edge
+        # count and N (saving a separate vertices.count() job).
+        N = None
+        if partitions:
+            n_parts = int(partitions)
+            if nodes is None and not directed:
+                N = out.count()
+        elif nodes is None and not directed:
+            row = out.agg(
+                F.count(F.lit(1)).alias("_n"), F.sum("_deg").alias("_m")
+            ).collect()[0]
+            N = int(row["_n"] or 0)
+            n_parts = loop.width(int(row["_m"] or 0))
+        else:
+            n_edges_directed = out.agg(F.sum("_deg")).collect()[0][0] or 0
+            n_parts = loop.width(int(n_edges_directed))
+        # CSR-blocked layout (north rule), derived from the raw cache: the
+        # normalized transition rows, hash-partitioned by src and sorted.
+        norm = loop.persist(
+            e.join(out.filter(F.col("out_w") > 0), "src")
+            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
+            .repartition(n_parts, "src")
+            .sortWithinPartitions("src")
+        )
+        # Dangling = no out-edges or zero out-weight sum.
+        has_out = out.filter(F.col("out_w") > 0).select(
+            F.col("src").alias("id"), F.lit(False).alias("dangling")
+        )
+        vstate0 = vertices.join(has_out, "id", "left").select(
+            "id", F.coalesce("dangling", F.lit(True)).alias("dangling")
+        )
+
+        if N is None:
+            N = vertices.count()
+        if N == 0:
+            # empty result keeps the caller's id type (vertices schema), not
+            # a hardcoded string — unioning/joining against pagerank output
+            # must see one type contract whether or not the graph is empty
+            empty = vertices.withColumn("rank", F.lit(0.0)).select("id", "rank")
+            return PageRankResult(loop.result(empty), 0, True, 0.0)
+
+        # Materialize the edge cache under AQE, then freeze the plan before
+        # the initial state materializes (see ``SuperstepLoop.freeze``).
+        # Aligning the loop width with the norm partitioning keeps the
+        # superstep joins exchange-free.
+        norm.count()
+        loop.release(e)
+        loop.freeze(n_parts)
+
+        if loop.state is None:
+            # Pin the initial state's layout to (id-hash, n_parts) so
+            # superstep 1's joins are already exchange-free. The uniform
+            # start's dangling sum rides its materialization job.
+            loop.start(
+                vstate0.withColumn("rank", F.lit(1.0 / N))
+                .withColumn("delta", F.lit(0.0))
+                .repartition(n_parts, "id"),
+                _dangling_mass().alias("dsum"),
+                fields=lambda m: {
+                    "danglesum": float(m["dsum"] or 0.0), "converged": False
+                },
+            )
+            danglesum = loop.record["danglesum"]
+        else:
+            danglesum = float(loop.state.agg(_dangling_mass()).first()[0] or 0.0)
+
+        def record(m) -> dict[str, Any]:
+            err = float(m["err"] or 0.0)
+            return {
+                "err": err,
+                "danglesum": float(m["dsum"] or 0.0),
+                "rows": int(m["rows"]),
+                "converged": err < N * tol,
+            }
+
+        err = float("inf")
+        for _ in loop.supersteps(max_iter):
+            state = loop.state
             base = (1.0 - alpha) / N + alpha * danglesum / N
             # One exchange per superstep: the message shuffle inside the
             # groupBy. Both the norm join (cached side pre-partitioned and
-            # pre-sorted on src) and the rank-update left join (contribs and
-            # state both hash-partitioned on id with the same partition
+            # pre-sorted on src) and the rank-update left join (contribs
+            # and state both hash-partitioned on id with the same partition
             # count — localCheckpoint preserves output partitioning) run
             # without re-shuffling. Keeping the shuffled message rows to
             # (dst, p*rank) measures ~10% faster end-to-end than folding the
@@ -281,73 +245,18 @@ def pagerank(
                     F.abs(new_rank - F.col("prev")).alias("delta"),
                 )
             )
-
             # L1 error + next dangling sum ride the materialization job as
             # observed metrics — no second pass over the state.
-            obs = Observation(f"pagerank_iter_{it}")
-            new_state = new_state.observe(
-                obs,
+            rec = loop.step(
+                new_state,
                 F.sum("delta").alias("err"),
-                F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0)).alias(
-                    "dsum"
-                ),
+                _dangling_mass().alias("dsum"),
                 F.count(F.lit(1)).alias("rows"),
+                fields=record,
             )
-            if superstep_plan is None:
-                # snapshot the static physical plan (AQE is off in-loop, so
-                # this is exactly what executes) for the plan-guard test
-                from bluegraph_spark.plans.planinfo import executed_exchange_count
+            err, danglesum = rec["err"], rec["danglesum"]
 
-                superstep_plan = (
-                    new_state._jdf.queryExecution().executedPlan().toString()
-                )
-                superstep_exchanges = executed_exchange_count(new_state)
-            if checkpointer is not None:
-                new_state = checkpointer.save(it, new_state, {"pending": True})
-            else:
-                new_state = stats_safe_local_checkpoint(new_state)
-
-            m = obs.get
-            err = float(m["err"] or 0.0)
-            danglesum = float(m["dsum"] or 0.0)
-            converged = err < N * tol
-            rec = {
-                "iteration": it,
-                "superstep_sec": round(time.time() - _t0, 3),
-                "err": err,
-                "danglesum": danglesum,
-                "rows": int(m["rows"]),
-                "converged": converged,
-            }
-            history.append(rec)
-            if checkpointer is not None:
-                # overwrite the pending metrics with the full record
-                _update_metrics(checkpointer, it, rec)
-            # The successor is materialized (obs.get returned ⇒ the
-            # checkpoint job finished): free the superseded state's blocks
-            # now instead of waiting for a periodic full GC to reclaim them.
-            release_local_checkpoint(state)
-            state = new_state
-            if converged:
-                break
-    finally:
-        norm.unpersist()
-        out.unpersist()
-
-    return PageRankResult(
-        rebind(state.select("id", "rank"), caller), it, converged, err, history,
-        superstep_plan, superstep_exchanges,
-    )
-
-
-def _update_metrics(cp: SuperstepCheckpointer, iteration: int, extra: dict) -> None:
-    import json
-    import os
-
-    rec = cp.load_metrics(iteration)
-    rec.pop("pending", None)
-    rec.update(extra)
-    tmp = cp.metrics_path(iteration) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(rec, f)
-    os.replace(tmp, cp.metrics_path(iteration))
+        return PageRankResult(
+            loop.result(loop.state.select("id", "rank")), loop.iteration,
+            loop.converged, err, loop.history, loop.plan, loop.exchanges,
+        )

@@ -22,20 +22,15 @@ DuckDB differential oracle unrolls.
 
 from __future__ import annotations
 
-import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.isolation import loop_partitions, loop_session, rebind
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.loop import SuperstepLoop
 
 
 def top_neighbors(
@@ -100,75 +95,42 @@ def shortest_paths(
     frozen on the loop's own session. The state holds REACHED vertices
     only, so early rounds shuffle a frontier, not the vertex set.
     """
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e = edges.select(F.col("src"), F.col("dst"), w.alias("w")).filter(
-        F.col("src") != F.col("dst")
-    )
-    if not directed:
-        e = symmetrize_edges(e)
-    e = e.persist()
-    n_edges = e.count()
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Width budget 250k rows/partition, NOT the 32k superstep default: the
-    # per-round shuffled state here is the frontier/distance field — a few
-    # thousand rows on typical inputs, two orders below the edge table the
-    # budget divides — so an edge-sized fan-out buys no parallelism for
-    # the state exchanges and pays per-stage scheduling + straggler cost
-    # every round (isolated interleaved A/B at sf0.1, 6 reps: sssp median
-    # 6.8s at 32k vs 6.3s at 250k, k-shortest 15.1s vs 12.1s). Loops whose
-    # round state IS the edge set (CC) keep the 32k budget — same A/B:
-    # cc_orders 10.2s at 32k vs 14.9s at 250k.
-    n_parts = (
-        int(partitions)
-        if partitions
-        else loop_partitions(n_edges, conf_parts, rows_per_partition=250_000)
-    )
-    csr = e.repartition(n_parts, "src").sortWithinPartitions("src").persist()
-    csr.count()
-    e.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-
-    id_type = dict(csr.dtypes)["src"]
-    history: list[dict[str, Any]] = []
-    converged = False
-    it = 0
-    prev_cp = None
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        # checkpoints store (id, dist, _improved): the distance field and
-        # the frontier are both projections of the saved frame
-        it = checkpointer.latest()
-        relaxed0 = checkpointer.load(spark, it)
-        last = checkpointer.load_metrics(it)
-        dist = relaxed0.select("id", "dist")
-        frontier = relaxed0.filter(F.col("_improved")).select("id", "dist")
-        if last.get("converged"):
-            csr.unpersist()
+    with SuperstepLoop(edges.sparkSession, checkpointer, resume) as loop:
+        # the state (id, dist, _improved) holds the distance field and the
+        # frontier: both are projections of it, on resume too
+        if loop.converged:
             return SSSPResult(
-                rebind(dist, caller), it, True, checkpointer.metrics_log()
+                loop.result(loop.state.select("id", "dist")), loop.iteration,
+                True, loop.history,
             )
-    else:
-        dist = spark.createDataFrame([(source,)], f"id {id_type}").select(
-            "id", F.lit(0.0).alias("dist")
+        edges = loop.bind(edges)
+        w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+        e = edges.select(F.col("src"), F.col("dst"), w.alias("w")).filter(
+            F.col("src") != F.col("dst")
         )
-        if checkpointer is not None:
-            d0 = dist.withColumn("_improved", F.lit(True))
-            d0 = checkpointer.save(
-                0, d0, {"improved": 1, "reached": 1, "converged": False}
+        if not directed:
+            e = symmetrize_edges(e)
+        # Width budget 250k rows/partition, NOT the 32k superstep default:
+        # the per-round shuffled state here is the frontier/distance field —
+        # a few thousand rows on typical inputs, two orders below the edge
+        # table the budget divides — so an edge-sized fan-out buys no
+        # parallelism for the state exchanges and pays per-stage scheduling
+        # + straggler cost every round (isolated interleaved A/B at sf0.1, 6
+        # reps: sssp median 6.8s at 32k vs 6.3s at 250k, k-shortest 15.1s vs
+        # 12.1s). Loops whose round state IS the edge set (CC) keep the 32k
+        # budget — same A/B: cc_orders 10.2s at 32k vs 14.9s at 250k.
+        csr = loop.edge_cache(e, "src", partitions, rows_per_partition=250_000)
+        if loop.state is None:
+            id_type = dict(csr.dtypes)["src"]
+            loop.start(
+                loop.spark.createDataFrame([(source,)], f"id {id_type}")
+                .select("id", F.lit(0.0).alias("dist"), F.lit(True).alias("_improved"))
+                .repartition(loop.n_parts, "id"),
+                fields=lambda m: {"improved": 1, "reached": 1, "converged": False},
             )
-            dist = d0.select("id", "dist")
-            frontier = dist
-        else:
-            dist = dist.repartition(n_parts, "id").localCheckpoint()
-            frontier = dist
-            prev_cp = dist
-    try:
-        while it < max_iter:
-            it += 1
-            t0 = time.time()
+        for _ in loop.supersteps(max_iter):
+            dist = loop.state.select("id", "dist")
+            frontier = loop.state.filter(F.col("_improved")).select("id", "dist")
             cand = (
                 csr.join(frontier.select(F.col("id").alias("src"), "dist"), "src")
                 .groupBy(F.col("dst").alias("id"))
@@ -188,44 +150,21 @@ def shortest_paths(
                     ).alias("_improved"),
                 )
             )
-            obs = Observation(f"sssp_iter_{it}_{time.time_ns()}")
-            relaxed = relaxed.observe(
-                obs,
+            loop.step(
+                relaxed,
                 F.sum(F.col("_improved").cast("long")).alias("improved"),
                 F.count(F.lit(1)).alias("rows"),
+                fields=lambda m: {
+                    "improved": int(m["improved"] or 0),
+                    "reached": int(m["rows"]),
+                    "converged": not m["improved"],
+                },
             )
-            if checkpointer is not None:
-                relaxed = checkpointer.save(it, relaxed, {"pending": True})
-            else:
-                relaxed = stats_safe_local_checkpoint(relaxed)
-            m = obs.get
-            # relaxed is materialized; the previous distance checkpoint
-            # (dist and frontier are projections over it) is dead — free its
-            # blocks now instead of waiting for a periodic-GC cleaner pass.
-            release_local_checkpoint(prev_cp)
-            prev_cp = relaxed
-            improved = int(m["improved"] or 0)
-            rec = {
-                "iteration": it,
-                "superstep_sec": round(time.time() - t0, 3),
-                "improved": improved,
-                "reached": int(m["rows"]),
-                "converged": improved == 0,
-            }
-            history.append(rec)
-            if checkpointer is not None:
-                from bluegraph_spark.operators.pagerank import _update_metrics
 
-                _update_metrics(checkpointer, it, rec)
-            frontier = relaxed.filter(F.col("_improved")).select("id", "dist")
-            dist = relaxed.select("id", "dist")
-            if improved == 0:
-                converged = True
-                break
-    finally:
-        csr.unpersist()
-
-    return SSSPResult(rebind(dist, caller), it, converged, history)
+        return SSSPResult(
+            loop.result(loop.state.select("id", "dist")), loop.iteration,
+            loop.converged, loop.history,
+        )
 
 
 @dataclass
@@ -286,72 +225,36 @@ def k_shortest_distances(
     """
     if k < 1:
         raise ValueError("k must be >= 1")
-    caller = edges.sparkSession
-    spark = loop_session(caller)
-    edges = rebind(edges, spark)
-    w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-    e = edges.select(F.col("src"), F.col("dst"), w.alias("w"))
-    if not directed:
-        e = symmetrize_edges(e)
-    e = e.filter(F.col("src") != F.col("dst")).persist()
-    n_edges = e.count()
-    conf_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # 250k rows/partition like shortest_paths (see the comment there): the
-    # per-round label state is ≤ k·V rows, far below the edge table.
-    n_parts = (
-        int(partitions)
-        if partitions
-        else loop_partitions(n_edges, conf_parts, rows_per_partition=250_000)
-    )
-    csr = e.repartition(n_parts, "src").sortWithinPartitions("src").persist()
-    csr.count()
-    e.unpersist()
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
-
-    id_type = dict(csr.dtypes)["src"]
     rk = F.row_number().over(Window.partitionBy("id").orderBy("dist"))
-
-    history: list[dict[str, Any]] = []
-    converged = False
-    it = 0
-    prev_cp = None
-    if resume and checkpointer is not None and checkpointer.latest() is not None:
-        # checkpoints store the merged label table (id, dist, _old):
-        # state and frontier are both projections of it, so one saved
-        # frame resumes the whole loop (same contract as SSSP/pagerank)
-        it = checkpointer.latest()
-        merged = checkpointer.load(spark, it)
-        last = checkpointer.load_metrics(it)
-        state = merged.select("id", "dist")
-        frontier = merged.filter(~F.col("_old")).select("id", "dist")
-        if last.get("converged"):
-            csr.unpersist()
-            out = state.withColumn("rank", rk.cast("int")).select(
-                "id", "rank", "dist"
-            )
+    with SuperstepLoop(edges.sparkSession, checkpointer, resume) as loop:
+        # the state is the merged label table (id, dist, _old): the labels
+        # and the frontier are both projections of it, on resume too
+        if loop.converged:
             return KShortestResult(
-                rebind(out, caller), it, True, checkpointer.metrics_log()
+                loop.result(_ranked(loop.state, rk)), loop.iteration, True,
+                loop.history,
             )
-    else:
-        state = spark.createDataFrame([(source,)], f"id {id_type}").select(
-            "id", F.lit(0.0).alias("dist")
+        edges = loop.bind(edges)
+        w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
+        e = edges.select(F.col("src"), F.col("dst"), w.alias("w"))
+        if not directed:
+            e = symmetrize_edges(e)
+        # 250k rows/partition like shortest_paths (see the comment there):
+        # the per-round label state is ≤ k·V rows, far below the edge table.
+        csr = loop.edge_cache(
+            e.filter(F.col("src") != F.col("dst")), "src", partitions,
+            rows_per_partition=250_000,
         )
-        if checkpointer is not None:
-            state0 = state.withColumn("_old", F.lit(False))
-            state0 = checkpointer.save(
-                0, state0, {"new_labels": 1, "labels": 1, "converged": False}
+        if loop.state is None:
+            id_type = dict(csr.dtypes)["src"]
+            loop.start(
+                loop.spark.createDataFrame([(source,)], f"id {id_type}")
+                .select("id", F.lit(0.0).alias("dist"), F.lit(False).alias("_old"))
+                .repartition(loop.n_parts, "id"),
+                fields=lambda m: {"new_labels": 1, "labels": 1, "converged": False},
             )
-            state = state0.select("id", "dist")
-            frontier = state
-        else:
-            state = state.repartition(n_parts, "id").localCheckpoint()
-            frontier = state
-            prev_cp = state
-    try:
-        while it < max_iter:
-            it += 1
-            t0 = time.time()
+        for _ in loop.supersteps(max_iter):
+            frontier = loop.state.filter(~F.col("_old")).select("id", "dist")
             cand = csr.join(
                 frontier.select(F.col("id").alias("src"), "dist"), "src"
             ).select(
@@ -360,46 +263,30 @@ def k_shortest_distances(
             # old labels tagged so the frontier (labels NEW in the top-k
             # set) falls out of the same window pass
             merged = (
-                state.withColumn("_old", F.lit(True))
+                loop.state.select("id", "dist")
+                .withColumn("_old", F.lit(True))
                 .unionByName(cand.withColumn("_old", F.lit(False)))
                 .groupBy("id", "dist")
                 .agg(F.max("_old").alias("_old"))
                 .withColumn("_rk", rk)
                 .filter(F.col("_rk") <= k)
             )
-            obs = Observation(f"kssp_iter_{it}_{time.time_ns()}")
-            merged = merged.observe(
-                obs,
+            loop.step(
+                merged,
                 F.sum((~F.col("_old")).cast("long")).alias("new_labels"),
                 F.count(F.lit(1)).alias("labels"),
+                fields=lambda m: {
+                    "new_labels": int(m["new_labels"] or 0),
+                    "labels": int(m["labels"]),
+                    "converged": not m["new_labels"],
+                },
             )
-            if checkpointer is not None:
-                merged = checkpointer.save(it, merged, {"pending": True})
-            else:
-                merged = stats_safe_local_checkpoint(merged)
-            m = obs.get
-            release_local_checkpoint(prev_cp)
-            prev_cp = merged if checkpointer is None else None
-            new_labels = int(m["new_labels"] or 0)
-            rec = {
-                "iteration": it,
-                "superstep_sec": round(time.time() - t0, 3),
-                "new_labels": new_labels,
-                "labels": int(m["labels"]),
-                "converged": new_labels == 0,
-            }
-            history.append(rec)
-            if checkpointer is not None:
-                from bluegraph_spark.operators.pagerank import _update_metrics
 
-                _update_metrics(checkpointer, it, rec)
-            frontier = merged.filter(~F.col("_old")).select("id", "dist")
-            state = merged.select("id", "dist")
-            if new_labels == 0:
-                converged = True
-                break
-    finally:
-        csr.unpersist()
+        return KShortestResult(
+            loop.result(_ranked(loop.state, rk)), loop.iteration,
+            loop.converged, loop.history,
+        )
 
-    out = state.withColumn("rank", rk.cast("int")).select("id", "rank", "dist")
-    return KShortestResult(rebind(out, caller), it, converged, history)
+
+def _ranked(state: DataFrame, rk) -> DataFrame:
+    return state.withColumn("rank", rk.cast("int")).select("id", "rank", "dist")

@@ -1,7 +1,9 @@
 """Per-superstep vertex-state checkpointing with lineage + metrics + resume.
 
-Every iterative operator in this engine (PageRank, connected components,
-LPA) materializes its vertex state each superstep through this class:
+The superstep loops (``plans/loop.py``: PageRank, connected components,
+LPA, SSSP, k-shortest distances and Louvain's local-move rounds) take an
+optional checkpointer and materialize their state each superstep through
+this class:
 
 1. it cuts lineage — without it the logical plan grows by two joins per
    iteration and the job eventually dies in the planner (SURVEY.md §4.1);
@@ -28,9 +30,10 @@ no Iceberg runtime, so parquet directories stand in):
     {base}/{run_id}/iter=00003/            vertex-state parquet
     {base}/{run_id}/metrics/iter_00003.json  metrics + per-partition lineage
 
-A checkpoint is complete iff the format's commit marker (Hadoop-committed
-formats: the ``_SUCCESS`` file; Iceberg: the committed metadata tree) and
-the metrics JSON both exist; ``latest()`` ignores partial writes, so a run
+The metrics JSON is written once, after the state write and after the
+superstep's observed metrics are known. A checkpoint is complete iff the
+format's commit marker (Hadoop-committed formats: the ``_SUCCESS`` file;
+Iceberg: the committed metadata tree) and the metrics JSON both exist; ``latest()`` ignores partial writes, so a run
 killed mid-write resumes from the previous superstep. The format matrix is
 pytest-parameterized (tests/test_checkpoint.py); the Iceberg path skips in
 this sandbox (no iceberg-spark-runtime jar) with the cluster-side contract
@@ -43,7 +46,7 @@ import json
 import os
 import shutil
 import time
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -56,12 +59,10 @@ class SuperstepCheckpointer:
         run_id: str = "run",
         data_format: str = "parquet",
         keep_last: int | None = None,
-        collect_lineage: bool = True,
     ):
         self.base = os.path.join(base_path, run_id)
         self.data_format = data_format
         self.keep_last = keep_last
-        self.collect_lineage = collect_lineage
         os.makedirs(os.path.join(self.base, "metrics"), exist_ok=True)
 
     # -- paths -----------------------------------------------------------
@@ -78,12 +79,15 @@ class SuperstepCheckpointer:
         self,
         iteration: int,
         state: DataFrame,
-        metrics: dict[str, Any] | None = None,
+        metrics: dict[str, Any] | Callable[[], dict[str, Any]] | None = None,
     ) -> DataFrame:
         """Write vertex state + metrics; return the re-read (lineage-free) DF.
 
         The returned DataFrame reads from storage, so downstream supersteps
         build plans on a fresh scan instead of the whole iteration history.
+        ``metrics`` may be a zero-argument callable: it is evaluated after
+        the write and lineage jobs, so metrics observed on ``state`` go
+        into the one metrics JSON this call writes.
         """
         path = self.data_path(iteration)
         t0 = time.time()
@@ -98,19 +102,20 @@ class SuperstepCheckpointer:
             "write_sec": round(write_sec, 4),
             "path": path,
         }
+        lineage = (
+            reread.groupBy(F.spark_partition_id().alias("partition"))
+            .agg(F.count("*").alias("rows"))
+            .orderBy("partition")
+            .collect()
+        )
+        record["lineage"] = [
+            {"partition": r["partition"], "rows": r["rows"]} for r in lineage
+        ]
+        record["total_rows"] = int(sum(r["rows"] for r in lineage))
+        if callable(metrics):
+            metrics = metrics()
         if metrics:
             record.update(metrics)
-        if self.collect_lineage:
-            lineage = (
-                reread.groupBy(F.spark_partition_id().alias("partition"))
-                .agg(F.count("*").alias("rows"))
-                .orderBy("partition")
-                .collect()
-            )
-            record["lineage"] = [
-                {"partition": r["partition"], "rows": r["rows"]} for r in lineage
-            ]
-            record["total_rows"] = int(sum(r["rows"] for r in lineage))
         tmp = self.metrics_path(iteration) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(record, f)

@@ -1,6 +1,6 @@
 """Conf-isolated planning scope for iterative superstep loops.
 
-The superstep loops (pagerank / connected components / LPA) pin two
+The superstep loops (``plans/loop.py``) pin two
 plan-time session properties for their fixed-shape round plans: AQE off
 (per-stage driver re-planning is pure serial overhead on a frozen plan) and
 ``spark.sql.shuffle.partitions`` sized to the measured data. Both are
@@ -25,28 +25,6 @@ from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
 _counter = itertools.count()
-
-#: Default rows-per-partition budget for the iterative loops' shuffle
-#: width (``loop_partitions``). Round plans are join/aggregation-heavy —
-#: several chained operators per row — so the budget is smaller than a
-#: scan-style 100 MB+ partition: ~32k rows keeps round tasks in the
-#: 100-500 ms band (measured at sf0.1: a 135k-edge CC round at 1
-#: partition ran 2-3 s serial, at 5 partitions 0.7-1.6 s). The budget is
-#: scale-neutral (not a function of local core count); production runs
-#: raise parallelism by raising ``spark.sql.shuffle.partitions``, which
-#: caps the width from above.
-LOOP_ROWS_PER_PARTITION = 32_000
-
-
-def loop_partitions(n_rows: int, conf_parts: int,
-                    rows_per_partition: int | None = None) -> int:
-    """Shuffle width for an iterative loop over ``n_rows`` state rows."""
-    import os
-
-    rpp = rows_per_partition or int(
-        os.environ.get("BG_LOOP_ROWS_PER_PART", LOOP_ROWS_PER_PARTITION)
-    )
-    return max(1, min(conf_parts, int(n_rows) // rpp + 1))
 
 
 def loop_session(caller: SparkSession) -> SparkSession:
@@ -87,21 +65,10 @@ def loop_session(caller: SparkSession) -> SparkSession:
 def _of_rows(df: DataFrame, target: SparkSession) -> DataFrame:
     """Primary rebind route: a Dataset over the SAME analyzed plan.
 
-    ``Dataset.ofRows`` moved namespaces in Spark 4
-    (``org.apache.spark.sql.classic.Dataset``); on 3.x it lives at
-    ``org.apache.spark.sql.Dataset``. Version-gated instead of blind-try:
-    on 3.5 the classic path would raise on EVERY rebind and silently drop
-    to the view fallback, whose re-aliasing strands checkpoint-captured
-    partitioning (+2 exchanges per superstep — the plan-guard tests would
-    fail without explaining why).
+    ``Dataset.ofRows`` lives at ``org.apache.spark.sql.classic.Dataset``
+    since Spark 4 (the package's floor).
     """
-    major = int(target.version.split(".")[0])
-    dataset_cls = (
-        target._jvm.org.apache.spark.sql.classic.Dataset
-        if major >= 4
-        else target._jvm.org.apache.spark.sql.Dataset
-    )
-    jdf = dataset_cls.ofRows(
+    jdf = target._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
         target._jsparkSession, df._jdf.queryExecution().analyzed()
     )
     return DataFrame(jdf, target)

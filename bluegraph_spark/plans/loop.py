@@ -1,0 +1,281 @@
+"""One shared superstep loop for the iterative operators.
+
+Every iterative operator follows the same discipline (north rule):
+
+- it runs on its own conf-isolated ``loop_session`` of the caller's
+  SparkContext, so its plan-time pins never leak into the caller;
+- it builds a CSR-blocked edge cache (hash-partitioned and sorted on the
+  join key, persisted once), sizes the shuffle width from the measured row
+  count, and then freezes AQE for its fixed-shape round plans;
+- each superstep's vertex state is materialized through the
+  ``SuperstepCheckpointer`` (lineage cut, metrics, resume) or a
+  stats-guarded ``localCheckpoint``, with the superstep's progress metrics
+  riding that one materialization job as observed metrics;
+- the superseded state's blocks are freed as soon as its successor exists,
+  and every cache and checkpoint the loop made is freed on every exit
+  path, except the checkpoints its result still reads.
+
+``SuperstepLoop`` owns all of that; an operator keeps only its round plan,
+its observed columns and its convergence test::
+
+    with SuperstepLoop(edges.sparkSession, checkpointer, resume) as loop:
+        edges = loop.bind(edges)
+        if loop.converged:                      # converged resume: no cache
+            return loop.result(loop.state)
+        csr = loop.edge_cache(raw_edges, "src", partitions)
+        if loop.state is None:
+            loop.start(initial_state)           # iteration 0
+        for it in loop.supersteps(max_iter):
+            loop.step(round_plan(loop.state), *observed, fields=record)
+        return loop.result(loop.state)
+
+A superstep's record (``iteration``, ``superstep_sec`` and the operator's
+``fields``) is appended to ``loop.history`` and, with a checkpointer,
+written once as that superstep's metrics JSON after its observed metrics
+are known: a checkpoint with a metrics file is a finished superstep.
+"""
+
+from __future__ import annotations
+
+import time
+from typing import Any, Callable, Iterator
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+
+from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
+from bluegraph_spark.plans.isolation import loop_session, rebind
+from bluegraph_spark.plans.planinfo import executed_exchange_count
+from bluegraph_spark.plans.stats_guard import (
+    release_local_checkpoint,
+    stats_safe_local_checkpoint,
+)
+
+#: Default rows-per-partition budget for a loop's shuffle width
+#: (``SuperstepLoop.width``). Round plans are join/aggregation-heavy —
+#: several chained operators per row — so the budget is smaller than a
+#: scan-style 100 MB+ partition: ~32k rows keeps round tasks in the
+#: 100-500 ms band (measured at sf0.1: a 135k-edge CC round at 1
+#: partition ran 2-3 s serial, at 5 partitions 0.7-1.6 s). The budget is
+#: scale-neutral (not a function of local core count); production runs
+#: raise parallelism by raising ``spark.sql.shuffle.partitions``, which
+#: caps the width from above.
+LOOP_ROWS_PER_PARTITION = 32_000
+
+
+def _checkpoint_rdd_ids(df: DataFrame) -> set[int]:
+    """Ids of the local-checkpoint RDDs ``df``'s plan reads."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    out = set()
+    while leaves.hasNext():
+        leaf = leaves.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            out.add(leaf.rdd().id())
+    return out
+
+
+class SuperstepLoop:
+    """Context manager for one run of an iterative operator (see module doc).
+
+    ``resume=True`` with a checkpointer loads the latest complete superstep
+    into ``state``, ``record`` and ``iteration`` at construction, before
+    any cache exists; ``converged`` then says whether that run had already
+    finished (its ``history`` is then the checkpointer's metrics log).
+    """
+
+    def __init__(
+        self,
+        caller: SparkSession,
+        checkpointer: SuperstepCheckpointer | None = None,
+        resume: bool = False,
+    ):
+        self.caller = caller
+        self.spark = loop_session(caller)
+        self.conf_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+        self.n_parts: int | None = None
+        self.checkpointer = checkpointer
+        self.iteration = 0
+        self.state: DataFrame | None = None
+        self.record: dict[str, Any] = {}
+        self.converged = False
+        self.history: list[dict[str, Any]] = []
+        # physical plan + executed shuffle count of the first superstep's
+        # state (pre-materialization), for the plan-guard tests
+        self.plan: str | None = None
+        self.exchanges: int | None = None
+        # id(df) -> (df, is_checkpoint): everything this loop must free
+        self._held: dict[int, tuple[DataFrame, bool]] = {}
+        self._result: DataFrame | None = None
+        self._t0 = time.time()
+        latest = checkpointer.latest() if resume and checkpointer is not None else None
+        if latest is not None:
+            self.iteration = latest
+            self.state = checkpointer.load(self.spark, latest)
+            self.record = checkpointer.load_metrics(latest)
+            self.converged = bool(self.record.get("converged"))
+            if self.converged:
+                self.history = checkpointer.metrics_log()
+
+    def __enter__(self) -> "SuperstepLoop":
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        keep: set[int] = set()
+        if exc_type is None and self._result is not None:
+            keep = _checkpoint_rdd_ids(self._result)
+        for df, is_checkpoint in self._held.values():
+            if not is_checkpoint:
+                df.unpersist()
+            elif not keep or _checkpoint_rdd_ids(df).isdisjoint(keep):
+                release_local_checkpoint(df)
+        self._held.clear()
+
+    # -- session -----------------------------------------------------------
+
+    def bind(self, df: DataFrame | None) -> DataFrame | None:
+        """Re-plan a caller DataFrame onto the loop's session."""
+        return None if df is None else rebind(df, self.spark)
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Hand ``df`` back on the caller's session; the checkpoints it
+        reads survive the loop's exit."""
+        self._result = df
+        return rebind(df, self.caller)
+
+    # -- caches, width, freeze ---------------------------------------------
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._held[id(df)] = (df, False)
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        df = stats_safe_local_checkpoint(df)
+        self._held[id(df)] = (df, True)
+        return df
+
+    def release(self, df: DataFrame | None) -> None:
+        """Free a cache or checkpoint this loop made, now. Anything else
+        (a storage-checkpoint re-read, a caller frame) is left alone."""
+        held = self._held.pop(id(df), None)
+        if held is None:
+            return
+        if held[1]:
+            release_local_checkpoint(df)
+        else:
+            df.unpersist()
+
+    def width(self, n_rows: int, rows_per_partition: int | None = None) -> int:
+        """Shuffle width for ``n_rows`` state rows, capped by the caller's
+        ``spark.sql.shuffle.partitions``."""
+        rpp = rows_per_partition or LOOP_ROWS_PER_PARTITION
+        return max(1, min(self.conf_parts, int(n_rows) // rpp + 1))
+
+    def freeze(self, n_parts: int) -> None:
+        """Pin AQE off and the shuffle width for the fixed-shape rounds.
+
+        Inside the loop every superstep re-runs the same plan over
+        explicitly partitioned inputs, so AQE's per-stage re-planning is
+        pure serial overhead (and splits each checkpoint job into several
+        stage jobs). Freeze BEFORE the initial state materializes: a
+        localCheckpoint taken under AQE captures UnknownPartitioning, which
+        costs two extra O(V) state shuffles on superstep 1. The pins land
+        on the loop's own session only.
+        """
+        self.n_parts = n_parts
+        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+
+    def edge_cache(
+        self,
+        raw: DataFrame,
+        key: str,
+        partitions: int | None = None,
+        rows_per_partition: int | None = None,
+    ) -> DataFrame:
+        """CSR-blocked edge cache: hash-partitioned by ``key`` and sorted
+        within partitions, so every superstep's join on ``key`` reuses the
+        layout (InMemoryTableScan reports both) without moving the big side.
+
+        One pass over the (possibly expensive) raw expression: cache it,
+        size the width off its count (unless ``partitions`` is given), build
+        the clustered cache from it, drop it, then freeze the plan.
+        """
+        raw = self.persist(raw)
+        n_parts = (
+            int(partitions) if partitions
+            else self.width(raw.count(), rows_per_partition)
+        )
+        csr = self.persist(raw.repartition(n_parts, key).sortWithinPartitions(key))
+        csr.count()
+        self.release(raw)
+        self.freeze(n_parts)
+        return csr
+
+    # -- supersteps --------------------------------------------------------
+
+    def start(
+        self,
+        state: DataFrame,
+        *observed: Column,
+        fields: Callable[[dict], dict] = lambda m: {},
+    ) -> DataFrame:
+        """Materialize the iteration-0 state; returns it (also ``state``)."""
+        self._t0 = time.time()
+        self._commit(state, observed, fields)
+        return self.state
+
+    def supersteps(self, max_iter: int) -> Iterator[int]:
+        """Superstep numbers after the last committed one, up to
+        ``max_iter``; stops early once a step's record (or a resumed run's
+        last record) says converged."""
+        while self.iteration < max_iter and not self.converged:
+            self.iteration += 1
+            self._t0 = time.time()
+            yield self.iteration
+
+    def step(
+        self,
+        state: DataFrame,
+        *observed: Column,
+        fields: Callable[[dict], dict],
+    ) -> dict[str, Any]:
+        """Materialize one superstep's state and record it.
+
+        ``observed`` aggregate columns ride the materialization job;
+        ``fields(metrics)`` turns their values into the record, whose
+        ``converged`` key ends the loop. The predecessor state is freed.
+        """
+        rec = self._commit(state, observed, fields, snapshot=self.plan is None)
+        self.history.append(rec)
+        self.converged = bool(rec.get("converged"))
+        return rec
+
+    def _commit(self, df, observed, fields, snapshot=False) -> dict[str, Any]:
+        obs = None
+        if observed:
+            obs = Observation(f"loop_{self.iteration}_{time.time_ns()}")
+            df = df.observe(obs, *observed)
+        if snapshot:
+            # the static plan this superstep executes (AQE is off in-loop)
+            self.plan = df._jdf.queryExecution().executedPlan().toString()
+            self.exchanges = executed_exchange_count(df)
+        rec: dict[str, Any] = {}
+
+        def record() -> dict[str, Any]:
+            # the materialization job has run, so the metrics are in
+            rec.update(
+                iteration=self.iteration,
+                superstep_sec=round(time.time() - self._t0, 3),
+                **fields(obs.get if obs else {}),
+            )
+            return rec
+
+        if self.checkpointer is not None:
+            new = self.checkpointer.save(self.iteration, df, record)
+        else:
+            new = self.checkpoint(df)
+            record()
+        self.release(self.state)
+        self.state = new
+        self.record = rec
+        return rec

@@ -1,3 +1,5 @@
+import os
+
 import pytest
 
 from bluegraph_spark.session import get_session
@@ -10,7 +12,9 @@ def spark():
     # overflow (sum of xxhash64) that only an ANSI session could surface.
     s = get_session(
         app_name="bluegraph-spark-tests",
-        master="local[8]",
+        # SPARK_GRAFT_CPUS, when set, is the machine's core count: more task
+        # threads than cores only adds contention.
+        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS') or 8}]",
         shuffle_partitions=8,
         extra_confs={"spark.sql.ansi.enabled": "true"},
     )

@@ -267,3 +267,12 @@ class TestEdgePredictor:
         m = fit_edge_predictor(df, "y", ["f1", "f2"], lr=0.5, iterations=10)
         assert all(abs(w) < 1e6 for w in m.weights)
         assert m.stds[1] == 1.0 or m.stds[1] > 0
+
+    def test_empty_feature_table_raises_value_error(self, spark):
+        """No rows means no standardization statistics: a clear ValueError
+        naming the operator, not ``float(None)``."""
+        from bluegraph_spark.operators.linkpred import fit_edge_predictor
+
+        df = spark.createDataFrame([], "f1 double, f2 double, y int")
+        with pytest.raises(ValueError, match="fit_edge_predictor: empty feature table"):
+            fit_edge_predictor(df, "y", ["f1", "f2"])

@@ -3,6 +3,9 @@
 nx.pagerank defaults alpha=0.85 tol=1e-6 max_iter=100; north rule requires
 allclose 1e-6)."""
 
+import json
+import uuid
+
 import networkx as nx
 import numpy as np
 import pytest
@@ -98,3 +101,102 @@ def test_checkpoint_resume(spark, tmp_path):
         assert got_res[k] == pytest.approx(got_full[k], abs=1e-12)
     # resume skipped the already-done supersteps
     assert resumed.iterations == full.iterations
+
+
+class KilledCheckpointer(SuperstepCheckpointer):
+    """Raises in ``save(kill_at)``: a run killed during that superstep."""
+
+    def __init__(self, *args, kill_at: int, **kwargs):
+        super().__init__(*args, **kwargs)
+        self.kill_at = kill_at
+
+    def save(self, iteration, state, metrics=None):
+        if iteration == self.kill_at:
+            raise RuntimeError(f"killed in superstep {iteration}")
+        return super().save(iteration, state, metrics)
+
+
+def _assert_same_ranks(a, b):
+    got_a = {r.id: r.rank for r in a.ranks.collect()}
+    got_b = {r.id: r.rank for r in b.ranks.collect()}
+    assert got_a.keys() == got_b.keys()
+    for k in got_a:
+        assert got_b[k] == pytest.approx(got_a[k], abs=1e-12)
+
+
+def test_resume_when_only_iteration_zero_is_complete(spark, tmp_path):
+    g = karate()
+    edges = nx_to_edges_df(spark, g, weight="strength")
+    full = pagerank(edges, weight_col="strength")
+
+    killed = KilledCheckpointer(str(tmp_path), "run", kill_at=1)
+    with pytest.raises(RuntimeError, match="killed in superstep 1"):
+        pagerank(edges, weight_col="strength", checkpointer=killed)
+    cp = SuperstepCheckpointer(str(tmp_path), "run")
+    assert cp.latest() == 0
+
+    resumed = pagerank(edges, weight_col="strength", checkpointer=cp, resume=True)
+    assert resumed.converged and resumed.iterations == full.iterations
+    _assert_same_ranks(full, resumed)
+
+
+def test_resume_from_pending_placeholder_record(spark, tmp_path):
+    """A complete state whose metrics record is only the placeholder an
+    older writer left between the state write and the metrics update."""
+    g = karate()
+    edges = nx_to_edges_df(spark, g, weight="strength")
+    full = pagerank(edges, weight_col="strength")
+
+    cp = SuperstepCheckpointer(str(tmp_path), "run")
+    pagerank(edges, weight_col="strength", max_iter=3, checkpointer=cp)
+    with open(cp.metrics_path(3), "w") as f:
+        json.dump({"iteration": 3, "pending": True}, f)
+    assert cp.latest() == 3
+
+    resumed = pagerank(edges, weight_col="strength", checkpointer=cp, resume=True)
+    assert resumed.converged and resumed.iterations == full.iterations
+    _assert_same_ranks(full, resumed)
+
+
+def _jobs_run_by(spark, fn):
+    """(fn's return value, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("op", ["pagerank", "cc", "sssp", "kssp"])
+def test_converged_resume_builds_no_edge_cache(spark, tmp_path, op):
+    """Resuming a run that had already converged returns its saved state
+    with no Spark job beyond reading that state back: no edge cache, no
+    width sizing, no further superstep."""
+    from bluegraph_spark.operators.components import connected_components
+    from bluegraph_spark.operators.paths import (
+        k_shortest_distances,
+        shortest_paths,
+    )
+
+    edges = nx_to_edges_df(spark, karate(), weight="strength")
+    run = {
+        "pagerank": lambda **kw: pagerank(edges, weight_col="strength", **kw),
+        "cc": lambda **kw: connected_components(edges, **kw),
+        "sssp": lambda **kw: shortest_paths(edges, "0", weight_col="strength", **kw),
+        "kssp": lambda **kw: k_shortest_distances(
+            edges, "0", k=2, weight_col="strength", **kw
+        ),
+    }[op]
+    cp = SuperstepCheckpointer(str(tmp_path), op)
+    done = run(checkpointer=cp)
+    assert done.converged
+
+    again, jobs = _jobs_run_by(spark, lambda: run(checkpointer=cp, resume=True))
+    assert jobs <= 1  # the parquet reader's schema inference over the state
+    assert again.converged
+    # the saved metrics log: every superstep of the finished run
+    assert [h["iteration"] for h in again.history] == list(range(cp.latest() + 1))
