@@ -43,14 +43,7 @@ def _part_occ(spark, sf_dir):
 def _part_edges(spark, sf_dir, statistics=("frequency",)):
     from bluegraph_spark.operators.cooccurrence import cooccurrence_edges
 
-    # parts graph: ~4 nodes per factor (lineitems per order) — the sparse-
-    # factor regime where the adjacency-array pair strategy wins (the
-    # supplier graph, ~30 nodes per factor, keeps the default join).
-    return cooccurrence_edges(
-        _part_occ(spark, sf_dir),
-        statistics=list(statistics),
-        pair_strategy="array",
-    )
+    return cooccurrence_edges(_part_occ(spark, sf_dir), statistics=list(statistics))
 
 
 def _supplier_edges(spark, sf_dir):
@@ -193,9 +186,7 @@ def q_cooc_top_parts(spark, sf_dir):
     )
 
     occ = keep_top_n_nodes(_part_occ(spark, sf_dir), 500)
-    return cooccurrence_edges(
-        occ, statistics=["frequency"], pair_strategy="array"
-    ).select(
+    return cooccurrence_edges(occ, statistics=["frequency"]).select(
         "src", "dst", F.col("frequency").cast("long").alias("frequency")
     )
 
@@ -1053,7 +1044,12 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # The correctness gate checks only the first 50 entries (README); the
+    # last three are checked by scripts/check_parity.py alone.
     return {
+        "dedup_incremental_docs": q_dedup_incremental_docs,
+        "negative_edges_li": q_negative_edges_li,
+        "edge_features_emb": q_edge_features_emb,
         "cooc_parts_freq": q_cooc_parts_freq,
         "cooc_parts_npmi": q_cooc_parts_npmi,
         "cooc_top_parts": q_cooc_top_parts,
@@ -1104,9 +1100,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "walks_parts": q_walks_parts,
         "vector_metrics_emb": q_vector_metrics_emb,
         "encode_suppliers": q_encode_suppliers,
-        "dedup_incremental_docs": q_dedup_incremental_docs,
-        "negative_edges_li": q_negative_edges_li,
-        "edge_features_emb": q_edge_features_emb,
     }
 
 

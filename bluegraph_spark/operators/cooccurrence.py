@@ -17,14 +17,20 @@ The reference scans all n(n-1)/2 pairs with a multiprocessing pool
 long table ``(node, factor)`` and compute co-occurrence as a **self-equi-join
 on factor** followed by a pair aggregation — the shuffle and AQE replace the
 worker pool, and only genuinely co-occurring pairs are ever materialized.
+Every pair comes from that one self-join (``_join_pairs``); there is no
+second pair formulation to choose between.
 
 Scale notes (100 TB design):
 - A factor occurring in f files yields f(f-1)/2 join rows: the classic skew
-  site. Mitigations, all explicit knobs: ``factor_freq_cap`` (drop factors
+  site. Mitigations, all explicit: ``factor_freq_cap`` (drop factors
   above a document-frequency cap — semantically the reference's
   min-occurrence / top-n vocabulary pruning, cord19kg/utils.py:618-651),
-  AQE skew-join (on by default in the session), and ``salt`` (split each
-  heavy factor group across S salted sub-joins; result-identical, tested).
+  AQE skew-join (on by default in the session), and ``salt`` (the caller's
+  hub knob: factors with more than ``SALT_THRESHOLD`` occurrences run the
+  same self-join with a salt as a second key, split across S tasks;
+  result-identical, tested).
+- The build is lazy unless the occurrence plan has a Python stage, where it
+  shares one persisted occurrence pass (see ``cooccurrence_edges``).
 - ``common_factors`` materializes the intersection sets and is opt-in only:
   shuffling per-pair factor arrays at 10^12-file scale is prohibitive
   (SURVEY.md §7.5).
@@ -32,7 +38,9 @@ Scale notes (100 TB design):
 
 from __future__ import annotations
 
-from typing import Iterable, Sequence
+import operator
+from functools import reduce
+from typing import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -44,7 +52,7 @@ STATISTICS = ("frequency", "ppmi", "npmi", "expected", "pmi2", "pmi3")
 
 # Above this per-factor occurrence count, the salted path (when salt is set)
 # takes over; below it, the plain self-join is strictly cheaper.
-DEFAULT_SALT_THRESHOLD = 10_000
+SALT_THRESHOLD = 10_000
 
 
 def occurrences_from_node_property(
@@ -156,100 +164,39 @@ def keep_top_n_nodes(
     return occ.join(top, "node", "left_semi")
 
 
-def _array_pairs(occ: DataFrame) -> DataFrame:
-    """(s, t, factor) with s < t via per-factor adjacency arrays.
-
-    One aggregation (``collect_set`` dedups duplicate occurrence rows, so
-    no separate ``distinct`` shuffle is needed) and a codegen'd nested
-    ``transform`` emit each factor's node pairs in place — one exchange of
-    the occurrence table instead of the self-join's distinct + two join
-    exchanges + sort-merge sorts. ``array_sort`` is the same lexicographic
-    (string) order as the join's ``a.node < b.node`` predicate, so the pair
-    multiset is identical. Skew caveat: a factor with f nodes emits its
-    f(f-1)/2 pairs inside ONE task, so unbounded hot factors need
-    ``factor_freq_cap`` (drop) or ``salt`` (which routes heavy factors
-    through the AQE-splittable salted join below) — the same two knobs the
-    self-join form documented, since 10^10-pair factors are infeasible on
-    any path.
-    """
-    grouped = occ.groupBy("factor").agg(
-        F.array_sort(F.collect_set("node")).alias("_ns")
-    )
-    return grouped.select(
-        "factor",
-        F.explode(
-            F.flatten(
-                F.transform(
-                    "_ns",
-                    lambda x, i: F.transform(
-                        F.slice("_ns", i + 2, F.size("_ns")),
-                        lambda y: F.struct(x.alias("s"), y.alias("t")),
-                    ),
-                )
-            )
-        ).alias("_p"),
-    ).select(F.col("_p.s").alias("s"), F.col("_p.t").alias("t"), "factor")
-
-
-def _join_pairs(occ: DataFrame) -> DataFrame:
-    """(s, t, factor) with s < t via the factor self-equi-join."""
-    a = occ.alias("a")
-    b = occ.alias("b")
-    return a.join(
-        b,
-        (F.col("a.factor") == F.col("b.factor"))
-        & (F.col("a.node") < F.col("b.node")),
-    ).select(
-        F.col("a.node").alias("s"),
-        F.col("b.node").alias("t"),
-        F.col("a.factor").alias("factor"),
-    )
-
-
-def _pair_instances(
-    occ: DataFrame,
-    salt: int | None,
-    salt_threshold: int,
-    strategy: str = "join",
+def _join_pairs(
+    a: DataFrame, b: DataFrame | None = None, keys: Sequence[str] = ("factor",)
 ) -> DataFrame:
-    """One row per (s, t, factor) with s < t.
+    """(s, t, factor) with s < t via the equi-join of ``a`` and ``b`` on ``keys``.
 
-    ``strategy`` picks the plain-path formulation (see
-    ``cooccurrence_edges`` for the trade-off); with ``salt`` set, factors
-    whose occurrence count exceeds ``salt_threshold`` are joined through S
-    salted sub-joins: the left side gets a deterministic salt from the
-    node id, the right side is replicated to every salt value, so every
-    qualifying pair is still produced exactly once while the heaviest
-    factor group is split across S tasks.
+    ``b`` defaults to ``a`` (the factor self-join); the salted heavy-factor
+    join passes its replicated side and ``("factor", "_salt")``.
     """
-    plain = _array_pairs if strategy == "array" else _join_pairs
-    if not salt:
-        return plain(occ)
-
-    fcount = occ.groupBy("factor").agg(F.count("*").alias("_fc"))
-    occ_f = occ.join(fcount, "factor")
-    light = occ_f.filter(F.col("_fc") <= salt_threshold).drop("_fc")
-    heavy = occ_f.filter(F.col("_fc") > salt_threshold).drop("_fc")
-
-    light_pairs = plain(light.select("node", "factor"))
-
-    ha = heavy.withColumn("_salt", F.pmod(F.xxhash64("node"), F.lit(salt))).alias("a")
-    hb = (
-        heavy.withColumn(
-            "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
-        )
-    ).alias("b")
-    heavy_pairs = ha.join(
-        hb,
-        (F.col("a.factor") == F.col("b.factor"))
-        & (F.col("a._salt") == F.col("b._salt"))
-        & (F.col("a.node") < F.col("b.node")),
-    ).select(
+    a, b = a.alias("a"), (a if b is None else b).alias("b")
+    on = reduce(operator.and_, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    return a.join(b, on & (F.col("a.node") < F.col("b.node"))).select(
         F.col("a.node").alias("s"),
         F.col("b.node").alias("t"),
         F.col("a.factor").alias("factor"),
     )
-    return light_pairs.unionByName(heavy_pairs)
+
+
+def _salted_pairs(counted: DataFrame, salt: int) -> DataFrame:
+    """One row per (s, t, factor) with s < t from a (factor, node, _fc) table.
+
+    Factors whose occurrence count ``_fc`` exceeds ``SALT_THRESHOLD`` are
+    joined with ``_salt`` as a second key: the left side gets a
+    deterministic salt from the node id, the right side is replicated to
+    every salt value, so every qualifying pair is still produced exactly
+    once while the heaviest factor group is split across ``salt`` tasks.
+    """
+    light = counted.filter(F.col("_fc") <= SALT_THRESHOLD).drop("_fc")
+    heavy = counted.filter(F.col("_fc") > SALT_THRESHOLD).drop("_fc")
+    ha = heavy.withColumn("_salt", F.pmod(F.xxhash64("node"), F.lit(salt)))
+    hb = heavy.withColumn(
+        "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)).cast("array<long>"))
+    )
+    return _join_pairs(light).unionByName(_join_pairs(ha, hb, ("factor", "_salt")))
 
 
 def cooccurrence_edges(
@@ -261,167 +208,120 @@ def cooccurrence_edges(
     min_frequency: int | None = None,
     prune_zero_mi: str | None = None,
     salt: int | None = None,
-    salt_threshold: int = DEFAULT_SALT_THRESHOLD,
     limit: int | None = None,
-    eager: bool | None = None,
-    pair_strategy: str = "join",
 ) -> DataFrame:
     """Build the co-occurrence edge table from a (node, factor) table.
 
     Returns ``(src, dst, <statistics...>[, common_factors])`` with
     ``src < dst`` (canonical undirected form; the reference's
     source-index < target-index ordering, generators.py:204, reduces to the
-    same unordered pair set).
+    same unordered pair set). Every pair comes from one factor self-join.
 
-    ``prune_zero_mi``: name of a computed MI column; rows with value <= 0 are
-    dropped (reference cord19kg/utils.py:661-662).
-    ``limit``: keep at most n edges — like the reference's early-exit limit
-    (generators.py:238-243) the *choice* of edges is not deterministic.
+    ``prune_zero_mi``: name of a column in ``statistics``; rows with value
+    <= 0 are dropped (reference cord19kg/utils.py:661-662).
+    ``salt``: the hub knob (>= 1). Factors with more than
+    ``SALT_THRESHOLD`` occurrences are joined through ``salt`` salted
+    sub-joins; the result is identical.
+    ``limit``: keep at most n edges (>= 0) — like the reference's early-exit
+    limit (generators.py:238-243) the *choice* of edges is not deterministic.
 
-    ``eager=None`` (default) auto-detects: lazy unless the occurrence
-    plan contains a Python/Arrow evaluation stage (``applyInPandas`` /
-    ``mapInPandas`` / pandas UDF — the :func:`occurrences_from_aggregator`
-    hook), in which case it goes eager. A Python stage is the one upstream
-    cost the "re-scan beats persist" argument below never covers: the lazy
-    NPMI/frequency plan re-executes the occurrence expression on up to 5
-    branches, and re-running an Arrow-shuffled Python aggregator 5× is
-    pure loss at every scale (measured on the driver bench: the round-4
-    lazy flip regressed the aggregator query ~25% while speeding up every
-    pure-Catalyst one). The detection reads the ANALYZED logical plan —
-    no job runs.
-
-    ``eager=False``: return the fully lazy plan — no persist, no
-    action; the total-factor count is folded in as a broadcast scalar. The
-    lazy NPMI plan re-executes the occurrence expression on up to 5 plan
-    branches (both self-join sides, the two marginal joins, the total-
-    factor count; no ``ReusedExchange`` appears under AQE). Measured: at
-    sf0.1 suite scale lazy wins decisively (3.2s vs 6.8–11.3s eager —
-    round 3's regression), while the 30 M-occurrence-row stress A/B has
-    FLIPPED across runs on the shared VM (lazy 53.7 vs eager 122.0 one
-    day, eager 117.9 vs lazy 186.7 the next) — at byte-sizes one box can
-    hold, the persist-vs-rescan trade is inside co-tenant noise, which is
-    exactly why the default discriminator is the Python-stage test above
-    and not a size threshold.
-
-    ``eager=True`` persists the deduplicated occurrence table, materializes
-    the edge table (``localCheckpoint``), and releases the cache before
-    returning. Pass it when the occurrence expression is SCAN-DOMINATED —
-    the 10^12-file corpus case, where ``occurrences_from_*`` reads wide
-    document text and emits a far smaller (node, factor) table: there the
-    5 branch re-scans each re-read the full corpus and one shared pass is
-    the only sane plan. The discriminator is source-scan cost vs derived-
-    table size, which no local benchmark at parquet-page-cache scale can
-    exhibit — hence a caller knob with both measurements documented, not a
-    size-threshold heuristic (round 4 tried one; both of its regimes were
-    measurably wrong).
+    The build is eager exactly when the occurrence plan has a Python stage
+    (:func:`~bluegraph_spark.plans.planinfo.plan_has_python_stage`, which
+    only plans): then the deduplicated occurrence table is persisted, the
+    edge table is materialized with ``localCheckpoint``, and the cache is
+    released before returning. The reason: the lazy plan re-executes the
+    occurrence expression on up to 5 branches (both join sides, the two
+    marginal joins, the total-factor count), and re-running an
+    Arrow-shuffled Python aggregator 5 times is pure loss (measured on the
+    driver bench: the lazy build regressed the aggregator query ~25% while
+    speeding up every pure-Catalyst one). Pure-Catalyst plans stay lazy.
     """
     for s in statistics:
         if s not in STATISTICS:
-            raise ValueError(f"unknown statistic {s!r}; supported: {STATISTICS}")
+            raise ValueError(
+                f"cooccurrence_edges: unknown statistic {s!r}; supported: {STATISTICS}"
+            )
+    if prune_zero_mi is not None and prune_zero_mi not in statistics:
+        raise ValueError(
+            f"cooccurrence_edges: prune_zero_mi={prune_zero_mi!r} is not one of "
+            f"the computed statistics {list(statistics)}"
+        )
+    if limit is not None and limit < 0:
+        raise ValueError(f"cooccurrence_edges: limit must be >= 0, got {limit}")
+    if salt is not None and salt < 1:
+        raise ValueError(f"cooccurrence_edges: salt must be >= 1, got {salt}")
 
-    if eager is None:
-        eager = plan_has_python_stage(occ)
-
-    occ_raw = occ.select(
+    occ = occ.select(
         F.col("node").cast("string").alias("node"),
         F.col("factor").cast("string").alias("factor"),
-    )
-    occ = occ_raw.distinct()
+    ).distinct()
+    cached = occ.persist() if plan_has_python_stage(occ) else None
+    try:
+        # (factor, node, _fc): each occurrence with its factor's count, for
+        # the cap and the salted split (the cap drops whole factors, so the
+        # capped table's counts are the same).
+        counted = None
+        if factor_freq_cap is not None or salt is not None:
+            fc = occ.groupBy("factor").agg(F.count("*").alias("_fc"))
+            if factor_freq_cap is not None:
+                fc = fc.filter(F.col("_fc") <= factor_freq_cap)
+            counted = occ.join(fc, "factor")
+            if factor_freq_cap is not None:
+                occ = counted.drop("_fc")
+        pairs = _join_pairs(occ) if salt is None else _salted_pairs(counted, salt)
 
-    if factor_freq_cap is not None:
-        fc = occ.groupBy("factor").agg(F.count("*").alias("_fc"))
-        occ = (
-            occ.join(fc.filter(F.col("_fc") <= factor_freq_cap), "factor")
-            .drop("_fc")
-        )
+        aggs = [F.count("*").alias("frequency")]
+        if keep_common_factors:
+            aggs.append(F.sort_array(F.collect_set("factor")).alias("common_factors"))
+        edges = pairs.groupBy(F.col("s").alias("src"), F.col("t").alias("dst")).agg(*aggs)
 
-    if eager:
-        occ = occ.persist()
-
-    needs_mi = any(s != "frequency" for s in statistics)
-    # Pair-generation strategy (``pair_strategy``): "join" (default) runs
-    # the classic factor self-equi-join over the deduplicated occurrence
-    # table — codegen'd pair generation, AQE-splittable, the right shape
-    # when factors hold MANY nodes (dense factors: a 30-node factor emits
-    # 435 pairs, and the nested array transform below is interpreted).
-    # "array" aggregates each factor's node set and emits pairs with a
-    # nested transform — one exchange of the occurrence table instead of
-    # three, measurably faster when factors hold FEW nodes (sparse
-    # factors, e.g. ≤ ~8 nodes each; measured at sf0.1: parts graph
-    # (≈4 nodes/factor) 1.8s → 1.35s, supplier graph (≈30 nodes/factor)
-    # 3.6s → 5.5s the other way). The pair multiset is identical.
-    if pair_strategy not in ("join", "array"):
-        raise ValueError("pair_strategy must be 'join' or 'array'")
-    # On the lazy, uncapped, unsalted ARRAY path the pair branch reads the
-    # RAW projection: ``collect_set`` inside ``_array_pairs`` dedups
-    # duplicate occurrence rows itself, so the pair branch skips the
-    # distinct's exchange entirely. Join/capped/salted paths need the
-    # deduplicated (and capped) table, and the eager path shares the
-    # persisted one.
-    pairs_occ = (
-        occ_raw
-        if (
-            pair_strategy == "array"
-            and not eager
-            and factor_freq_cap is None
-            and not salt
-        )
-        else occ
-    )
-    pairs = _pair_instances(pairs_occ, salt, salt_threshold, pair_strategy)
-
-    aggs = [F.count("*").alias("frequency")]
-    if keep_common_factors:
-        aggs.append(F.sort_array(F.collect_set("factor")).alias("common_factors"))
-    edges = pairs.groupBy(F.col("s").alias("src"), F.col("t").alias("dst")).agg(*aggs)
-
-    if needs_mi:
-        node_freq = occ.groupBy("node").agg(F.count("*").alias("_nf"))
-        edges = (
-            edges.join(node_freq.withColumnRenamed("node", "src"), "src")
-            .withColumnRenamed("_nf", "_s_freq")
-            .join(node_freq.withColumnRenamed("node", "dst"), "dst")
-            .withColumnRenamed("_nf", "_t_freq")
-        )
-        if total_factor_instances is not None:
-            total = F.lit(total_factor_instances)
-        else:
-            # Reference default: |union of all factor sets|
-            # (generators.py:363-376) — folded into the plan as a broadcast
-            # 1-row scalar instead of a plan-build-time count() action, so
-            # building the edge table stays a single job.
-            totals = occ.agg(
-                F.countDistinct("factor").alias("_total_factors")
+        if any(s != "frequency" for s in statistics):
+            node_freq = occ.groupBy("node").agg(F.count("*").alias("_nf"))
+            edges = (
+                edges.join(node_freq.withColumnRenamed("node", "src"), "src")
+                .withColumnRenamed("_nf", "_s_freq")
+                .join(node_freq.withColumnRenamed("node", "dst"), "dst")
+                .withColumnRenamed("_nf", "_t_freq")
             )
-            edges = edges.crossJoin(F.broadcast(totals))
-            total = F.col("_total_factors")
-        for stat in statistics:
-            if stat == "frequency":
-                continue
-            mitype = None if stat == "ppmi" else ("normalized" if stat == "npmi" else stat)
-            edges = edges.withColumn(
-                stat,
-                mutual_information_col(
-                    F.col("frequency"), F.col("_s_freq"), F.col("_t_freq"), total, mitype
-                ),
-            )
-        edges = edges.drop("_s_freq", "_t_freq", "_total_factors")
+            if total_factor_instances is not None:
+                total = F.lit(total_factor_instances)
+            else:
+                # Reference default: |union of all factor sets|
+                # (generators.py:363-376) — folded into the plan as a broadcast
+                # 1-row scalar instead of a plan-build-time count() action, so
+                # building the edge table stays a single job.
+                totals = occ.agg(
+                    F.countDistinct("factor").alias("_total_factors")
+                )
+                edges = edges.crossJoin(F.broadcast(totals))
+                total = F.col("_total_factors")
+            for stat in statistics:
+                if stat == "frequency":
+                    continue
+                mitype = None if stat == "ppmi" else ("normalized" if stat == "npmi" else stat)
+                edges = edges.withColumn(
+                    stat,
+                    mutual_information_col(
+                        F.col("frequency"), F.col("_s_freq"), F.col("_t_freq"), total, mitype
+                    ),
+                )
+            edges = edges.drop("_s_freq", "_t_freq", "_total_factors")
 
-    out_cols = ["src", "dst"] + [s for s in statistics]
-    if keep_common_factors:
-        out_cols.append("common_factors")
-    edges = edges.select(*out_cols)
+        out_cols = ["src", "dst"] + [s for s in statistics]
+        if keep_common_factors:
+            out_cols.append("common_factors")
+        edges = edges.select(*out_cols)
 
-    if min_frequency is not None:
-        edges = edges.filter(F.col("frequency") >= min_frequency)
-    if prune_zero_mi is not None:
-        edges = edges.filter(F.col(prune_zero_mi) > 0)
-    if limit is not None:
-        edges = edges.limit(limit)
-    if eager:
-        edges = edges.localCheckpoint()
-        occ.unpersist()
-    return edges
+        if min_frequency is not None:
+            edges = edges.filter(F.col("frequency") >= min_frequency)
+        if prune_zero_mi is not None:
+            edges = edges.filter(F.col(prune_zero_mi) > 0)
+        if limit is not None:
+            edges = edges.limit(limit)
+        return edges if cached is None else edges.localCheckpoint()
+    finally:
+        if cached is not None:
+            cached.unpersist()
 
 
 def cooccurrence_edges_multiset(

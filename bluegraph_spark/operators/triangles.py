@@ -40,6 +40,9 @@ groupBy → two (broadcast) adjacency joins → array_intersect explode → coun
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+from typing import Iterator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -111,18 +114,23 @@ def _corner_table(o: DataFrame, oriented_rows: int) -> DataFrame:
     )
 
 
-def triangles(edges: DataFrame) -> DataFrame:
-    """Triangle corner table: one row (x, y, z) per triangle.
+@contextmanager
+def _corner_scope(edges: DataFrame) -> Iterator[tuple[DataFrame, DataFrame]]:
+    """Yield (canonical table, corner table) over cached intermediates.
 
-    Leaves the oriented edge table persisted (the returned DataFrame reads
-    it lazily); use :func:`triangle_counts` / :func:`triangle_count_global`
-    for self-cleaning variants.
+    The canonical and oriented tables are persisted, and the oriented one
+    is counted (so the upstream edge expression runs once) before the
+    corner table is built. Both caches are released when the block exits,
+    normally or by an exception, so the block must materialize whatever it
+    returns.
     """
     canon = _canonical(edges).persist()
     o = _oriented(canon).persist()
-    m = o.count()  # materializes o (upstream edges evaluated exactly once)
-    canon.unpersist()
-    return _corner_table(o, m)
+    try:
+        yield canon, _corner_table(o, o.count())
+    finally:
+        o.unpersist()
+        canon.unpersist()
 
 
 def triangle_counts(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
@@ -132,45 +140,34 @@ def triangle_counts(edges: DataFrame, nodes: DataFrame | None = None) -> DataFra
     ``localCheckpoint`` so every intermediate cache is released before
     returning.
     """
-    canon = _canonical(edges).persist()
-    o = _oriented(canon).persist()
-    m = o.count()
-    tri = _corner_table(o, m)
-    # single-pass corner explode: a 3-branch union would run the (dominant)
-    # triangle-enumeration join three times — tri is deliberately not
-    # cached, so fan-out = re-execution (see pgframe.symmetrize_edges)
-    corners = tri.select(
-        F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("id")
-    )
-    counts = corners.groupBy("id").agg(F.count("*").alias("triangles"))
-    if nodes is None:
-        # vertex set from the cached canonical table — not a re-evaluation
-        # of the upstream edge expression
-        vertices = (
-            canon.select(F.col("a").alias("id"))
-            .unionByName(canon.select(F.col("b").alias("id")))
-            .distinct()
+    with _corner_scope(edges) as (canon, tri):
+        # single-pass corner explode: a 3-branch union would run the (dominant)
+        # triangle-enumeration join three times — tri is deliberately not
+        # cached, so fan-out = re-execution (see pgframe.symmetrize_edges)
+        corners = tri.select(
+            F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("id")
         )
-    else:
-        id_type = dict(edges.dtypes).get("src", "string")
-        vertices = nodes.select(
-            F.col(nodes.columns[0]).cast(id_type).alias("id")
-        ).distinct()
-    out = vertices.join(counts, "id", "left").select(
-        "id", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles")
-    )
-    out = out.localCheckpoint()
-    o.unpersist()
-    canon.unpersist()
-    return out
+        counts = corners.groupBy("id").agg(F.count("*").alias("triangles"))
+        if nodes is None:
+            # vertex set from the cached canonical table — not a re-evaluation
+            # of the upstream edge expression
+            vertices = (
+                canon.select(F.col("a").alias("id"))
+                .unionByName(canon.select(F.col("b").alias("id")))
+                .distinct()
+            )
+        else:
+            id_type = dict(edges.dtypes).get("src", "string")
+            vertices = nodes.select(
+                F.col(nodes.columns[0]).cast(id_type).alias("id")
+            ).distinct()
+        out = vertices.join(counts, "id", "left").select(
+            "id", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles")
+        )
+        return out.localCheckpoint()
 
 
 def triangle_count_global(edges: DataFrame) -> int:
     """Total number of distinct triangles in the graph."""
-    canon = _canonical(edges).persist()
-    o = _oriented(canon).persist()
-    m = o.count()
-    canon.unpersist()
-    n = _corner_table(o, m).count()
-    o.unpersist()
-    return n
+    with _corner_scope(edges) as (_, tri):
+        return tri.count()

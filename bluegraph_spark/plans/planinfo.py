@@ -46,12 +46,11 @@ _PYTHON_STAGE_MARKERS = (
 def plan_has_python_stage(df: DataFrame) -> bool:
     """True if the frame's plan contains a Python evaluation stage.
 
-    Used as the auto-``eager`` discriminator in the co-occurrence builder:
-    a plan branch that re-executes a Python/Arrow stage pays the full
+    The co-occurrence builder goes eager exactly when this is true: a plan
+    branch that re-executes a Python/Arrow stage pays the full
     Python-worker round trip again, so sharing one materialized pass is
     always right there — whereas re-scanning a columnar source is often
-    cheaper than persisting (measured both ways; see
-    ``cooccurrence_edges``'s docstring).
+    cheaper than persisting (see ``cooccurrence_edges``'s docstring).
 
     Checks the ANALYZED logical plan first (free; catches the named
     InPandas/InArrow relational nodes). Scalar pandas/Python UDFs print

@@ -81,37 +81,6 @@ def main() -> None:
         }
         _save_cache()
 
-    # Co-occurrence NPMI build, eager (shared persisted occurrence pass +
-    # localCheckpoint'ed edges) vs lazy (the occurrence expression re-runs
-    # on ~5 plan branches; no ReusedExchange under AQE). The 30M-row A/B
-    # has FLIPPED across runs on this VM (lazy 53.7 vs eager 122.0 on
-    # 2026-08-17; eager 117.9 vs lazy 186.7 on 2026-08-18) — at sizes one
-    # box can hold the choice is co-tenant-noise-dominated, which is why
-    # the shipped default is the Python-stage auto-discriminator, not a
-    # size heuristic. Factors are hash-bucketed to ~8M values (mean ~3.75
-    # docs/factor → ~50M candidate pairs), freq-capped at 50 for skew.
-    from pyspark.sql import functions as F
-
-    from bluegraph_spark.operators.cooccurrence import cooccurrence_edges
-
-    occ = edges.select(
-        F.col("src").cast("string").alias("node"),
-        F.pmod(F.xxhash64("src", "dst"), F.lit(8_000_000))
-        .cast("string")
-        .alias("factor"),
-    )
-    if "cooc_npmi_30m_eager_ab" not in results:
-        ab = {}
-        for label, eager in (("eager_shared_pass", True), ("lazy_rescan", False)):
-            t0 = time.time()
-            e_npmi = cooccurrence_edges(
-                occ, statistics=["frequency", "npmi"], factor_freq_cap=50, eager=eager
-            )
-            e_npmi.write.format("noop").mode("overwrite").save()
-            ab[label] = round(time.time() - t0, 1)
-        results["cooc_npmi_30m_eager_ab"] = ab
-        _save_cache()
-
     # round-5 distributed operators on the same graph
     from bluegraph_spark.operators.embeddings import fastrp_embeddings
 
@@ -186,12 +155,6 @@ def main() -> None:
     lines.append(
         f"| triangle_count_global | {tr['wall_sec']} | {tr['triangles']:,} triangles |"
     )
-    ab = results["cooc_npmi_30m_eager_ab"]
-    lines.append(
-        f"| cooc NPMI build, 30M occurrence rows (~8M factors, cap 50) | "
-        f"eager {ab['eager_shared_pass']} vs lazy {ab['lazy_rescan']} | "
-"the verdict FLIPPED between runs: 2026-08-17 measured lazy 53.7 vs eager 122.0, this run measured eager 117.9 vs lazy 186.7 on the identical job — the 30M-row A/B is co-tenant-noise-dominated and neither mode is reliably faster at byte-sizes one box can hold. The durable rule the engine ships is therefore NOT size-based: eager=None auto-detects a Python/Arrow stage in the occurrence plan (re-running an applyInPandas aggregator on ~5 branches is pure loss at every scale) and stays lazy for pure-Catalyst plans, where the choice is measurably within noise here and the 10^12-file scan-dominated case (where eager must win) is documented on the knob. |"
-    )
     fr = results["fastrp_d16_2it"]
     lines.append(
         f"| fastrp_embeddings (d=16, 2 iterations, weighted) | {fr['wall_sec']} | "
@@ -236,8 +199,8 @@ def main() -> None:
         "  and round 4's lazy default did not. The driver's 14.6s reading on top",
         "  of that is suite-position + co-tenant noise (this query ranged",
         "  7.8–10.7s across 11 controlled first-runs; nothing reproduces 14.6s).",
-        "- Real fix shipped regardless: `cooccurrence_edges(eager=None)` now",
-        "  auto-detects a Python/Arrow stage in the occurrence plan",
+        "- Real fix shipped regardless: `cooccurrence_edges` now detects a",
+        "  Python/Arrow stage in the occurrence plan",
         "  (plans/planinfo.py:plan_has_python_stage) and shares one materialized",
         "  pass there — the lazy plan re-executes the occurrence expression on up",
         "  to 5 branches, and re-running an applyInPandas aggregator 5× is pure",

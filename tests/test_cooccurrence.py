@@ -12,6 +12,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from bluegraph_spark.operators import cooccurrence
 from bluegraph_spark.operators.cooccurrence import (
     cooccurrence_edges,
     cooccurrence_edges_multiset,
@@ -225,15 +226,14 @@ def test_multiset_intersection(spark):
     assert out[0].src == "x" and out[0].dst == "y" and out[0].frequency == 3
 
 
-def test_salting_result_identical(spark):
+def test_salting_result_identical(spark, monkeypatch):
     # hub factor: one factor shared by 40 nodes, plus background factors
     rows = [(f"n{i:03d}", "hub") for i in range(40)]
     rows += [(f"n{i:03d}", f"f{i % 7}") for i in range(40)]
     occ = spark.createDataFrame(rows, "node string, factor string")
     plain = cooccurrence_edges(occ, statistics=["frequency"]).collect()
-    salted = cooccurrence_edges(
-        occ, statistics=["frequency"], salt=4, salt_threshold=10
-    ).collect()
+    monkeypatch.setattr(cooccurrence, "SALT_THRESHOLD", 10)
+    salted = cooccurrence_edges(occ, statistics=["frequency"], salt=4).collect()
     assert sorted((r.src, r.dst, r.frequency) for r in plain) == sorted(
         (r.src, r.dst, r.frequency) for r in salted
     )
@@ -307,3 +307,23 @@ def test_limit_subset_and_count(spark):
         assert len(got) == min(n, len(full))
         for r in got:
             assert full[(r.src, r.dst)] == r.frequency
+
+
+@pytest.mark.parametrize(
+    "kwargs, match",
+    [
+        ({"statistics": ["frequency", "pmi"]}, "unknown statistic 'pmi'"),
+        (
+            {"statistics": ["frequency", "npmi"], "prune_zero_mi": "ppmi"},
+            "prune_zero_mi='ppmi' is not one of",
+        ),
+        ({"limit": -1}, "limit must be >= 0"),
+        ({"salt": 0}, "salt must be >= 1"),
+        ({"salt": -2}, "salt must be >= 1"),
+    ],
+)
+def test_argument_errors_name_the_operator(spark, node_occurrences, kwargs, match):
+    """Bad arguments fail before planning with a ValueError naming the
+    operator, not late with an AnalysisException (or, for salt, not at all)."""
+    with pytest.raises(ValueError, match=f"^cooccurrence_edges: {match}"):
+        cooccurrence_edges(node_occurrences, **kwargs)

@@ -1,4 +1,5 @@
-"""Physical-plan regression guards for the iterative superstep loops.
+"""Physical-plan regression guards for the iterative superstep loops and
+the co-occurrence builder.
 
 The loop design's load-bearing property is its exchange budget: PageRank
 runs ONE shuffle per superstep (the message groupBy — the CSR-blocked edge
@@ -6,7 +7,8 @@ cache and the co-partitioned state join are exchange-free), LPA runs two
 (per-(vertex, label) score shuffle + per-vertex argmax shuffle). A refactor
 that silently adds an exchange multiplies cluster network traffic per
 superstep; these tests pin the budget via the plan snapshot the operators
-record on their first superstep.
+record on their first superstep. The co-occurrence builder's budgets are
+pinned on the lazy edge-table plan itself.
 """
 
 import pytest
@@ -120,7 +122,7 @@ def test_plan_has_python_stage_detects_all_udf_shapes(spark):
 
 
 def test_cooccurrence_auto_eager_on_python_occurrence(spark):
-    """eager=None goes eager (localCheckpointed result — LogicalRDD plan,
+    """The builder goes eager (localCheckpointed result — LogicalRDD plan,
     single execution of the Python stage) for an applyInPandas occurrence
     table, and stays lazy for a pure-Catalyst one."""
     import pandas as pd
@@ -153,3 +155,39 @@ def test_cooccurrence_auto_eager_on_python_occurrence(spark):
     a = sorted(map(tuple, lazy_edges.collect()))
     b = sorted(map(tuple, eager_edges.collect()))
     assert a == b
+
+
+# Executed exchanges of the lazy edge-table plan with broadcast joins off
+# (the explicit broadcast of the 1-row total-factor count stays).
+COOC_BUDGETS = {
+    "frequency": ({"statistics": ["frequency"]}, 5),
+    "frequency+npmi": ({"statistics": ["frequency", "npmi"]}, 13),
+    "corpus_pipeline": (
+        {
+            "statistics": ["frequency", "npmi"],
+            "factor_freq_cap": 5,
+            "prune_zero_mi": "npmi",
+        },
+        26,
+    ),
+    "salted": ({"statistics": ["frequency"], "salt": 4}, 19),
+}
+
+
+@pytest.mark.parametrize("config", list(COOC_BUDGETS))
+def test_cooccurrence_exchange_budget(spark, no_broadcast, config):
+    from bluegraph_spark.operators.cooccurrence import cooccurrence_edges
+    from bluegraph_spark.plans.planinfo import (
+        executed_exchange_count,
+        plan_has_python_stage,
+    )
+
+    occ = spark.range(400).select(
+        F.concat(F.lit("n"), (F.col("id") % 60).cast("string")).alias("node"),
+        F.concat(F.lit("f"), (F.col("id") % 37).cast("string")).alias("factor"),
+    )
+    kwargs, budget = COOC_BUDGETS[config]
+    edges = cooccurrence_edges(occ, **kwargs)
+    assert not plan_has_python_stage(edges)
+    plan = edges._jdf.queryExecution().executedPlan().toString()
+    assert executed_exchange_count(edges) == budget, plan
