@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.functions.mi import mutual_information_col
+from bluegraph_spark.plans.loop import CacheScope
 from bluegraph_spark.plans.planinfo import plan_has_python_stage
 
 STATISTICS = ("frequency", "ppmi", "npmi", "expected", "pmi2", "pmi3")
@@ -255,8 +256,10 @@ def cooccurrence_edges(
         F.col("node").cast("string").alias("node"),
         F.col("factor").cast("string").alias("factor"),
     ).distinct()
-    cached = occ.persist() if plan_has_python_stage(occ) else None
-    try:
+    eager = plan_has_python_stage(occ)
+    with CacheScope() as scope:
+        if eager:
+            occ = scope.persist(occ)
         # (factor, node, _fc): each occurrence with its factor's count, for
         # the cap and the salted split (the cap drops whole factors, so the
         # capped table's counts are the same).
@@ -318,10 +321,7 @@ def cooccurrence_edges(
             edges = edges.filter(F.col(prune_zero_mi) > 0)
         if limit is not None:
             edges = edges.limit(limit)
-        return edges if cached is None else edges.localCheckpoint()
-    finally:
-        if cached is not None:
-            cached.unpersist()
+        return scope.result(scope.checkpoint(edges)) if eager else edges
 
 
 def cooccurrence_edges_multiset(

@@ -30,6 +30,7 @@ from bluegraph_spark.functions.text import (
     simhash_signatures,
     tokens_col,
 )
+from bluegraph_spark.plans.loop import CacheScope
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -63,6 +64,35 @@ def shingle_table(df: DataFrame, id_col: str, text_col: str, n: int = 3) -> Data
     )
 
 
+def _exact_jaccard(inter: DataFrame, sh: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold) from ``(id_a, id_b, inter)``
+    shared-shingle counts and the (id, shingle) table that sizes each id."""
+    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
+    return (
+        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
+        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
+        .withColumn(
+            "jaccard",
+            F.col("inter").cast("double")
+            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
+        )
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+
+
+def _candidate_overlap(cands: DataFrame, sh: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter): shared-shingle count of each candidate pair."""
+    sha = sh.select(F.col("id").alias("id_a"), "shingle")
+    shb = sh.select(F.col("id").alias("id_b"), "shingle")
+    return (
+        cands.join(sha, "id_a")
+        .join(shb, ["id_b", "shingle"])
+        .groupBy("id_a", "id_b")
+        .agg(F.count("*").alias("inter"))
+    )
+
+
 def jaccard_pairs(
     df: DataFrame,
     id_col: str,
@@ -78,35 +108,23 @@ def jaccard_pairs(
     Eager: the (threshold-pruned, small) result is materialized via
     ``localCheckpoint`` so the shingle cache shared by the size counts and
     both join sides is released before returning."""
-    sh = shingle_table(df, id_col, text_col, n).persist()
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    if shingle_freq_cap is not None:
-        freq = sh.groupBy("shingle").agg(F.count("*").alias("_fc"))
-        sh = sh.join(freq.filter(F.col("_fc") <= shingle_freq_cap), "shingle").drop("_fc")
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.shingle") == F.col("b.shingle"))
-            & (F.col("a.id") < F.col("b.id")),
+    with CacheScope() as scope:
+        sh = scope.persist(shingle_table(df, id_col, text_col, n))
+        kept = sh
+        if shingle_freq_cap is not None:
+            freq = sh.groupBy("shingle").agg(F.count("*").alias("_fc"))
+            kept = sh.join(freq.filter(F.col("_fc") <= shingle_freq_cap), "shingle").drop("_fc")
+        a, b = kept.alias("a"), kept.alias("b")
+        inter = (
+            a.join(
+                b,
+                (F.col("a.shingle") == F.col("b.shingle"))
+                & (F.col("a.id") < F.col("b.id")),
+            )
+            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+            .agg(F.count("*").alias("inter"))
         )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    out = out.localCheckpoint()
-    sh.unpersist()
-    return out
+        return scope.result(scope.checkpoint(_exact_jaccard(inter, sh, threshold)))
 
 
 def minhash_signature(text_col, n: int = 3, num_hashes: int = 8):
@@ -215,33 +233,13 @@ def minhash_dedup_pairs(
     released before returning. Zero-shingle documents are excluded (see
     :func:`minhash_lsh_candidates`).
     """
-    sh = shingle_table(df, id_col, text_col, n).persist()
-    cands = minhash_lsh_candidates(
-        df, id_col, text_col, n, num_hashes, bands, shingles=sh
-    )
-    sizes = sh.groupBy("id").agg(F.count("*").alias("sz"))
-    sha = sh.select(F.col("id").alias("id_a"), "shingle")
-    shb = sh.select(F.col("id").alias("id_b"), "shingle")
-    inter = (
-        cands.join(sha, "id_a")
-        .join(shb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
+    with CacheScope() as scope:
+        sh = scope.persist(shingle_table(df, id_col, text_col, n))
+        cands = minhash_lsh_candidates(
+            df, id_col, text_col, n, num_hashes, bands, shingles=sh
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    out = out.localCheckpoint()
-    sh.unpersist()
-    return out
+        out = _exact_jaccard(_candidate_overlap(cands, sh), sh, threshold)
+        return scope.result(scope.checkpoint(out))
 
 
 def embedding_dedup_pairs(
@@ -478,66 +476,44 @@ def minhash_dedup_incremental(
     """
     if num_hashes % bands:
         raise ValueError("bands must divide num_hashes")
-    batch_sh = shingle_table(batch, id_col, text_col, n).persist()
-    batch_bands = _band_rows(
-        _signatures_from_shingles(batch_sh, num_hashes), num_hashes, bands
-    ).persist()
-
-    other = index.select("id", "band", "key").unionByName(batch_bands)
-    a, b = other.alias("a"), batch_bands.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.id") != F.col("b.id")),
+    with CacheScope() as scope:
+        batch_sh = scope.persist(shingle_table(batch, id_col, text_col, n))
+        batch_bands = scope.persist(
+            _band_rows(
+                _signatures_from_shingles(batch_sh, num_hashes), num_hashes, bands
+            )
         )
-        .select(
-            F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
-            F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
-        )
-        .distinct()
-    )
-    cands = cands.localCheckpoint()
 
-    # shingles for verification: batch side is already materialized; the
-    # corpus side is shingled ONLY for candidate-matched ids (left-semi
-    # prunes the scan before any shingling work happens)
-    cand_ids = (
-        cands.select(F.col("id_a").alias("id"))
-        .unionByName(cands.select(F.col("id_b").alias("id")))
-        .distinct()
-        .join(batch_sh.select("id").distinct(), "id", "left_anti")
-    )
-    corpus_cand = corpus.join(
-        cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
-    )
-    ver_sh = batch_sh.unionByName(
-        shingle_table(corpus_cand, id_col, text_col, n)
-    ).persist()
-
-    sizes = ver_sh.groupBy("id").agg(F.count("*").alias("sz"))
-    sha = ver_sh.select(F.col("id").alias("id_a"), "shingle")
-    shb = ver_sh.select(F.col("id").alias("id_b"), "shingle")
-    inter = (
-        cands.join(sha, "id_a")
-        .join(shb, ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double")
-            / (F.col("sz_a") + F.col("sz_b") - F.col("inter")).cast("double"),
+        other = index.select("id", "band", "key").unionByName(batch_bands)
+        a, b = other.alias("a"), batch_bands.alias("b")
+        cands = scope.checkpoint(
+            a.join(
+                b,
+                (F.col("a.band") == F.col("b.band"))
+                & (F.col("a.key") == F.col("b.key"))
+                & (F.col("a.id") != F.col("b.id")),
+            )
+            .select(
+                F.least(F.col("a.id"), F.col("b.id")).alias("id_a"),
+                F.greatest(F.col("a.id"), F.col("b.id")).alias("id_b"),
+            )
+            .distinct()
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    out = out.localCheckpoint()
-    ver_sh.unpersist()
-    batch_bands.unpersist()
-    batch_sh.unpersist()
-    return out
+
+        # shingles for verification: batch side is already materialized; the
+        # corpus side is shingled ONLY for candidate-matched ids (left-semi
+        # prunes the scan before any shingling work happens)
+        cand_ids = (
+            cands.select(F.col("id_a").alias("id"))
+            .unionByName(cands.select(F.col("id_b").alias("id")))
+            .distinct()
+            .join(batch_sh.select("id").distinct(), "id", "left_anti")
+        )
+        corpus_cand = corpus.join(
+            cand_ids.withColumnRenamed("id", id_col), id_col, "left_semi"
+        )
+        ver_sh = scope.persist(
+            batch_sh.unionByName(shingle_table(corpus_cand, id_col, text_col, n))
+        )
+        out = _exact_jaccard(_candidate_overlap(cands, ver_sh), ver_sh, threshold)
+        return scope.result(scope.checkpoint(out))

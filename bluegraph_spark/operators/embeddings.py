@@ -40,10 +40,11 @@ The per-iteration **round to 12 decimals is part of the algorithm's
 contract**, not a display choice: it quantizes away the ≤ ~1e-14
 floating-point summation-order differences between engines (Spark partial
 aggregation vs DuckDB serial sums), so the fixpoint is identical
-cross-engine and across cluster sizes. Each iteration is
-``stats_safe_local_checkpoint``-ed: the loop never compounds plan
-statistics (the round-4 BigInteger driver cliff) and superseded iteration
-blocks are released as soon as their successor is materialized.
+cross-engine and across cluster sizes. Each iteration is materialized
+with ``SuperstepLoop.checkpoint`` (a stats-guarded ``localCheckpoint``):
+the loop never compounds plan statistics (the round-4 BigInteger driver
+cliff) and superseded iteration blocks are released as soon as their
+successor is materialized.
 """
 
 from __future__ import annotations

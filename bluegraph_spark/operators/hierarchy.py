@@ -39,52 +39,13 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.operators.components import connected_components
+from bluegraph_spark.operators.linkpred import _global_rank
 from bluegraph_spark.operators.mst import minimum_spanning_forest
-
-
-def _global_rank(df: DataFrame, cols: list[str], out: str) -> DataFrame:
-    """Dense 1-based global rank of each row under the ``cols`` total
-    order, distributed: range-partition on the key, rank within each
-    partition, add driver-side partition offsets — the node_index shape
-    (operators/linkpred.py), generalized to a composite key. The ranged
-    layout is frozen (eager localCheckpoint) before the counts collect so
-    the offsets and the window job read the SAME partitioning
-    (repartitionByRange re-samples boundaries per execution)."""
-    from bluegraph_spark.plans.stats_guard import (
-        release_local_checkpoint,
-        stats_safe_local_checkpoint,
-    )
-
-    spark = df.sparkSession
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    ranged = stats_safe_local_checkpoint(
-        df.repartitionByRange(n_parts, *cols).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-    )
-    counts = {
-        r["_pid"]: r["cnt"]
-        for r in ranged.groupBy("_pid").agg(F.count("*").alias("cnt")).collect()
-    }
-    offsets, acc = {}, 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-    )
-    w = Window.partitionBy("_pid").orderBy(*cols)
-    res = stats_safe_local_checkpoint(
-        ranged.join(F.broadcast(off_df), "_pid")
-        .withColumn(out, (F.row_number().over(w) + F.col("_off")).cast("int"))
-        .drop("_pid", "_off")
-    )
-    release_local_checkpoint(ranged)
-    return res
+from bluegraph_spark.plans.loop import CacheScope
 
 
 def single_linkage_dendrogram(
@@ -95,17 +56,20 @@ def single_linkage_dendrogram(
     (distance, src, dst) total order. ``merge_rank`` i is the i-th
     agglomeration; cutting after rank r leaves V − r clusters (V = number
     of vertices, for a connected input). The rank is computed with the
-    distributed range-partition + offsets construction — no
-    single-partition global window."""
-    mst = minimum_spanning_forest(edges, weight_col=distance_col)
-    # tree_edges canonicalizes its weight column name to "weight"
-    return _global_rank(
-        mst.tree_edges.select(
+    distributed range-partition + offsets construction (the node_index
+    rank, 1-based int here) — no single-partition global window."""
+    with CacheScope() as scope:
+        mst = minimum_spanning_forest(edges, weight_col=distance_col)
+        # tree_edges canonicalizes its weight column name to "weight"
+        forest = scope.adopt(mst.tree_edges).select(
             "src", "dst", F.col("weight").alias(distance_col)
-        ),
-        [distance_col, "src", "dst"],
-        "merge_rank",
-    )
+        )
+        return scope.result(
+            _global_rank(
+                forest, [distance_col, "src", "dst"], "merge_rank", base=1,
+                dtype="int",
+            )
+        )
 
 
 @dataclass
@@ -144,35 +108,31 @@ def single_linkage_clusters(
     """
     if (n_clusters is None) == (threshold is None):
         raise ValueError("give exactly one of n_clusters / threshold")
+    if n_clusters is not None and n_clusters < 1:
+        raise ValueError("n_clusters must be >= 1")
 
-    # One execution of the (often expensive — e.g. a lazy co-occurrence
-    # self-join) upstream edge expression: every consumer below — the MST
-    # build, the vertex set (used twice: the count and the CC isolated-node
-    # anti-join), the threshold filter — otherwise re-executes it from
-    # source. Measured at sf0.1 (hierarchy_suppliers): 3 full co-occurrence
-    # builds → 1, ~34s → ~14s end to end.
-    from bluegraph_spark.plans.stats_guard import stats_safe_local_checkpoint
+    with CacheScope() as scope:
+        # One execution of the (often expensive — e.g. a lazy co-occurrence
+        # self-join) upstream edge expression: every consumer below — the MST
+        # build, the vertex set (used twice: the count and the CC isolated-node
+        # anti-join), the threshold filter — otherwise re-executes it from
+        # source. Measured at sf0.1 (hierarchy_suppliers): 3 full co-occurrence
+        # builds → 1, ~34s → ~14s end to end.
+        edges = scope.checkpoint(edges.select("src", "dst", distance_col))
+        nodes = scope.checkpoint(
+            edges.select(F.col("src").alias("id"))
+            .unionByName(edges.select(F.col("dst").alias("id")))
+            .distinct()
+        )
 
-    edges = stats_safe_local_checkpoint(
-        edges.select("src", "dst", distance_col)
-    )
-    nodes = stats_safe_local_checkpoint(
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-
-    if threshold is not None:
-        kept = edges.filter(F.col(distance_col) <= threshold)
-        res = connected_components(kept, nodes=nodes)
-        n = res.components.select("component").distinct().count()
-        cut = -1
-    else:
-        if n_clusters < 1:
-            raise ValueError("n_clusters must be >= 1")
-        mst = minimum_spanning_forest(edges, weight_col=distance_col)
-        forest = mst.tree_edges.persist()
-        try:
+        if threshold is not None:
+            kept = edges.filter(F.col(distance_col) <= threshold)
+            res = connected_components(kept, nodes=nodes)
+            n = res.components.select("component").distinct().count()
+            cut = -1
+        else:
+            mst = minimum_spanning_forest(edges, weight_col=distance_col)
+            forest = scope.persist(scope.adopt(mst.tree_edges))
             m = forest.count()
             v = nodes.count()
             c0 = v - m  # components of the full input
@@ -188,12 +148,12 @@ def single_linkage_clusters(
                 kept = forest
             res = connected_components(kept.select("src", "dst"), nodes=nodes)
             n = c0 + cut
-        finally:
-            forest.unpersist()
 
-    return HierarchicalResult(
-        labels=res.components.withColumnRenamed("component", "cluster"),
-        n_clusters=int(n),
-        cut_edges=int(cut),
-        history=res.history,
-    )
+        return HierarchicalResult(
+            labels=scope.result(
+                res.components.withColumnRenamed("component", "cluster")
+            ),
+            n_clusters=int(n),
+            cut_edges=int(cut),
+            history=res.history,
+        )

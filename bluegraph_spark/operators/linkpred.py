@@ -49,7 +49,7 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from bluegraph_spark.plans.loop import SuperstepLoop
+from bluegraph_spark.plans.loop import CacheScope, SuperstepLoop
 
 
 def portable_hash(seed: int | str, col: Column) -> Column:
@@ -71,14 +71,22 @@ def portable_hash(seed: int | str, col: Column) -> Column:
     )
 
 
-def node_index(nodes: DataFrame, id_col: str = "id", partitions: int | None = None) -> DataFrame:
-    """(id, idx) with idx = dense 0-based rank of ``id`` in global order.
+def _global_rank(
+    df: DataFrame,
+    cols: list[str],
+    out: str,
+    base: int = 0,
+    dtype: str = "long",
+    partitions: int | None = None,
+) -> DataFrame:
+    """``df`` plus ``out``: each row's ``base``-based position in the
+    ``cols`` total order, cast to ``dtype``.
 
-    Distributed zipWithIndex: range-partition by id, rank within each
+    Distributed zipWithIndex: range-partition on the key, rank within each
     partition, add driver-computed partition offsets (one tiny collect of
-    ``n_partitions`` counts). The result is partition-layout-invariant —
-    idx is the global rank — so it hash-compares against a plain
-    ``row_number() OVER (ORDER BY id) - 1`` oracle.
+    ``n_partitions`` counts). The position is partition-layout-invariant,
+    so it hash-compares against a plain ``row_number() OVER (ORDER BY
+    cols)`` oracle.
 
     The ranged layout is frozen with an eager ``localCheckpoint`` BEFORE
     the counts are collected: ``repartitionByRange`` reservoir-samples its
@@ -86,44 +94,42 @@ def node_index(nodes: DataFrame, id_col: str = "id", partitions: int | None = No
     freeze the counts job and the later window job can see DIFFERENT
     partitionings (empirically: three executions of the same ranged plan
     gave three partition-size vectors on 21k ids), which would make the
-    driver offsets wrong — duplicate/missing idx values. After the freeze
+    driver offsets wrong — duplicate/missing positions. After the freeze
     both jobs read the same materialized blocks; the returned frame is
-    itself checkpointed so the intermediate blocks can be released here
-    rather than leaking until GC.
+    itself checkpointed so the intermediate blocks are released here.
     """
-    from bluegraph_spark.plans.stats_guard import (
-        release_local_checkpoint,
-        stats_safe_local_checkpoint,
-    )
-
-    spark = nodes.sparkSession
-    n_parts = int(
-        partitions or spark.conf.get("spark.sql.shuffle.partitions")
-    )
-    ids = nodes.select(F.col(id_col).alias("id")).distinct()
-    ranged = stats_safe_local_checkpoint(
-        ids.repartitionByRange(n_parts, "id")
-        .withColumn("_pid", F.spark_partition_id())
-    )
-    counts = ranged.groupBy("_pid").count().collect()
-    offsets = {}
-    acc = 0
-    for row in sorted(counts, key=lambda r: r["_pid"]):
-        offsets[row["_pid"]] = acc
-        acc += row["count"]
-    off_df = spark.createDataFrame(
-        [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
-    )
-    w = Window.partitionBy("_pid").orderBy("id")
-    out = stats_safe_local_checkpoint(
-        ranged.join(F.broadcast(off_df), "_pid")
-        .select(
-            "id",
-            (F.row_number().over(w) - 1 + F.col("_off")).alias("idx"),
+    spark = df.sparkSession
+    n_parts = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    with CacheScope() as scope:
+        ranged = scope.checkpoint(
+            df.repartitionByRange(n_parts, *cols).withColumn(
+                "_pid", F.spark_partition_id()
+            )
         )
-    )
-    release_local_checkpoint(ranged)
-    return out
+        counts = ranged.groupBy("_pid").count().collect()
+        offsets, acc = {}, 0
+        for row in sorted(counts, key=lambda r: r["_pid"]):
+            offsets[row["_pid"]] = acc
+            acc += row["count"]
+        off_df = spark.createDataFrame(
+            [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _off long"
+        )
+        w = Window.partitionBy("_pid").orderBy(*cols)
+        pos = F.row_number().over(w) + F.col("_off") + (base - 1)
+        return scope.result(
+            scope.checkpoint(
+                ranged.join(F.broadcast(off_df), "_pid")
+                .withColumn(out, pos.cast(dtype))
+                .drop("_pid", "_off")
+            )
+        )
+
+
+def node_index(nodes: DataFrame, id_col: str = "id", partitions: int | None = None) -> DataFrame:
+    """(id, idx) with idx = dense 0-based rank of ``id`` in global order,
+    a long; materialized (see :func:`_global_rank`)."""
+    ids = nodes.select(F.col(id_col).alias("id")).distinct()
+    return _global_rank(ids, ["id"], "idx", partitions=partitions)
 
 
 def generate_negative_edges(
@@ -146,106 +152,103 @@ def generate_negative_edges(
     (reference: ``existing_edges.update(reversed)``,
     link_prediction.py:63-65).
     """
-    from bluegraph_spark.plans.stats_guard import release_local_checkpoint
-
-    # One execution of the (possibly expensive — e.g. a distinct over a
-    # wide fact table) edge expression: the vertex set, the |E| count, and
-    # the anti-join probe(s) in every retry round all read this cache.
-    e = edges.select(F.col("src"), F.col("dst")).persist()
-    if nodes is None:
-        nodes = e.select(F.col("src").alias("id")).unionByName(
-            e.select(F.col("dst").alias("id"))
-        )
-    idx = node_index(nodes, id_col=nodes.columns[0])  # eager, checkpointed
-    V = idx.count()
-    if n is None:
-        n_excl = edges_to_exclude.count() if edges_to_exclude is not None else 0
-        n = int((e.count() - n_excl) * p)
-    if V < 2 or n <= 0:
-        release_local_checkpoint(idx)
-        out = (
-            e.select("src", "dst").limit(0).withColumn("gen_i", F.lit(0).cast("long"))
-        ).localCheckpoint()
-        e.unpersist()
-        return out
-
-    spark = edges.sparkSession
-    existing = e
-    if not directed:
-        existing = existing.unionByName(
-            e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-
-    def _first_n_survivors(m: int) -> DataFrame:
-        """First ``n`` non-edges by gen_i among candidates 0..m-1.
-
-        Because the candidate at index i depends only on (seed, i), a
-        larger m strictly EXTENDS the stream: the first-n-by-gen_i result
-        under m' > m agrees with the m result whenever the m result
-        already held n rows. So the retry loop below preserves the
-        deterministic semantic "first n survivors of the infinite seeded
-        stream" regardless of where it stops.
-        """
-        cand = (
-            spark.range(m)
-            .select(
-                F.col("id").alias("gen_i"),
-                F.pmod(portable_hash(seed, F.col("id")), F.lit(V)).alias("_sidx"),
-                F.pmod(portable_hash(seed + 1, F.col("id")), F.lit(V)).alias("_didx"),
+    with CacheScope() as scope:
+        # One execution of the (possibly expensive — e.g. a distinct over a
+        # wide fact table) edge expression: the vertex set, the |E| count, and
+        # the anti-join probe(s) in every retry round all read this cache.
+        e = scope.persist(edges.select(F.col("src"), F.col("dst")))
+        if nodes is None:
+            nodes = e.select(F.col("src").alias("id")).unionByName(
+                e.select(F.col("dst").alias("id"))
             )
-            .filter(F.col("_sidx") != F.col("_didx"))
-        )
-        paired = (
-            cand.join(idx.select(F.col("idx").alias("_sidx"), F.col("id").alias("src")), "_sidx")
-            .join(idx.select(F.col("idx").alias("_didx"), F.col("id").alias("dst")), "_didx")
-            .select("src", "dst", "gen_i")
-        )
-        out = paired.join(existing.select("src", "dst"), ["src", "dst"], "left_anti")
-        if edges_to_exclude is not None:
-            out = out.join(
-                edges_to_exclude.select("src", "dst"), ["src", "dst"], "left_anti"
+        idx = scope.adopt(node_index(nodes, id_col=nodes.columns[0]))
+        V = idx.count()
+        if n is None:
+            n_excl = edges_to_exclude.count() if edges_to_exclude is not None else 0
+            n = int((e.count() - n_excl) * p)
+        if V < 2 or n <= 0:
+            return scope.result(
+                scope.checkpoint(
+                    e.select("src", "dst").limit(0)
+                    .withColumn("gen_i", F.lit(0).cast("long"))
+                )
             )
-        return (
-            out.groupBy("src", "dst")
-            .agg(F.min("gen_i").alias("gen_i"))
-            .orderBy("gen_i")
-            .limit(n)
-        )
 
-    # Retry toward the target count like the reference's while-loop
-    # (link_prediction.py:51-77), but deterministically: double the stream
-    # prefix until n survivors exist or the stream is clearly exhausted
-    # relative to the pair space (dense/small graphs may have < n
-    # non-edges at all — then we return what exists and warn).
-    m = max(1, int(n * oversample))
-    max_m = 16 * max(m, V * V)  # collisions make hashed coverage sublinear
-    while True:
-        # TakeOrdered output is tiny (≤ n rows) and fully determined;
-        # materialize once, with the survivor count riding the
-        # checkpoint job as an observed metric (a separate count() ran a
-        # second job per retry round).
-        obs = Observation(f"negedge_round_{m}_{time.time_ns()}")
-        result = _first_n_survivors(m).observe(
-            obs, F.count(F.lit(1)).alias("got")
-        ).localCheckpoint()
-        got = int(obs.get["got"] or 0)
-        if got >= n or m >= max_m:
-            break
-        release_local_checkpoint(result)
-        m *= 2
-    if got < n:
-        import warnings
+        spark = edges.sparkSession
+        existing = e
+        if not directed:
+            existing = existing.unionByName(
+                e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+            )
 
-        warnings.warn(
-            f"generate_negative_edges: only {got} of the requested {n} "
-            f"negative edges exist/were reachable (candidate stream "
-            f"exhausted at m={m}, |V|={V}); the graph is too small or too "
-            "dense for the target count",
-            stacklevel=2,
-        )
-    release_local_checkpoint(idx)
-    e.unpersist()
-    return result
+        def _first_n_survivors(m: int) -> DataFrame:
+            """First ``n`` non-edges by gen_i among candidates 0..m-1.
+
+            Because the candidate at index i depends only on (seed, i), a
+            larger m strictly EXTENDS the stream: the first-n-by-gen_i result
+            under m' > m agrees with the m result whenever the m result
+            already held n rows. So the retry loop below preserves the
+            deterministic semantic "first n survivors of the infinite seeded
+            stream" regardless of where it stops.
+            """
+            cand = (
+                spark.range(m)
+                .select(
+                    F.col("id").alias("gen_i"),
+                    F.pmod(portable_hash(seed, F.col("id")), F.lit(V)).alias("_sidx"),
+                    F.pmod(portable_hash(seed + 1, F.col("id")), F.lit(V)).alias("_didx"),
+                )
+                .filter(F.col("_sidx") != F.col("_didx"))
+            )
+            paired = (
+                cand.join(idx.select(F.col("idx").alias("_sidx"), F.col("id").alias("src")), "_sidx")
+                .join(idx.select(F.col("idx").alias("_didx"), F.col("id").alias("dst")), "_didx")
+                .select("src", "dst", "gen_i")
+            )
+            out = paired.join(existing.select("src", "dst"), ["src", "dst"], "left_anti")
+            if edges_to_exclude is not None:
+                out = out.join(
+                    edges_to_exclude.select("src", "dst"), ["src", "dst"], "left_anti"
+                )
+            return (
+                out.groupBy("src", "dst")
+                .agg(F.min("gen_i").alias("gen_i"))
+                .orderBy("gen_i")
+                .limit(n)
+            )
+
+        # Retry toward the target count like the reference's while-loop
+        # (link_prediction.py:51-77), but deterministically: double the stream
+        # prefix until n survivors exist or the stream is clearly exhausted
+        # relative to the pair space (dense/small graphs may have < n
+        # non-edges at all — then we return what exists and warn).
+        m = max(1, int(n * oversample))
+        max_m = 16 * max(m, V * V)  # collisions make hashed coverage sublinear
+        while True:
+            # TakeOrdered output is tiny (≤ n rows) and fully determined;
+            # materialize once, with the survivor count riding the
+            # checkpoint job as an observed metric (a separate count() ran a
+            # second job per retry round).
+            obs = Observation(f"negedge_round_{m}_{time.time_ns()}")
+            result = scope.checkpoint(
+                _first_n_survivors(m).observe(obs, F.count(F.lit(1)).alias("got"))
+            )
+            got = int(obs.get["got"] or 0)
+            if got >= n or m >= max_m:
+                break
+            scope.release(result)
+            m *= 2
+        if got < n:
+            import warnings
+
+            warnings.warn(
+                f"generate_negative_edges: only {got} of the requested {n} "
+                f"negative edges exist/were reachable (candidate stream "
+                f"exhausted at m={m}, |V|={V}); the graph is too small or too "
+                "dense for the target count",
+                stacklevel=2,
+            )
+        return scope.result(result)
 
 
 def _as_double(col: Column) -> Column:

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
+from bluegraph_spark.plans.loop import CacheScope
 
 
 def degree_centrality(
@@ -63,18 +64,18 @@ def degree_centrality(
 
 def density(edges: DataFrame, nodes: DataFrame | None = None, directed: bool = False) -> float:
     """m / (n(n-1)), doubled when undirected (reference core/io.py:610-615)."""
-    e = edges.select(F.col("src"), F.col("dst")).persist()
-    if nodes is None:
-        n = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
-            .count()
-        )
-    else:
-        n = nodes.select(nodes.columns[0]).distinct().count()
-    m = e.count()
-    e.unpersist()
+    with CacheScope() as scope:
+        e = scope.persist(edges.select(F.col("src"), F.col("dst")))
+        if nodes is None:
+            n = (
+                e.select(F.col("src").alias("id"))
+                .unionByName(e.select(F.col("dst").alias("id")))
+                .distinct()
+                .count()
+            )
+        else:
+            n = nodes.select(nodes.columns[0]).distinct().count()
+        m = e.count()
     if n < 2:
         return 0.0
     d = m / (n * (n - 1))

@@ -40,11 +40,10 @@ groupBy → two (broadcast) adjacency joins → array_intersect explode → coun
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from bluegraph_spark.plans.loop import CacheScope
 
 # Entries (= oriented edges) of the adjacency table below which it is
 # broadcast into the enumeration joins. 3M string entries is tens of MB
@@ -114,23 +113,17 @@ def _corner_table(o: DataFrame, oriented_rows: int) -> DataFrame:
     )
 
 
-@contextmanager
-def _corner_scope(edges: DataFrame) -> Iterator[tuple[DataFrame, DataFrame]]:
-    """Yield (canonical table, corner table) over cached intermediates.
+def _corners(scope: CacheScope, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(canonical table, corner table) over caches ``scope`` holds.
 
     The canonical and oriented tables are persisted, and the oriented one
     is counted (so the upstream edge expression runs once) before the
-    corner table is built. Both caches are released when the block exits,
-    normally or by an exception, so the block must materialize whatever it
-    returns.
+    corner table is built. The caller must materialize whatever it returns
+    before the scope exits.
     """
-    canon = _canonical(edges).persist()
-    o = _oriented(canon).persist()
-    try:
-        yield canon, _corner_table(o, o.count())
-    finally:
-        o.unpersist()
-        canon.unpersist()
+    canon = scope.persist(_canonical(edges))
+    o = scope.persist(_oriented(canon))
+    return canon, _corner_table(o, o.count())
 
 
 def triangle_counts(edges: DataFrame, nodes: DataFrame | None = None) -> DataFrame:
@@ -140,7 +133,8 @@ def triangle_counts(edges: DataFrame, nodes: DataFrame | None = None) -> DataFra
     ``localCheckpoint`` so every intermediate cache is released before
     returning.
     """
-    with _corner_scope(edges) as (canon, tri):
+    with CacheScope() as scope:
+        canon, tri = _corners(scope, edges)
         # single-pass corner explode: a 3-branch union would run the (dominant)
         # triangle-enumeration join three times — tri is deliberately not
         # cached, so fan-out = re-execution (see pgframe.symmetrize_edges)
@@ -164,10 +158,10 @@ def triangle_counts(edges: DataFrame, nodes: DataFrame | None = None) -> DataFra
         out = vertices.join(counts, "id", "left").select(
             "id", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles")
         )
-        return out.localCheckpoint()
+        return scope.result(scope.checkpoint(out))
 
 
 def triangle_count_global(edges: DataFrame) -> int:
     """Total number of distinct triangles in the graph."""
-    with _corner_scope(edges) as (_, tri):
-        return tri.count()
+    with CacheScope() as scope:
+        return _corners(scope, edges)[1].count()

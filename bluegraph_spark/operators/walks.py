@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from bluegraph_spark.pgframe import symmetrize_edges
-from bluegraph_spark.plans.stats_guard import stats_safe_local_checkpoint
+from bluegraph_spark.plans.loop import CacheScope
 
 #: 12 hex digits = 48 bits: the largest md5 prefix that stays exactly
 #: representable in a double (2^48 < 2^53), which the threshold arithmetic
@@ -92,58 +92,56 @@ def generate_random_walks(
     )
     if not directed:
         e = symmetrize_edges(e)
-    # parallel edges collapse additively (their probability mass adds)
-    nbr = e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
-    win = Window.partitionBy("src").orderBy("dst")
-    tot = Window.partitionBy("src")
-    nbr = (
-        nbr.select(
-            "src",
-            "dst",
-            "w",
-            F.sum("w").over(win).alias("cumw"),
-            F.sum("w").over(tot).alias("totw"),
+    with CacheScope() as scope:
+        # parallel edges collapse additively (their probability mass adds)
+        nbr = e.groupBy("src", "dst").agg(F.sum("w").alias("w"))
+        win = Window.partitionBy("src").orderBy("dst")
+        tot = Window.partitionBy("src")
+        nbr = scope.persist(
+            nbr.select(
+                "src",
+                "dst",
+                "w",
+                F.sum("w").over(win).alias("cumw"),
+                F.sum("w").over(tot).alias("totw"),
+            ).repartition(n_parts, "src")
         )
-        .repartition(n_parts, "src")
-        .persist()
-    )
-    nbr.count()
+        nbr.count()
 
-    if directed:
-        # directed sinks never appear as a neighbor-table src but still
-        # start (length-0) walks, so the vertex set needs both endpoints —
-        # one extra pass over the raw edge expression.
-        nodes = (
-            e.select(F.col("src").alias("id"))
-            .unionByName(e.select(F.col("dst").alias("id")))
-            .distinct()
+        if directed:
+            # directed sinks never appear as a neighbor-table src but still
+            # start (length-0) walks, so the vertex set needs both endpoints —
+            # one extra pass over the raw edge expression.
+            nodes = (
+                e.select(F.col("src").alias("id"))
+                .unionByName(e.select(F.col("dst").alias("id")))
+                .distinct()
+            )
+        else:
+            # symmetrized graph: every vertex is a src in the (cached) neighbor
+            # table — deriving the vertex set from it avoids re-executing the
+            # raw edge expression (often an expensive lazy co-occurrence join).
+            nodes = nbr.select(F.col("src").alias("id")).distinct()
+        reps = spark.range(walks_per_node).select(
+            F.col("id").cast("string").alias("_r")
         )
-    else:
-        # symmetrized graph: every vertex is a src in the (cached) neighbor
-        # table — deriving the vertex set from it avoids re-executing the
-        # raw edge expression (often an expensive lazy co-occurrence join).
-        nodes = nbr.select(F.col("src").alias("id")).distinct()
-    reps = spark.range(walks_per_node).select(
-        F.col("id").cast("string").alias("_r")
-    )
-    start = nodes.crossJoin(F.broadcast(reps)).select(
-        F.concat_ws(":", "id", "_r").alias("walk_id"), F.col("id").alias("cur")
-    )
+        start = nodes.crossJoin(F.broadcast(reps)).select(
+            F.concat_ws(":", "id", "_r").alias("walk_id"), F.col("id").alias("cur")
+        )
 
-    # Single-plan accumulation: the walk is carried as an array column and
-    # every step is a LEFT join whose condition embeds the interval test —
-    # exactly one neighbor matches a live walker (the intervals tile
-    # [0, totw)), none matches a dead one (cur NULL, or a directed sink),
-    # which freezes the path. The whole corpus then materializes in ONE
-    # job (plus the neighbor-table build) instead of one checkpoint job
-    # per step plus a union job — measured at sf0.1 (walks_parts):
-    # 8 jobs → 2, ~16.5s → single-digit. The per-step arithmetic and the
-    # emitted (walk_id, step, node) rows are identical to the stepwise
-    # form, so the cross-engine hash contract is unchanged.
-    state = start.select(
-        "walk_id", F.array("cur").alias("path"), F.col("cur")
-    )
-    try:
+        # Single-plan accumulation: the walk is carried as an array column and
+        # every step is a LEFT join whose condition embeds the interval test —
+        # exactly one neighbor matches a live walker (the intervals tile
+        # [0, totw)), none matches a dead one (cur NULL, or a directed sink),
+        # which freezes the path. The whole corpus then materializes in ONE
+        # job (plus the neighbor-table build) instead of one checkpoint job
+        # per step plus a union job — measured at sf0.1 (walks_parts):
+        # 8 jobs → 2, ~16.5s → single-digit. The per-step arithmetic and the
+        # emitted (walk_id, step, node) rows are identical to the stepwise
+        # form, so the cross-engine hash contract is unchanged.
+        state = start.select(
+            "walk_id", F.array("cur").alias("path"), F.col("cur")
+        )
         for t in range(1, walk_length + 1):
             # The step hash depends only on (walk_id, t): computing it on
             # the state side BEFORE the join runs one md5 per walker
@@ -172,11 +170,9 @@ def generate_random_walks(
                 .alias("path"),
                 F.col("n.dst").alias("cur"),
             )
-        out = stats_safe_local_checkpoint(
-            state.select(
-                "walk_id", F.posexplode("path").alias("step", "node")
+        return scope.result(
+            scope.checkpoint(
+                state.select("walk_id", F.posexplode("path").alias("step", "node"))
             )
         )
-    finally:
-        nbr.unpersist()
-    return out
+

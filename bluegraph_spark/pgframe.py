@@ -612,9 +612,11 @@ class SparkPGFrame:
                 "first or raise the gate explicitly"
             )
         from bluegraph_spark.operators.linkpred import node_index
+        from bluegraph_spark.plans.loop import CacheScope
 
-        idx = node_index(self._nodes.select("id"))
-        id_of = {r.id: r.idx + 1 for r in idx.collect()}
+        with CacheScope() as scope:
+            idx = scope.adopt(node_index(self._nodes.select("id")))
+            id_of = {r.id: r.idx + 1 for r in idx.collect()}
 
         edge_rows = []
         for r in self._edges.collect():

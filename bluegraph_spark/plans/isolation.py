@@ -11,20 +11,13 @@ query another driver thread plans concurrently.
 same SparkContext, same cache manager (persisted DataFrames and
 localCheckpoint blocks are shared), but an isolated SQLConf — so the loop
 can pin whatever it wants without the caller ever observing a changed conf.
-``rebind`` moves a DataFrame's logical plan between two sessions of the
-same context through a (transient) global temp view, the public
-cross-session plan-sharing surface.
+``rebind`` moves a DataFrame's analyzed plan between two sessions of the
+same context (Spark 4's classic ``Dataset.ofRows``).
 """
 
 from __future__ import annotations
 
-import itertools
-import time
-
-from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
-
-_counter = itertools.count()
 
 
 def loop_session(caller: SparkSession) -> SparkSession:
@@ -40,74 +33,35 @@ def loop_session(caller: SparkSession) -> SparkSession:
     context-global already).
     """
     s = caller.newSession()
-    try:
-        delta = caller._jsparkSession.sessionState().conf().getAllConfs()
-        it = delta.iterator()
-        while it.hasNext():
-            kv = it.next()
-            k, v = kv._1(), kv._2()
-            try:
-                if s.conf.isModifiable(k):
-                    s.conf.set(k, v)
-            except Exception:
-                continue
-    except Exception:
-        # JVM API drift: fall back to the confs the loops themselves read.
-        for k in (
-            "spark.sql.shuffle.partitions",
-            "spark.sql.adaptive.enabled",
-            "spark.sql.autoBroadcastJoinThreshold",
-        ):
-            s.conf.set(k, caller.conf.get(k))
+    delta = caller._jsparkSession.sessionState().conf().getAllConfs()
+    it = delta.iterator()
+    while it.hasNext():
+        kv = it.next()
+        k, v = kv._1(), kv._2()
+        try:
+            if s.conf.isModifiable(k):
+                s.conf.set(k, v)
+        except Exception:
+            continue
     return s
-
-
-def _of_rows(df: DataFrame, target: SparkSession) -> DataFrame:
-    """Primary rebind route: a Dataset over the SAME analyzed plan.
-
-    ``Dataset.ofRows`` lives at ``org.apache.spark.sql.classic.Dataset``
-    since Spark 4 (the package's floor).
-    """
-    jdf = target._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        target._jsparkSession, df._jdf.queryExecution().analyzed()
-    )
-    return DataFrame(jdf, target)
 
 
 def rebind(df: DataFrame, target: SparkSession) -> DataFrame:
     """Re-plan ``df`` onto ``target`` (a session of the same SparkContext).
 
-    Primary route: construct a Dataset over the SAME analyzed logical plan
-    (``Dataset.ofRows``) — the attribute ids are preserved exactly, which
-    matters downstream: a ``localCheckpoint`` captures its output
-    partitioning in terms of the physical attributes, and any re-aliasing
-    between plan and output (which a view introduces for every column)
-    can strand the captured partitioning on an attribute the optimizer
-    collapsed away — measured as two avoidable O(V) state shuffles per
-    PageRank superstep.
-
-    Fallback route (non-classic sessions / API drift): a transient GLOBAL
-    temp view. Classic Spark analyzes a Dataset eagerly at construction, so
-    the view only needs to exist for the ``target.table`` call; it is
-    dropped again before returning and nothing lingers in the catalog.
+    Constructs a Dataset over the SAME analyzed logical plan
+    (``Dataset.ofRows``, at ``org.apache.spark.sql.classic.Dataset`` since
+    Spark 4, the package's floor) — the attribute ids are preserved
+    exactly, which matters downstream: a ``localCheckpoint`` captures its
+    output partitioning in terms of the physical attributes, and any
+    re-aliasing between plan and output (which a view introduces for every
+    column) can strand the captured partitioning on an attribute the
+    optimizer collapsed away — measured as two avoidable O(V) state
+    shuffles per PageRank superstep.
     """
     if df.sparkSession._jsparkSession.equals(target._jsparkSession):
         return df
-    try:
-        return _of_rows(df, target)
-    except (TypeError, AttributeError, Py4JError) as exc:
-        # TypeError/AttributeError: the Dataset class is a JavaPackage stub
-        # (the API moved again); Py4JError: no matching method signature. A
-        # real JVM execution error (Py4JJavaError) propagates — masking it
-        # behind the fallback would silently change plan quality.
-        if isinstance(exc, Py4JJavaError):
-            raise
-
-    name = f"_bg_rebind_{next(_counter)}_{time.time_ns()}"
-    df.createOrReplaceGlobalTempView(name)
-    try:
-        out = target.table(f"global_temp.{name}")
-        out.schema  # defensive: guarantee the view is resolved into the plan
-    finally:
-        df.sparkSession.catalog.dropGlobalTempView(name)
-    return out
+    jdf = target._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        target._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, target)

@@ -1,4 +1,9 @@
-"""One shared superstep loop for the iterative operators.
+"""One cache scope for every operator, one superstep loop for the iterative ones.
+
+``CacheScope`` owns the caches and local checkpoints of one operator
+call and frees them on every exit path, except the checkpoints the
+operator's result still reads. One-shot operators use it directly on the
+caller's session; ``SuperstepLoop`` is a scope plus the loop parts below.
 
 Every iterative operator follows the same discipline (north rule):
 
@@ -12,8 +17,7 @@ Every iterative operator follows the same discipline (north rule):
   stats-guarded ``localCheckpoint``, with the superstep's progress metrics
   riding that one materialization job as observed metrics;
 - the superseded state's blocks are freed as soon as its successor exists,
-  and every cache and checkpoint the loop made is freed on every exit
-  path, except the checkpoints its result still reads.
+  and the rest on the scope's exit.
 
 ``SuperstepLoop`` owns all of that; an operator keeps only its round plan,
 its observed columns and its convergence test::
@@ -40,15 +44,13 @@ from __future__ import annotations
 import time
 from typing import Any, Callable, Iterator
 
+from py4j.java_gateway import JavaObject
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.isolation import loop_session, rebind
 from bluegraph_spark.plans.planinfo import executed_exchange_count
-from bluegraph_spark.plans.stats_guard import (
-    release_local_checkpoint,
-    stats_safe_local_checkpoint,
-)
+from bluegraph_spark.plans.stats_guard import stats_safe_local_checkpoint
 
 #: Default rows-per-partition budget for a loop's shuffle width
 #: (``SuperstepLoop.width``). Round plans are join/aggregation-heavy —
@@ -62,24 +64,112 @@ from bluegraph_spark.plans.stats_guard import (
 LOOP_ROWS_PER_PARTITION = 32_000
 
 
-def _checkpoint_rdd_ids(df: DataFrame) -> set[int]:
-    """Ids of the local-checkpoint RDDs ``df``'s plan reads."""
+def _checkpoint_rdds(df: DataFrame) -> dict[int, JavaObject]:
+    """The RDDs under ``df``'s ``LogicalRDD`` leaves, by RDD id: the local
+    checkpoints its plan reads (and any RDD-built input frame)."""
     leaves = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
-    out = set()
+    out = {}
     while leaves.hasNext():
         leaf = leaves.next()
         if leaf.getClass().getSimpleName() == "LogicalRDD":
-            out.add(leaf.rdd().id())
+            rdd = leaf.rdd()
+            out[rdd.id()] = rdd
     return out
 
 
-class SuperstepLoop:
+class CacheScope:
+    """Owner of the caches and local checkpoints one operator call makes.
+
+    Every operator, one-shot or iterative, persists and checkpoints through
+    a scope and never frees a block by hand::
+
+        with CacheScope() as scope:
+            sh = scope.persist(shingles)
+            out = scope.checkpoint(plan_over(sh))
+            return scope.result(out)
+
+    On exit, normal or by an exception, the scope unpersists every cache
+    it made and frees every checkpoint it holds, except the checkpoints
+    the ``result`` plan reads: those live as long as the result does.
+    Checkpoints are held by RDD id, so ``adopt`` hands a composite
+    operator the checkpoints an inner operator's result reads, and
+    ``release`` frees whatever a derived plan reads. The scope opens no
+    session: one-shot operators plan on the caller's session.
+
+    Freeing blocks here, at the moment they are known dead, beats leaving
+    them to the ContextCleaner, which frees an RDD only after a full GC
+    proves it unreachable (multi-second pauses on a large heap).
+    """
+
+    def __init__(self):
+        # id(df) -> df for caches; RDD id -> JVM RDD for checkpoints
+        self._caches: dict[int, DataFrame] = {}
+        self._checkpoints: dict[int, JavaObject] = {}
+        self._result: DataFrame | None = None
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, exc_type, exc, tb) -> None:
+        keep = {}
+        if exc_type is None and self._result is not None:
+            keep = _checkpoint_rdds(self._result)
+        for df in self._caches.values():
+            df.unpersist()
+        for rdd_id, rdd in self._checkpoints.items():
+            if rdd_id not in keep:
+                rdd.unpersist(False)
+        self._caches.clear()
+        self._checkpoints.clear()
+
+    def result(self, df: DataFrame) -> DataFrame:
+        """Mark ``df`` as the operator's result: the checkpoints it reads
+        survive the scope's exit."""
+        self._result = df
+        return df
+
+    def persist(self, df: DataFrame) -> DataFrame:
+        df = df.persist()
+        self._caches[id(df)] = df
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        """Stats-guarded ``localCheckpoint`` held by this scope."""
+        return self.adopt(stats_safe_local_checkpoint(df))
+
+    def adopt(self, df: DataFrame) -> DataFrame:
+        """Hold the checkpoints ``df`` reads, e.g. an inner operator's
+        result, so this scope frees them. ``df`` must not read a caller's
+        checkpoint."""
+        self._checkpoints.update(_checkpoint_rdds(df))
+        return df
+
+    def release(self, df: DataFrame | None) -> None:
+        """Free now a cache this scope made, or else every checkpoint it
+        holds that ``df``'s plan reads. The caller guarantees ``df`` is
+        never computed again. Anything else (a storage-checkpoint re-read,
+        a caller frame) is left alone."""
+        if df is None:
+            return
+        cached = self._caches.pop(id(df), None)
+        if cached is not None:
+            cached.unpersist()
+            return
+        for rdd_id in _checkpoint_rdds(df):
+            rdd = self._checkpoints.pop(rdd_id, None)
+            if rdd is not None:
+                rdd.unpersist(False)
+
+
+class SuperstepLoop(CacheScope):
     """Context manager for one run of an iterative operator (see module doc).
 
-    ``resume=True`` with a checkpointer loads the latest complete superstep
-    into ``state``, ``record`` and ``iteration`` at construction, before
-    any cache exists; ``converged`` then says whether that run had already
-    finished (its ``history`` is then the checkpointer's metrics log).
+    A ``CacheScope`` plus the loop's own session, width/freeze, resume and
+    superstep parts. ``resume=True`` with a checkpointer loads
+    the latest complete superstep into ``state``, ``record`` and
+    ``iteration`` at construction, before any cache exists; ``converged``
+    then says whether that run had already finished (its ``history`` is
+    then the checkpointer's metrics log).
     """
 
     def __init__(
@@ -88,6 +178,7 @@ class SuperstepLoop:
         checkpointer: SuperstepCheckpointer | None = None,
         resume: bool = False,
     ):
+        super().__init__()
         self.caller = caller
         self.spark = loop_session(caller)
         self.conf_parts = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
@@ -102,9 +193,6 @@ class SuperstepLoop:
         # state (pre-materialization), for the plan-guard tests
         self.plan: str | None = None
         self.exchanges: int | None = None
-        # id(df) -> (df, is_checkpoint): everything this loop must free
-        self._held: dict[int, tuple[DataFrame, bool]] = {}
-        self._result: DataFrame | None = None
         self._t0 = time.time()
         latest = checkpointer.latest() if resume and checkpointer is not None else None
         if latest is not None:
@@ -115,20 +203,6 @@ class SuperstepLoop:
             if self.converged:
                 self.history = checkpointer.metrics_log()
 
-    def __enter__(self) -> "SuperstepLoop":
-        return self
-
-    def __exit__(self, exc_type, exc, tb) -> None:
-        keep: set[int] = set()
-        if exc_type is None and self._result is not None:
-            keep = _checkpoint_rdd_ids(self._result)
-        for df, is_checkpoint in self._held.values():
-            if not is_checkpoint:
-                df.unpersist()
-            elif not keep or _checkpoint_rdd_ids(df).isdisjoint(keep):
-                release_local_checkpoint(df)
-        self._held.clear()
-
     # -- session -----------------------------------------------------------
 
     def bind(self, df: DataFrame | None) -> DataFrame | None:
@@ -138,31 +212,9 @@ class SuperstepLoop:
     def result(self, df: DataFrame) -> DataFrame:
         """Hand ``df`` back on the caller's session; the checkpoints it
         reads survive the loop's exit."""
-        self._result = df
-        return rebind(df, self.caller)
+        return rebind(super().result(df), self.caller)
 
-    # -- caches, width, freeze ---------------------------------------------
-
-    def persist(self, df: DataFrame) -> DataFrame:
-        df = df.persist()
-        self._held[id(df)] = (df, False)
-        return df
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        df = stats_safe_local_checkpoint(df)
-        self._held[id(df)] = (df, True)
-        return df
-
-    def release(self, df: DataFrame | None) -> None:
-        """Free a cache or checkpoint this loop made, now. Anything else
-        (a storage-checkpoint re-read, a caller frame) is left alone."""
-        held = self._held.pop(id(df), None)
-        if held is None:
-            return
-        if held[1]:
-            release_local_checkpoint(df)
-        else:
-            df.unpersist()
+    # -- width, freeze, edge cache -----------------------------------------
 
     def width(self, n_rows: int, rows_per_partition: int | None = None) -> int:
         """Shuffle width for ``n_rows`` state rows, capped by the caller's

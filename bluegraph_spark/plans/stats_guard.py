@@ -85,36 +85,3 @@ def stats_safe_local_checkpoint(
         return cached.select("*").localCheckpoint()
     finally:
         cached.unpersist()
-
-
-def release_local_checkpoint(df: DataFrame | None) -> bool:
-    """Explicitly drop a superseded localCheckpoint's storage blocks.
-
-    A superstep loop replaces its vertex-state checkpoint every iteration;
-    the previous iteration's blocks stay in the block manager until the
-    ContextCleaner notices the RDD is unreachable — which requires a full
-    GC (hence the session's ``spark.cleaner.periodicGC.interval`` pin).
-    On a large heap those forced full GCs are multi-second stop-the-world
-    pauses landing inside supersteps. The loops know *exactly* when a state
-    is dead (the moment its successor is materialized), so they free the
-    blocks deterministically instead of waiting for the GC to prove
-    unreachability.
-
-    Only a plan that IS a bare localCheckpoint result (analyzed plan =
-    ``LogicalRDD``) is touched; storage-checkpointer states (file-backed
-    relations) and anything still wrapped in projections no-op. Returns
-    whether blocks were released. Callers must guarantee the DataFrame is
-    never computed again — recomputing an unpersisted local checkpoint
-    raises, by design.
-    """
-    if df is None:
-        return False
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() != "LogicalRDD":
-            return False
-        plan.rdd().unpersist(False)
-        return True
-    except Exception:
-        # Py4J/API drift: leave the blocks to the periodic-GC route.
-        return False

@@ -3,11 +3,13 @@
 ``sc._jsc.getPersistentRDDs()`` lists persisted caches and local
 checkpoints alike. Around each call, its key set must gain nothing when a
 superstep fails mid-loop, and exactly the one checkpoint the result reads
-when the call succeeds. For the non-loop operators on the corpus path
-(triangles, the eager co-occurrence build) the session's CacheManager must
+when the call succeeds. For the one-shot operators the key set may gain
+only checkpoints the result reads, and the session's CacheManager must
 end empty too: a ``persist()`` that was never materialized registers there
 but never shows up in ``getPersistentRDDs()``.
 """
+
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,14 +20,28 @@ from bluegraph_spark.operators.cooccurrence import (
     cooccurrence_edges,
     occurrences_from_aggregator,
 )
+from bluegraph_spark.operators.dedup import (
+    jaccard_pairs,
+    minhash_band_index,
+    minhash_dedup_incremental,
+    minhash_dedup_pairs,
+)
 from bluegraph_spark.operators.embeddings import fastrp_embeddings
+from bluegraph_spark.operators.hierarchy import (
+    single_linkage_clusters,
+    single_linkage_dendrogram,
+)
+from bluegraph_spark.operators.linkpred import generate_negative_edges, node_index
 from bluegraph_spark.operators.louvain import louvain
 from bluegraph_spark.operators.lpa import label_propagation
+from bluegraph_spark.operators.metrics import density
 from bluegraph_spark.operators.mst import minimum_spanning_forest
 from bluegraph_spark.operators.pagerank import pagerank
 from bluegraph_spark.operators.paths import k_shortest_distances, shortest_paths
 from bluegraph_spark.operators.triangles import triangle_count_global, triangle_counts
+from bluegraph_spark.operators.walks import generate_random_walks
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
+from bluegraph_spark.plans.loop import _checkpoint_rdds
 
 N = 60
 
@@ -104,21 +120,79 @@ def test_success_keeps_only_the_result_checkpoint(spark, graph, op):
 
 
 @pytest.fixture(scope="module")
-def python_occurrences(spark):
-    """An occurrence table with a Python stage, so the build goes eager."""
-    df = spark.range(N).select(
+def inputs(spark, graph):
+    # an occurrence table with a Python stage, so the build goes eager
+    occ = spark.range(N).select(
         (F.col("id") % 12).alias("doc"), (F.col("id") % 7).cast("string").alias("tok")
     )
-    return occurrences_from_aggregator(df, "doc", lambda pdf: set(pdf["tok"]))
+    words = [f"w{i}" for i in range(20)]
+    # docs i and i + 6 share their text: every run has verified pairs
+    docs = spark.createDataFrame(
+        [(i, " ".join(words[i % 6 + j] for j in range(8))) for i in range(24)],
+        "id long, text string",
+    )
+    return SimpleNamespace(
+        graph=graph,
+        occ=occurrences_from_aggregator(occ, "doc", lambda pdf: set(pdf["tok"])),
+        docs=docs,
+        corpus=docs.filter("id < 16"),
+        batch=docs.filter("id >= 16"),
+    )
 
 
+# op -> (call, the method the failure test makes raise, which of its calls)
 NON_LOOP = {
-    "triangle_counts": lambda g, occ: triangle_counts(g),
-    "triangle_count_global": lambda g, occ: triangle_count_global(g),
-    "cooccurrence_eager": lambda g, occ: cooccurrence_edges(
-        occ, statistics=["frequency", "npmi"]
+    "triangle_counts": (lambda i: triangle_counts(i.graph), "localCheckpoint", [1]),
+    "triangle_count_global": (
+        lambda i: triangle_count_global(i.graph), "count", [2]
+    ),
+    "cooccurrence_eager": (
+        lambda i: cooccurrence_edges(i.occ, statistics=["frequency", "npmi"]),
+        "localCheckpoint", [1],
+    ),
+    "jaccard_pairs": (
+        lambda i: jaccard_pairs(i.docs, "id", "text"), "localCheckpoint", [1]
+    ),
+    "minhash_dedup_pairs": (
+        lambda i: minhash_dedup_pairs(i.docs, "id", "text"), "localCheckpoint", [1]
+    ),
+    "minhash_dedup_incremental": (
+        lambda i: minhash_dedup_incremental(
+            i.batch, i.corpus, minhash_band_index(i.corpus, "id", "text"),
+            "id", "text",
+        ),
+        "localCheckpoint", [1, 2],
+    ),
+    "node_index": (
+        lambda i: node_index(i.graph.select(F.col("src").alias("id"))),
+        "localCheckpoint", [1, 2],
+    ),
+    "generate_negative_edges": (
+        lambda i: generate_negative_edges(i.graph), "localCheckpoint", [1, 2]
+    ),
+    "density": (lambda i: density(i.graph), "count", [2]),
+    "generate_random_walks": (
+        lambda i: generate_random_walks(i.graph, walk_length=3),
+        "localCheckpoint", [1],
+    ),
+    "single_linkage_threshold": (
+        lambda i: single_linkage_clusters(i.graph, "w", threshold=2.0),
+        "localCheckpoint", [1, 2],
+    ),
+    "single_linkage_n_clusters": (
+        lambda i: single_linkage_clusters(i.graph, "w", n_clusters=3),
+        "localCheckpoint", [1, 2],
+    ),
+    "single_linkage_dendrogram": (
+        lambda i: single_linkage_dendrogram(i.graph, "w"), "localCheckpoint", [1, 2]
     ),
 }
+# the first failure case of each op keeps the bare op name as its id
+FAILURES = [
+    pytest.param(op, method, nth, id=op if k == 0 else f"{op}-{method}-{nth}")
+    for op, (_, method, nths) in NON_LOOP.items()
+    for k, nth in enumerate(nths)
+]
 
 
 @pytest.fixture()
@@ -129,29 +203,27 @@ def empty_cache(spark):
 
 @pytest.mark.parametrize("op", list(NON_LOOP))
 def test_non_loop_success_keeps_only_the_result_checkpoint(
-    spark, graph, python_occurrences, empty_cache, op
+    spark, inputs, empty_cache, op
 ):
     before = _persistent(spark)
-    res = NON_LOOP[op](graph, python_occurrences)
+    res = NON_LOOP[op][0](inputs)
     kept = _persistent(spark) - before
     assert empty_cache.isEmpty()
-    if op == "triangle_count_global":
+    out = getattr(res, "labels", res)
+    if not hasattr(out, "collect"):  # a scalar result reads nothing
         assert kept == set()
     else:
-        assert len(kept) == 1
-        assert res.count() > 0  # the kept checkpoint is the one the result reads
+        assert kept and kept <= set(_checkpoint_rdds(out))
+        assert out.count() > 0  # the kept checkpoints are the ones it reads
 
 
-@pytest.mark.parametrize("op", list(NON_LOOP))
+@pytest.mark.parametrize("op, method, nth", FAILURES)
 def test_non_loop_failure_leaks_nothing(
-    spark, graph, python_occurrences, empty_cache, monkeypatch, op
+    spark, inputs, empty_cache, monkeypatch, op, method, nth
 ):
-    if op == "triangle_count_global":
-        _raise_on_call(monkeypatch, "count", 2)
-    else:
-        _raise_on_call(monkeypatch, "localCheckpoint", 1)
+    _raise_on_call(monkeypatch, method, nth)
     before = _persistent(spark)
     with pytest.raises(RuntimeError, match="injected failure"):
-        NON_LOOP[op](graph, python_occurrences)
+        NON_LOOP[op][0](inputs)
     assert _persistent(spark) - before == set()
     assert empty_cache.isEmpty()
