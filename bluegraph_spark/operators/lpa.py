@@ -92,9 +92,7 @@ def label_propagation(
             partitions,
         )
 
-        if loop.state is not None:
-            labels = loop.state
-        else:
+        if loop.state is None:
             # Vertex set from the CSR cache, NOT from the raw edges: a
             # vertices plan rooted on the dropped raw cache would silently
             # re-execute the full (possibly expensive) upstream edge
@@ -114,17 +112,16 @@ def label_propagation(
                     vertices = nodes.select(
                         F.col(first).cast(id_type).alias("id")
                     ).distinct()
-            base = vertices.repartition(loop.n_parts, "id")
-            if checkpointer is not None:
-                labels = loop.start(base.withColumn("label", F.col("id")))
-            else:
-                # Checkpoint the single-column vertex set and add label = id
-                # as a lazy projection ABOVE the scan: checkpointing (id, id
-                # AS label) lets the optimizer express the captured
-                # partitioning through the label alias instead of id, which
-                # strands both superstep joins on an unusable clustering
-                # (measured: +2 exchanges on superstep 1).
-                labels = loop.start(base).withColumn("label", F.col("id"))
+            # Checkpoint the single-column vertex set; label = id is added
+            # below as a lazy projection ABOVE the scan: checkpointing (id,
+            # id AS label) lets the optimizer express the captured
+            # partitioning through the label alias instead of id, which
+            # strands both superstep joins on an unusable clustering
+            # (measured: +2 exchanges on superstep 1).
+            loop.start(vertices.repartition(loop.n_parts, "id"))
+        labels = loop.state
+        if "label" not in labels.columns:  # iteration 0, fresh or resumed
+            labels = labels.withColumn("label", F.col("id"))
 
         for _ in loop.supersteps(max_iter):
             scores = (

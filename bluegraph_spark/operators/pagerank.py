@@ -17,11 +17,12 @@ Scale design:
 - the normalized edge table is computed once, hash-partitioned by ``src``
   and persisted — each superstep joins it with the (much smaller) rank
   state without re-shuffling the big side;
-- each superstep materializes vertex state through
-  ``SuperstepCheckpointer`` (lineage cut + resumability, north rule) and
-  runs exactly one extra aggregation job, grouped by
-  ``spark_partition_id`` so the L1 error, the next dangling sum, and the
-  per-partition lineage all come out of a single pass;
+- each superstep materializes vertex state once, through the loop's
+  stats-guarded ``localCheckpoint`` (lineage cut); the L1 error and the
+  next dangling sum ride that job as observed metrics. A
+  ``SuperstepCheckpointer`` adds one job that writes those blocks
+  (resumability, north rule) and takes the per-partition lineage from
+  that write's task metrics;
 - hub skew in ``groupBy(dst)`` is absorbed by map-side partial aggregation
   (sum is algebraic) plus AQE; no per-key salting is needed for an
   algebraic aggregate.

@@ -1,27 +1,26 @@
 """Per-superstep vertex-state checkpointing with lineage + metrics + resume.
 
 The superstep loops (``plans/loop.py``: PageRank, connected components,
-LPA, SSSP, k-shortest distances and Louvain's local-move rounds) take an
-optional checkpointer and materialize their state each superstep through
-this class:
+LPA, SSSP, k-shortest distances and Louvain's local-move rounds) cut each
+superstep's lineage with one stats-guarded ``localCheckpoint``, with or
+without a checkpointer (without the cut the logical plan grows by two joins
+per iteration and the job eventually dies in the planner, SURVEY.md §4.1).
+A checkpointer then writes those blocks to storage, one job and no
+recompute:
 
-1. it cuts lineage — without it the logical plan grows by two joins per
-   iteration and the job eventually dies in the planner (SURVEY.md §4.1);
-2. it makes runs resumable after executor/driver loss: the loop continues
-   from the last complete iteration (north rule);
-3. it records per-iteration metrics and per-partition lineage rows (row
-   counts per written partition) so progress is observable.
+1. it makes runs resumable after executor/driver loss: the loop continues
+   from the last complete iteration (north rule). Only resume reads the
+   files; the next superstep reads the local checkpoint, whose captured
+   hash partitioning keeps its joins exchange-free. A lost local checkpoint
+   fails the run instead of recomputing it: rerun with ``resume=True``;
+2. it records per-iteration metrics and per-partition lineage rows (rows
+   per written partition, taken from the write's own task metrics, so no
+   job re-reads the files) so progress is observable. Data-source-V2
+   formats (Iceberg) report no ``recordsWritten`` from Spark's write task,
+   so their lineage rows read 0.
 
 The reference has no analogue (NetworkX/graph-tool iterate in-process); this
 is engine-side driver code, not a Catalyst extension.
-
-Plan note: a storage checkpoint is re-READ from an unbucketed table, so the
-returned DataFrame carries no partitioning info and the next superstep's
-joins re-cluster the (small, O(V)) vertex state — a durability tax the
-``localCheckpoint`` path does not pay (its scans preserve the captured
-hash partitioning; see the plan-guard tests). On a cluster, bucketed
-checkpoint tables (Iceberg bucket partition transform + storage-partitioned
-joins) remove the tax; the sandbox has no catalog to exercise that.
 
 Storage layout (``format`` defaults to parquet; on a cluster with an Iceberg
 catalog pass ``table_format="iceberg"`` and a catalog path — the sandbox has
@@ -46,10 +45,10 @@ import json
 import os
 import shutil
 import time
+import uuid
 from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 class SuperstepCheckpointer:
@@ -80,42 +79,33 @@ class SuperstepCheckpointer:
         iteration: int,
         state: DataFrame,
         metrics: dict[str, Any] | Callable[[], dict[str, Any]] | None = None,
-    ) -> DataFrame:
-        """Write vertex state + metrics; return the re-read (lineage-free) DF.
-
-        The returned DataFrame reads from storage, so downstream supersteps
-        build plans on a fresh scan instead of the whole iteration history.
-        ``metrics`` may be a zero-argument callable: it is evaluated after
-        the write and lineage jobs, so metrics observed on ``state`` go
-        into the one metrics JSON this call writes.
+    ) -> None:
+        """Write vertex state + metrics. ``state`` should be materialized
+        (the loop passes its local checkpoint), so the write recomputes
+        nothing. ``metrics`` may be a zero-argument callable: it is
+        evaluated after the write, so metrics observed on ``state`` go into
+        the one metrics JSON this call writes.
         """
         path = self.data_path(iteration)
+        sc = state.sparkSession.sparkContext
+        # A job tag (not a job group, which a caller's tracer may own)
+        # marks the write so its task metrics give the lineage.
+        tag = f"bluegraph-checkpoint-{uuid.uuid4().hex}"
         t0 = time.time()
-        state.write.mode("overwrite").format(self.data_format).save(path)
-        write_sec = time.time() - t0
-        spark = state.sparkSession
-        reread = spark.read.format(self.data_format).load(path)
-
+        sc.addJobTag(tag)
+        try:
+            state.write.mode("overwrite").format(self.data_format).save(path)
+        finally:
+            sc.removeJobTag(tag)
         record: dict[str, Any] = {
             "iteration": iteration,
             "wall_clock_utc": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "write_sec": round(write_sec, 4),
+            "write_sec": round(time.time() - t0, 4),
             "path": path,
+            "lineage": _rows_written(sc, tag),
         }
-        lineage = (
-            reread.groupBy(F.spark_partition_id().alias("partition"))
-            .agg(F.count("*").alias("rows"))
-            .orderBy("partition")
-            .collect()
-        )
-        record["lineage"] = [
-            {"partition": r["partition"], "rows": r["rows"]} for r in lineage
-        ]
-        record["total_rows"] = int(sum(r["rows"] for r in lineage))
-        if callable(metrics):
-            metrics = metrics()
-        if metrics:
-            record.update(metrics)
+        record["total_rows"] = sum(p["rows"] for p in record["lineage"])
+        record.update((metrics() if callable(metrics) else metrics) or {})
         tmp = self.metrics_path(iteration) + ".tmp"
         with open(tmp, "w") as f:
             json.dump(record, f)
@@ -124,7 +114,6 @@ class SuperstepCheckpointer:
         if self.keep_last is not None:
             for it in self.iterations()[: -self.keep_last]:
                 shutil.rmtree(self.data_path(it), ignore_errors=True)
-        return reread
 
     # -- read / resume -----------------------------------------------------
 
@@ -166,3 +155,23 @@ class SuperstepCheckpointer:
 
     def metrics_log(self) -> list[dict[str, Any]]:
         return [self.load_metrics(i) for i in self.iterations()]
+
+
+def _rows_written(sc, tag: str) -> list[dict[str, int]]:
+    """Rows per written partition: each successful task's
+    ``recordsWritten`` in the result stage of the last job that the
+    SparkContext ``sc`` ran under ``tag`` (a result stage has the highest
+    stage id of its job)."""
+    jsc = sc._jsc.sc()
+    # the status store is fed by the asynchronous listener bus
+    jsc.listenerBus().waitUntilEmpty(10_000)
+    store = jsc.statusStore()
+    seq = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+    job = store.job(max(jsc.statusTracker().getJobIdsForTag(tag)))
+    stage = store.lastStageAttempt(max(seq(job.stageIds())))
+    rows = {
+        t.index(): t.taskMetrics().get().outputMetrics().recordsWritten()
+        for t in seq(store.taskList(stage.stageId(), stage.attemptId(), 2**31 - 1))
+        if t.status() == "SUCCESS"
+    }
+    return [{"partition": i, "rows": rows[i]} for i in sorted(rows)]

@@ -12,10 +12,11 @@ Every iterative operator follows the same discipline (north rule):
 - it builds a CSR-blocked edge cache (hash-partitioned and sorted on the
   join key, persisted once), sizes the shuffle width from the measured row
   count, and then freezes AQE for its fixed-shape round plans;
-- each superstep's vertex state is materialized through the
-  ``SuperstepCheckpointer`` (lineage cut, metrics, resume) or a
-  stats-guarded ``localCheckpoint``, with the superstep's progress metrics
-  riding that one materialization job as observed metrics;
+- each superstep's vertex state is materialized once, through a
+  stats-guarded ``localCheckpoint`` (the lineage cut), with the
+  superstep's progress metrics riding that one job as observed metrics;
+  a ``SuperstepCheckpointer`` then writes those blocks to storage with
+  the metrics and lineage (resume);
 - the superseded state's blocks are freed as soon as its successor exists,
   and the rest on the scope's exit.
 
@@ -36,7 +37,9 @@ its observed columns and its convergence test::
 A superstep's record (``iteration``, ``superstep_sec`` and the operator's
 ``fields``) is appended to ``loop.history`` and, with a checkpointer,
 written once as that superstep's metrics JSON after its observed metrics
-are known: a checkpoint with a metrics file is a finished superstep.
+are known: a checkpoint with a metrics file is a finished superstep. A
+resumed loop starts from that superstep's files; only its first superstep
+re-clusters the scan, later ones read local checkpoints.
 """
 
 from __future__ import annotations
@@ -147,7 +150,7 @@ class CacheScope:
     def release(self, df: DataFrame | None) -> None:
         """Free now a cache this scope made, or else every checkpoint it
         holds that ``df``'s plan reads. The caller guarantees ``df`` is
-        never computed again. Anything else (a storage-checkpoint re-read,
+        never computed again. Anything else (a resumed state's file scan,
         a caller frame) is left alone."""
         if df is None:
             return
@@ -270,11 +273,10 @@ class SuperstepLoop(CacheScope):
         state: DataFrame,
         *observed: Column,
         fields: Callable[[dict], dict] = lambda m: {},
-    ) -> DataFrame:
-        """Materialize the iteration-0 state; returns it (also ``state``)."""
+    ) -> None:
+        """Materialize the iteration-0 state into ``state``."""
         self._t0 = time.time()
         self._commit(state, observed, fields)
-        return self.state
 
     def supersteps(self, max_iter: int) -> Iterator[int]:
         """Superstep numbers after the last committed one, up to
@@ -322,11 +324,11 @@ class SuperstepLoop(CacheScope):
             )
             return rec
 
-        if self.checkpointer is not None:
-            new = self.checkpointer.save(self.iteration, df, record)
-        else:
-            new = self.checkpoint(df)
+        new = self.checkpoint(df)
+        if self.checkpointer is None:
             record()
+        else:
+            self.checkpointer.save(self.iteration, new, record)
         self.release(self.state)
         self.state = new
         self.record = rec

@@ -28,8 +28,8 @@ exchange-free superstep joins depend on it) survives both paths: the
 cached plan reports the child's hash partitioning through
 ``InMemoryTableScan``, and the checkpoint captures it as before.
 
-The storage checkpointer (plans/checkpoint.py) is naturally immune — it
-re-reads from files, whose stats are measured sizes.
+Every superstep passes this guard, with or without a storage checkpointer
+(plans/checkpoint.py writes the guarded checkpoint's blocks).
 """
 
 from __future__ import annotations

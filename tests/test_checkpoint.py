@@ -32,11 +32,20 @@ def test_partial_write_is_invisible(spark, tmp_path):
 
 def test_metrics_and_lineage_recorded(spark, tmp_path):
     cp = SuperstepCheckpointer(str(tmp_path), "r")
-    cp.save(1, spark.range(10).select(F.col("id")), metrics={"err": 0.5})
+    state = spark.range(1000).repartition(5, "id").localCheckpoint()
+    cp.save(1, state, metrics={"err": 0.5})
     rec = cp.load_metrics(1)
     assert rec["iteration"] == 1 and rec["err"] == 0.5
-    assert rec["total_rows"] == 10
-    assert sum(p["rows"] for p in rec["lineage"]) == 10
+    assert rec["total_rows"] == 1000
+    # lineage is rows per WRITTEN partition (file packing may merge them
+    # on a re-read, so a scan of the files cannot give it)
+    per_partition = (
+        state.groupBy(F.spark_partition_id().alias("p")).count().collect()
+    )
+    assert rec["lineage"] == [
+        {"partition": r["p"], "rows": r["count"]}
+        for r in sorted(per_partition)
+    ]
 
 
 def test_keep_last_prunes_old_state(spark, tmp_path):
@@ -51,9 +60,9 @@ def test_keep_last_prunes_old_state(spark, tmp_path):
 def test_roundtrip_preserves_rows(spark, tmp_path):
     cp = SuperstepCheckpointer(str(tmp_path), "r")
     df = spark.range(100).select(F.col("id"), (F.col("id") * 2.0).alias("rank"))
-    back = cp.save(7, df)
-    assert back.count() == 100
+    cp.save(7, df)
     reloaded = cp.load(spark, 7)
+    assert reloaded.count() == 100
     assert {r["id"] for r in reloaded.collect()} == set(range(100))
 
 
@@ -63,8 +72,8 @@ def test_format_matrix_roundtrip_and_completeness(spark, tmp_path, fmt):
     completeness/resume contract — data_format is not a parquet-only flag."""
     cp = SuperstepCheckpointer(str(tmp_path), "r", data_format=fmt)
     df = spark.range(20).select(F.col("id"), (F.col("id") * 1.5).alias("rank"))
-    back = cp.save(1, df, metrics={"err": 0.1})
-    assert back.count() == 20
+    cp.save(1, df, metrics={"err": 0.1})
+    assert cp.load(spark, 1).count() == 20
     assert cp.latest() == 1
     got = {(r["id"], r["rank"]) for r in cp.load(spark, 1).collect()}
     assert got == {(i, i * 1.5) for i in range(20)}
@@ -95,9 +104,13 @@ def test_iceberg_checkpoint_contract(spark, tmp_path):
         )
     cp = SuperstepCheckpointer(str(tmp_path), "r", data_format="iceberg")
     df = spark.range(20).select(F.col("id"), (F.col("id") * 1.5).alias("rank"))
-    back = cp.save(1, df, metrics={"err": 0.1})
-    assert back.count() == 20
+    cp.save(1, df, metrics={"err": 0.1})
+    assert cp.load(spark, 1).count() == 20
     assert cp.latest() == 1
+    # lineage comes from the write's task metrics; Spark's data-source-V2
+    # write tasks report no recordsWritten, so only the sum is checked
+    rec = cp.load_metrics(1)
+    assert sum(p["rows"] for p in rec["lineage"]) == rec["total_rows"]
     # a metadata-less table dir (killed before the metadata commit) is
     # incomplete even if data files exist
     os.makedirs(os.path.join(cp.data_path(2), "data"))

@@ -110,10 +110,14 @@ def test_failing_local_checkpoint_leaks_nothing(spark, graph, monkeypatch, op):
     assert _persistent(spark) - before == set()
 
 
-@pytest.mark.parametrize("op", ONE_RESULT_CHECKPOINT)
-def test_success_keeps_only_the_result_checkpoint(spark, graph, op):
+@pytest.mark.parametrize(
+    "op, stored",
+    [pytest.param(op, False, id=op) for op in ONE_RESULT_CHECKPOINT]
+    + [pytest.param(op, True, id=f"{op}-checkpointer") for op in ONE_RESULT_CHECKPOINT],
+)
+def test_success_keeps_only_the_result_checkpoint(spark, graph, tmp_path, op, stored):
     before = _persistent(spark)
-    res = RUNS[op](graph, None)
+    res = RUNS[op](graph, SuperstepCheckpointer(str(tmp_path), op) if stored else None)
     assert len(_persistent(spark) - before) == 1
     out = next(v for v in vars(res).values() if hasattr(v, "collect"))
     assert out.count() > 0  # the kept checkpoint is the one the result reads

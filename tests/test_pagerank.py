@@ -140,6 +140,31 @@ def test_resume_when_only_iteration_zero_is_complete(spark, tmp_path):
     _assert_same_ranks(full, resumed)
 
 
+def test_lpa_resume_when_only_iteration_zero_is_complete(spark, tmp_path):
+    """LPA checkpoints its iteration-0 state as ids only (label = id is a
+    projection above it); a resume from there restores the labels."""
+    from bluegraph_spark.operators.lpa import label_propagation
+
+    edges = nx_to_edges_df(spark, karate(), weight="strength")
+    full = label_propagation(edges, weight_col="strength", max_iter=10)
+
+    killed = KilledCheckpointer(str(tmp_path), "run", kill_at=1)
+    with pytest.raises(RuntimeError, match="killed in superstep 1"):
+        label_propagation(
+            edges, weight_col="strength", max_iter=10, checkpointer=killed
+        )
+    cp = SuperstepCheckpointer(str(tmp_path), "run")
+    assert cp.latest() == 0
+
+    resumed = label_propagation(
+        edges, weight_col="strength", max_iter=10, checkpointer=cp, resume=True
+    )
+    assert (resumed.iterations, resumed.converged) == (full.iterations, full.converged)
+    assert sorted(map(tuple, resumed.labels.collect())) == sorted(
+        map(tuple, full.labels.collect())
+    )
+
+
 def test_resume_from_pending_placeholder_record(spark, tmp_path):
     """A complete state whose metrics record is only the placeholder an
     older writer left between the state write and the metrics update."""

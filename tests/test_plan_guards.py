@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from bluegraph_spark.operators.lpa import label_propagation
 from bluegraph_spark.operators.pagerank import pagerank
+from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 
 
 @pytest.fixture(scope="module")
@@ -38,8 +39,18 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
 
 
-def test_pagerank_superstep_is_single_exchange(graph, no_broadcast):
-    res = pagerank(graph, weight_col="w", tol=0.0, max_iter=2, partitions=4)
+@pytest.fixture(params=["local", "checkpointer"])
+def checkpointer(request, tmp_path):
+    """Both ways a loop can run: a storage checkpointer writes the same
+    local checkpoint the loop reads on, so the budget is the same."""
+    return SuperstepCheckpointer(str(tmp_path)) if request.param == "checkpointer" else None
+
+
+def test_pagerank_superstep_is_single_exchange(graph, no_broadcast, checkpointer):
+    res = pagerank(
+        graph, weight_col="w", tol=0.0, max_iter=2, partitions=4,
+        checkpointer=checkpointer,
+    )
     assert res.superstep_exchanges == 1, res.superstep_plan
     # the CSR-blocked edge cache is read through InMemoryTableScan (its
     # partitioning/ordering is what makes the join exchange-free)
@@ -70,11 +81,14 @@ def test_cc_round_exchange_budget(spark, no_broadcast):
     assert res.round_plan.count("InMemoryTableScan") >= 2
 
 
-def test_lpa_superstep_exchange_budget(graph, no_broadcast):
+def test_lpa_superstep_exchange_budget(graph, no_broadcast, checkpointer):
     # superstep 1 runs on labels ≡ ids, which lets the planner elide the
     # scores exchange through the alias equivalence: budget is 1 there and
     # at most 2 on later supersteps — guard the snapshot at 1
-    res = label_propagation(graph, weight_col="w", max_iter=2, partitions=4)
+    res = label_propagation(
+        graph, weight_col="w", max_iter=2, partitions=4,
+        checkpointer=checkpointer,
+    )
     assert res.superstep_exchanges == 1, res.superstep_plan
     assert "InMemoryTableScan" in res.superstep_plan
     plan = res.superstep_plan
