@@ -21,7 +21,7 @@ pipeline --corpus ... --output ...``. Subcommands:
   triangles   edge table -> (id, triangles)
   sssp        edge table -> (id, dist)         [checkpointed, resumable]
   kshortest   edge table -> (id, rank, dist)   [checkpointed, resumable]
-  louvain     edge table -> (id, community)
+  louvain     edge table -> (id, community)    [checkpointed]
   mst         edge table -> spanning-forest edges
   fastrp      edge table -> (id, emb)          deterministic embeddings
   walks       edge table -> (walk_id, step, node) deterministic corpus
@@ -48,15 +48,33 @@ def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--shuffle-partitions", type=int, default=None)
 
 
-def _add_iterative(p: argparse.ArgumentParser) -> None:
+def _add_edges(p: argparse.ArgumentParser, weight: bool = True,
+               directed: bool = False) -> None:
     p.add_argument("--edges", required=True, help="edge table path (src, dst[, weight])")
-    p.add_argument("--weight-col", default=None)
+    if weight:
+        p.add_argument("--weight-col", default=None)
+    if directed:
+        p.add_argument("--directed", action="store_true")
+
+
+def _add_checkpoint(p: argparse.ArgumentParser, resume: bool = True) -> None:
     p.add_argument("--checkpoint-dir", default=None,
                    help="superstep checkpoint base dir (enables resume)")
     p.add_argument("--run-id", default="run")
-    p.add_argument("--resume", action="store_true",
-                   help="continue from the latest complete superstep")
-    p.add_argument("--directed", action="store_true")
+    if resume:
+        p.add_argument("--resume", action="store_true",
+                       help="continue from the latest complete superstep")
+
+
+class _Parser(argparse.ArgumentParser):
+    """Rejects ``--resume`` without ``--checkpoint-dir`` (nothing to resume
+    from) instead of silently starting a fresh run."""
+
+    def parse_known_args(self, args=None, namespace=None):
+        ns, rest = super().parse_known_args(args, namespace)
+        if getattr(ns, "resume", False) and ns.checkpoint_dir is None:
+            self.error("--resume requires --checkpoint-dir")
+        return ns, rest
 
 
 def _session(args):
@@ -66,7 +84,7 @@ def _session(args):
 
 
 def _checkpointer(args):
-    if getattr(args, "checkpoint_dir", None) is None:
+    if args.checkpoint_dir is None:
         return None
     from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 
@@ -393,7 +411,7 @@ def cmd_pipeline(args) -> dict:
 
 
 def build_parser() -> argparse.ArgumentParser:
-    ap = argparse.ArgumentParser(prog="bluegraph_spark")
+    ap = _Parser(prog="bluegraph_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
     p = sub.add_parser("ingest")
@@ -417,7 +435,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.set_defaults(fn=cmd_cooc)
 
     p = sub.add_parser("pagerank")
-    _add_iterative(p)
+    _add_edges(p, directed=True)
+    _add_checkpoint(p)
     p.add_argument("--alpha", type=float, default=0.85)
     p.add_argument("--tol", type=float, default=1e-6)
     p.add_argument("--max-iter", type=int, default=100)
@@ -425,42 +444,46 @@ def build_parser() -> argparse.ArgumentParser:
     p.set_defaults(fn=cmd_pagerank)
 
     p = sub.add_parser("components")
-    _add_iterative(p)
+    _add_edges(p, weight=False)
+    _add_checkpoint(p)
     _add_common(p)
     p.set_defaults(fn=cmd_components)
 
     p = sub.add_parser("lpa")
-    _add_iterative(p)
+    _add_edges(p)
+    _add_checkpoint(p)
     p.add_argument("--max-iter", type=int, default=20)
     _add_common(p)
     p.set_defaults(fn=cmd_lpa)
 
     p = sub.add_parser("triangles")
-    _add_iterative(p)
+    _add_edges(p, weight=False)
     _add_common(p)
     p.set_defaults(fn=cmd_triangles)
 
     p = sub.add_parser("louvain")
-    _add_iterative(p)
+    _add_edges(p)
+    _add_checkpoint(p, resume=False)
     p.add_argument("--max-levels", type=int, default=3)
     p.add_argument("--max-rounds", type=int, default=20)
     _add_common(p)
     p.set_defaults(fn=cmd_louvain)
 
     p = sub.add_parser("sssp")
-    _add_iterative(p)
+    _add_edges(p, directed=True)
+    _add_checkpoint(p)
     p.add_argument("--source", required=True)
     p.add_argument("--max-iter", type=int, default=50)
     _add_common(p)
     p.set_defaults(fn=cmd_sssp)
 
     p = sub.add_parser("mst")
-    _add_iterative(p)
+    _add_edges(p)
     _add_common(p)
     p.set_defaults(fn=cmd_mst)
 
     p = sub.add_parser("fastrp")
-    _add_iterative(p)
+    _add_edges(p, directed=True)
     p.add_argument("--dim", type=int, default=16)
     p.add_argument("--weights", default="1.0,1.0",
                    help="comma-separated per-iteration weights")
@@ -469,7 +492,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.set_defaults(fn=cmd_fastrp)
 
     p = sub.add_parser("kshortest")
-    _add_iterative(p)
+    _add_edges(p, directed=True)
+    _add_checkpoint(p)
     p.add_argument("--source", required=True)
     p.add_argument("--k", type=int, default=3)
     p.add_argument("--max-iter", type=int, default=50)
@@ -477,14 +501,14 @@ def build_parser() -> argparse.ArgumentParser:
     p.set_defaults(fn=cmd_kshortest)
 
     p = sub.add_parser("hierarchy")
-    _add_iterative(p)
+    _add_edges(p)
     p.add_argument("--n-clusters", type=int, default=None)
     p.add_argument("--threshold", type=float, default=None)
     _add_common(p)
     p.set_defaults(fn=cmd_hierarchy)
 
     p = sub.add_parser("walks")
-    _add_iterative(p)
+    _add_edges(p, directed=True)
     p.add_argument("--walk-length", type=int, default=10)
     p.add_argument("--walks-per-node", type=int, default=1)
     p.add_argument("--seed", type=int, default=42)
@@ -529,9 +553,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--factor-freq-cap", type=int, default=None)
     p.add_argument("--salt", type=int, default=None)
     p.add_argument("--top-n-nodes", type=int, default=None)
-    p.add_argument("--checkpoint-dir", default=None)
-    p.add_argument("--run-id", default="run")
-    p.add_argument("--resume", action="store_true")
+    _add_checkpoint(p)
     _add_common(p)
     p.set_defaults(fn=cmd_pipeline)
 

@@ -36,6 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bluegraph_spark.pgframe import vertex_ids
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -190,13 +191,9 @@ def _component_labels(
     )
     comp = members.unionByName(roots)
     if nodes is not None:
-        id_type = dict(edges.dtypes).get("src", "string")
-        vs = nodes.select(
-            F.col(nodes.columns[0]).cast(id_type).alias("id")
-        ).distinct()
-        isolated = vs.join(comp.select("id"), "id", "left_anti").withColumn(
-            "component", F.col("id")
-        )
+        isolated = vertex_ids(nodes, edges).join(
+            comp.select("id"), "id", "left_anti"
+        ).withColumn("component", F.col("id"))
         comp = comp.unionByName(isolated)
     # a node can appear in members only once at convergence; distinct
     # guards the non-converged (max_rounds hit) case

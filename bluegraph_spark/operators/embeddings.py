@@ -54,12 +54,12 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.operators.linkpred import portable_hash
+from bluegraph_spark.operators.linkpred import QUANTUM, portable_hash
 from bluegraph_spark.pgframe import symmetrize_edges
 from bluegraph_spark.plans.loop import SuperstepLoop
 
 
-def _l2_normalize(df: DataFrame, quantize: int) -> DataFrame:
+def _l2_normalize(df: DataFrame) -> DataFrame:
     """Per-node L2 normalization of the ``emb`` array, quantized.
 
     ``sqrt`` and the divide are IEEE-exact given their inputs, so the only
@@ -73,7 +73,7 @@ def _l2_normalize(df: DataFrame, quantize: int) -> DataFrame:
         "id",
         F.when(
             norm > 0.0,
-            F.transform("emb", lambda x: F.round(x / norm, quantize)),
+            F.transform("emb", lambda x: F.round(x / norm, QUANTUM)),
         )
         .otherwise(F.col("emb"))
         .alias("emb"),
@@ -107,9 +107,6 @@ def fastrp_embeddings(
     weight_col: str | None = None,
     seed: int | str = 42,
     directed: bool = False,
-    src: str = "src",
-    dst: str = "dst",
-    quantize: int = 12,
     partitions: int | None = None,
 ) -> DataFrame:
     """FastRP node embeddings; returns ``(id string, emb array<double>)``.
@@ -140,14 +137,14 @@ def fastrp_embeddings(
     # a private conf-isolated session, the CSR edge cache sized to the data,
     # and AQE frozen once the fixed-shape iteration plans start — the K
     # iteration checkpoints otherwise each fan out into several adaptive
-    # stage-jobs. The per-element quantize rounding already makes the
+    # stage-jobs. The per-element QUANTUM rounding already makes the
     # embeddings partitioning-independent (test-pinned), so the re-layout
     # cannot change values.
     with SuperstepLoop(edges.sparkSession) as loop:
         edges = loop.bind(edges)
         e0 = edges.select(
-            F.col(src).cast("string").alias("src"),
-            F.col(dst).cast("string").alias("dst"),
+            F.col("src").cast("string").alias("src"),
+            F.col("dst").cast("string").alias("dst"),
             (
                 F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
             ).alias("w"),
@@ -166,7 +163,7 @@ def fastrp_embeddings(
         )
 
         cur = loop.checkpoint(
-            _l2_normalize(_init_embedding(nodes, dim, seed), quantize)
+            _l2_normalize(_init_embedding(nodes, dim, seed))
         )
         zeros = F.array(*[F.lit(0.0)] * dim)
         # Every iteration state stays checkpointed until the final weighted
@@ -195,7 +192,7 @@ def fastrp_embeddings(
                 nodes.join(sums, "id", "left")
                 .select("id", F.coalesce("emb", zeros).alias("emb"))
             )
-            cur = loop.checkpoint(_l2_normalize(nxt, quantize))
+            cur = loop.checkpoint(_l2_normalize(nxt))
             iters.append(cur)
 
         folded = iters[0].select(

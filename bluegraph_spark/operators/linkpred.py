@@ -51,6 +51,11 @@ from pyspark.sql import functions as F
 
 from bluegraph_spark.plans.loop import CacheScope, SuperstepLoop
 
+#: Decimals every GD step (here) and every FastRP iteration
+#: (``embeddings.py``) rounds to: part of the cross-engine contract, and the
+#: DuckDB oracles round to the same 12.
+QUANTUM = 12
+
 
 def portable_hash(seed: int | str, col: Column) -> Column:
     """Deterministic 60-bit non-negative hash, identical in Spark and DuckDB.
@@ -329,7 +334,7 @@ class EdgePredictorModel:
     arbitrary sklearn estimator around driver-resident feature matrices.
     This engine's model is logistic regression fit by full-batch gradient
     descent computed as DataFrame aggregations — distributed, deterministic
-    (every gradient and weight is quantized to ``quantize`` decimals, so
+    (every gradient and weight is quantized to ``QUANTUM`` (12) decimals, so
     the trajectory is independent of partitioning and reproducible in
     ANSI SQL), and free of driver-side data collection: the driver only
     ever sees the (p+1)-element gradient vector per iteration.
@@ -350,7 +355,6 @@ def fit_edge_predictor(
     feature_cols: Sequence[str],
     lr: float = 0.5,
     iterations: int = 20,
-    quantize: int = 12,
 ) -> EdgePredictorModel:
     """Fit logistic regression on an edge-feature table, distributed.
 
@@ -360,7 +364,7 @@ def fit_edge_predictor(
     ``w ← round(w - lr · round(avg((σ(z) - y) · x), q), q)``. One
     aggregation job per iteration; state on the driver is p+1 floats.
 
-    The per-step rounding to ``quantize`` decimals is the cross-engine /
+    The per-step rounding to ``QUANTUM`` decimals is the cross-engine /
     cross-partitioning contract (same role as FastRP's): it absorbs both
     summation-order differences in the distributed average and the ≤1-ulp
     disagreement between ``java.lang.Math.exp`` and libm ``exp``.
@@ -389,7 +393,7 @@ def fit_edge_predictor(
         # ONE pass over the (possibly expensive) upstream feature
         # expression: the standardization statistics and the row count ride
         # the cache materialization as observed metrics (same avg/round
-        # expressions the former separate stats job ran — the quantize
+        # expressions the former separate stats job ran — the QUANTUM
         # rounding absorbs the summation-tree difference exactly as it does
         # across partitionings).
         obs = Observation(f"lp_fit_stats_{time.time_ns()}")
@@ -397,9 +401,9 @@ def fit_edge_predictor(
             base.observe(
                 obs,
                 F.count(F.lit(1)).alias("_n"),
-                *[F.round(F.avg(c), quantize).alias(f"_m_{c}") for c in fcols],
+                *[F.round(F.avg(c), QUANTUM).alias(f"_m_{c}") for c in fcols],
                 *[
-                    F.round(F.avg(F.col(c) * F.col(c)), quantize).alias(f"_q_{c}")
+                    F.round(F.avg(F.col(c) * F.col(c)), QUANTUM).alias(f"_q_{c}")
                     for c in fcols
                 ],
             )
@@ -412,7 +416,7 @@ def fit_edge_predictor(
         for c in fcols:
             m = float(stats[f"_m_{c}"])
             var = float(stats[f"_q_{c}"]) - m * m
-            s = round(math.sqrt(var), quantize) if var > 0 else 1.0
+            s = round(math.sqrt(var), QUANTUM) if var > 0 else 1.0
             means.append(m)
             stds.append(s if s > 0 else 1.0)
 
@@ -420,7 +424,7 @@ def fit_edge_predictor(
         # small row counts a session-wide partition fan-out just multiplies
         # task-scheduling cost by the iteration count. Re-layout the cache
         # at the loop width (same rows-per-partition budget as the superstep
-        # loops). The per-step round(quantize) already makes the trajectory
+        # loops). The per-step round(QUANTUM) already makes the trajectory
         # independent of partitioning, so the values are unaffected. The
         # standardization itself stays a lazy projection over the cache — 5
         # codegen'd column ops per row per iteration, far below one extra
@@ -435,7 +439,7 @@ def fit_edge_predictor(
         std = cached.select(
             "_y",
             *[
-                F.round((F.col(c) - F.lit(means[i])) / F.lit(stds[i]), quantize)
+                F.round((F.col(c) - F.lit(means[i])) / F.lit(stds[i]), QUANTUM)
                 .alias(c)
                 for i, c in enumerate(fcols)
             ],
@@ -451,9 +455,9 @@ def fit_edge_predictor(
             sig = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
             err = sig - F.col("_y")
             row = std.agg(
-                F.round(F.avg(err), quantize).alias("_gb"),
+                F.round(F.avg(err), QUANTUM).alias("_gb"),
                 *[
-                    F.round(F.avg(err * F.col(c)), quantize).alias(f"_g_{c}")
+                    F.round(F.avg(err * F.col(c)), QUANTUM).alias(f"_g_{c}")
                     for c in fcols
                 ],
                 F.round(
@@ -466,12 +470,12 @@ def fit_edge_predictor(
                             )
                         )
                     ),
-                    quantize,
+                    QUANTUM,
                 ).alias("_loss"),
             ).first()
-            b = round(b - lr * float(row["_gb"]), quantize)
+            b = round(b - lr * float(row["_gb"]), QUANTUM)
             w = [
-                round(w[i] - lr * float(row[f"_g_{c}"]), quantize)
+                round(w[i] - lr * float(row[f"_g_{c}"]), QUANTUM)
                 for i, c in enumerate(fcols)
             ]
             history.append({"iteration": it, "loss": float(row["_loss"])})

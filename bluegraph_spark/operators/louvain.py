@@ -67,7 +67,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -78,7 +78,6 @@ class LouvainResult:
     levels: int
     rounds: int  # total local-move rounds across levels
     converged: bool  # last level's local moves reached a fixpoint
-    modularity: float | None = None  # computed only if compute_modularity
     history: list[dict[str, Any]] = field(default_factory=list)
 
 
@@ -291,13 +290,7 @@ def louvain(
         if nodes is None:
             vertices = sym.select(F.col("src").alias("id")).distinct()
         else:
-            id_type = dict(e0.dtypes).get("src", "string")
-            first = nodes.columns[0]
-            vertices = (
-                nodes.select("id")
-                if first == "id" and dict(nodes.dtypes)[first] == id_type
-                else nodes.select(F.col(first).cast(id_type).alias("id"))
-            ).distinct()
+            vertices = vertex_ids(nodes, edges)
 
         labels = loop.checkpoint(vertices.select("id", F.col("id").alias("c")))
         # level-1 graphs are loop-free (filtered above); loops appear at
@@ -389,6 +382,5 @@ def louvain(
 
         out = assignment.select("id", F.col("c").alias("community"))
         return LouvainResult(
-            loop.result(out), levels_run, loop.iteration, converged, None,
-            loop.history,
+            loop.result(out), levels_run, loop.iteration, converged, loop.history,
         )

@@ -36,7 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -102,16 +102,7 @@ def label_propagation(
                 # symmetrized + self-loop-free: the src set IS the vertex set
                 vertices = e.select(F.col("src").alias("id")).distinct()
             else:
-                id_type = dict(edges.dtypes).get("src", "string")
-                first = nodes.columns[0]
-                if dict(nodes.dtypes)[first] == id_type and first == "id":
-                    # no-op alias/cast would be optimizer-stripped and strand
-                    # the checkpoint-captured partitioning (see pagerank.py)
-                    vertices = nodes.select("id").distinct()
-                else:
-                    vertices = nodes.select(
-                        F.col(first).cast(id_type).alias("id")
-                    ).distinct()
+                vertices = vertex_ids(nodes, edges)
             # Checkpoint the single-column vertex set; label = id is added
             # below as a lazy projection ABOVE the scan: checkpointing (id,
             # id AS label) lets the optimizer express the captured

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
 from bluegraph_spark.plans.loop import CacheScope
 
 
@@ -52,11 +52,7 @@ def degree_centrality(
     ).select("_x.*")
     deg = ends.groupBy("id").agg(F.sum("w").alias("degree"))
     if nodes is not None:
-        id_type = dict(edges.dtypes).get("src", "string")
-        vs = nodes.select(
-            F.col(nodes.columns[0]).cast(id_type).alias("id")
-        ).distinct()
-        deg = vs.join(deg, "id", "left").select(
+        deg = vertex_ids(nodes, edges).join(deg, "id", "left").select(
             "id", F.coalesce("degree", F.lit(0.0)).alias("degree")
         )
     return deg

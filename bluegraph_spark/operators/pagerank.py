@@ -36,7 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -74,8 +74,9 @@ def pagerank(
 ) -> PageRankResult:
     """PageRank over an edge DataFrame ``(src, dst[, weight_col])``.
 
-    ``nodes``: optional (id) DataFrame including isolated vertices; defaults
-    to the endpoint set. ``tol=0`` runs exactly ``max_iter`` supersteps
+    ``nodes``: optional (id) DataFrame including isolated vertices, its ids
+    cast to the edges' id type (``pgframe.vertex_ids``); defaults to the
+    endpoint set. ``tol=0`` runs exactly ``max_iter`` supersteps
     (fixed-iteration mode, used by the DuckDB differential oracle).
     ``resume=True`` continues from the checkpointer's latest complete
     superstep; the saved state ``(id, dangling, rank, delta)`` is all the
@@ -121,16 +122,7 @@ def pagerank(
         )
 
         if nodes is not None:
-            # No same-name self-alias: the optimizer strips Alias(id AS id)
-            # and rewrites references to the child attribute, which strands
-            # the partitioning a later localCheckpoint captures on an
-            # attribute id absent from the logical output — measured as two
-            # avoidable O(V) state shuffles per superstep.
-            first = nodes.columns[0]
-            vertices = (
-                nodes.select("id") if first == "id"
-                else nodes.select(F.col(first).alias("id"))
-            ).distinct()
+            vertices = vertex_ids(nodes, edges)
         elif not directed:
             # Symmetrized graph: every vertex appears as a src, so the
             # (cached, already-distinct) out-weight table IS the vertex set.

@@ -73,10 +73,6 @@ def _path_cost(g, path, weighted: bool) -> float:
     )
 
 
-def _graph(edges, weight_col, directed, max_nodes, max_edges):
-    return _collect_graph(edges, weight_col, directed, max_nodes, max_edges)
-
-
 def shortest_path(
     edges: DataFrame,
     source,
@@ -90,7 +86,7 @@ def shortest_path(
     """The single shortest path as a node tuple (PathFinder.shortest_path)."""
     import networkx as nx
 
-    g = _graph(edges, weight_col, directed, max_nodes, max_edges)
+    g = _collect_graph(edges, weight_col, directed, max_nodes, max_edges)
     sub = _maybe_exclude_edge(g, source, target, exclude_edge)
     try:
         return tuple(
@@ -114,7 +110,7 @@ def all_shortest_paths(
     """All unweighted shortest paths (PathFinder.all_shortest_paths)."""
     import networkx as nx
 
-    g = _graph(edges, None, directed, max_nodes, max_edges)
+    g = _collect_graph(edges, None, directed, max_nodes, max_edges)
     sub = _maybe_exclude_edge(g, source, target, exclude_edge)
     try:
         return [tuple(p) for p in nx.all_shortest_paths(sub, source, target)]
@@ -159,7 +155,7 @@ def n_shortest_paths(
             )
         ]
 
-    g = _graph(edges, weight_col, directed, max_nodes, max_edges)
+    g = _collect_graph(edges, weight_col, directed, max_nodes, max_edges)
     weighted = weight_col is not None
     if strategy == "naive":
         sub = _maybe_exclude_edge(g, source, target, True)
@@ -215,7 +211,7 @@ def nested_shortest_path(
     core/analyse/paths.py:300-322)."""
     import networkx as nx
 
-    g = _graph(edges, weight_col, directed, max_nodes, max_edges)
+    g = _collect_graph(edges, weight_col, directed, max_nodes, max_edges)
 
     def _sp(s, t):
         sub = _maybe_exclude_edge(g, s, t, exclude_edge)
@@ -308,7 +304,7 @@ def shortest_tripath(
     (PathFinder.shortest_tripath, core/analyse/paths.py:381-433)."""
     import networkx as nx
 
-    g = _graph(edges, weight_col, directed, max_nodes, max_edges)
+    g = _collect_graph(edges, weight_col, directed, max_nodes, max_edges)
     w = "_w" if weight_col else None
 
     sub = _maybe_exclude_edge(g, source, intermediary, exclude_edge)

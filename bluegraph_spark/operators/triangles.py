@@ -43,6 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bluegraph_spark.pgframe import vertex_ids
 from bluegraph_spark.plans.loop import CacheScope
 
 # Entries (= oriented edges) of the adjacency table below which it is
@@ -151,10 +152,7 @@ def triangle_counts(edges: DataFrame, nodes: DataFrame | None = None) -> DataFra
                 .distinct()
             )
         else:
-            id_type = dict(edges.dtypes).get("src", "string")
-            vertices = nodes.select(
-                F.col(nodes.columns[0]).cast(id_type).alias("id")
-            ).distinct()
+            vertices = vertex_ids(nodes, edges)
         out = vertices.join(counts, "id", "left").select(
             "id", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles")
         )

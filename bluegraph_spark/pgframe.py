@@ -97,6 +97,23 @@ def symmetrize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Da
     return edges.select(F.explode(both).alias("_e")).select("_e.*")
 
 
+def vertex_ids(nodes: DataFrame, edges: DataFrame) -> DataFrame:
+    """Distinct ``(id)`` from a caller's vertex frame (ids in its first
+    column), cast to the type of ``edges``' ``src``.
+
+    A column already named ``id`` of that type is selected as is: the
+    optimizer strips a no-op cast/alias and rewrites references to the child
+    attribute, which strands the partitioning a later localCheckpoint
+    captures on an attribute absent from the logical output (measured: two
+    avoidable O(V) state shuffles per superstep).
+    """
+    id_type = dict(edges.dtypes).get("src", "string")
+    first = nodes.columns[0]
+    if first == "id" and dict(nodes.dtypes)[first] == id_type:
+        return nodes.select("id").distinct()
+    return nodes.select(F.col(first).cast(id_type).alias("id")).distinct()
+
+
 class SparkPGFrame:
     """Property graph = (nodes DataFrame, edges DataFrame)."""
 

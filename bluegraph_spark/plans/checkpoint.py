@@ -12,7 +12,9 @@ recompute:
    from the last complete iteration (north rule). Only resume reads the
    files; the next superstep reads the local checkpoint, whose captured
    hash partitioning keeps its joins exchange-free. A lost local checkpoint
-   fails the run instead of recomputing it: rerun with ``resume=True``;
+   fails the run instead of recomputing it: rerun with ``resume=True``.
+   A run without ``resume`` first deletes its run directory's supersteps
+   (``clear``), so a resume never continues some earlier run;
 2. it records per-iteration metrics and per-partition lineage rows (rows
    per written partition, taken from the write's own task metrics, so no
    job re-reads the files) so progress is observable. Data-source-V2
@@ -23,7 +25,7 @@ The reference has no analogue (NetworkX/graph-tool iterate in-process); this
 is engine-side driver code, not a Catalyst extension.
 
 Storage layout (``format`` defaults to parquet; on a cluster with an Iceberg
-catalog pass ``table_format="iceberg"`` and a catalog path — the sandbox has
+catalog pass ``data_format="iceberg"`` and a catalog path — the sandbox has
 no Iceberg runtime, so parquet directories stand in):
 
     {base}/{run_id}/iter=00003/            vertex-state parquet
@@ -73,6 +75,16 @@ class SuperstepCheckpointer:
         return os.path.join(self.base, "metrics", f"iter_{iteration:05d}.json")
 
     # -- write -----------------------------------------------------------
+
+    def clear(self) -> None:
+        """Delete every superstep this run directory holds, so a fresh run
+        never mixes its supersteps with an earlier run's."""
+        for name in os.listdir(self.base):
+            if name.startswith("iter="):
+                shutil.rmtree(os.path.join(self.base, name))
+        for name in os.listdir(os.path.join(self.base, "metrics")):
+            if name.startswith("iter_"):
+                os.remove(os.path.join(self.base, "metrics", name))
 
     def save(
         self,

@@ -172,7 +172,9 @@ class SuperstepLoop(CacheScope):
     the latest complete superstep into ``state``, ``record`` and
     ``iteration`` at construction, before any cache exists; ``converged``
     then says whether that run had already finished (its ``history`` is
-    then the checkpointer's metrics log).
+    then the checkpointer's metrics log). Without ``resume`` a checkpointer
+    first deletes its run's earlier supersteps: a fresh run owns its run
+    directory, so a later resume never reads another run's state.
     """
 
     def __init__(
@@ -197,6 +199,8 @@ class SuperstepLoop(CacheScope):
         self.plan: str | None = None
         self.exchanges: int | None = None
         self._t0 = time.time()
+        if checkpointer is not None and not resume:
+            checkpointer.clear()
         latest = checkpointer.latest() if resume and checkpointer is not None else None
         if latest is not None:
             self.iteration = latest

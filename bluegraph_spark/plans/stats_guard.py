@@ -18,8 +18,8 @@ the same wall — this is a driver-side scale cliff, not an executor one.
 
 ``stats_safe_local_checkpoint`` is the fix: a plain ``localCheckpoint``
 while the estimate is small, and when the estimate's digit count crosses
-``digit_limit``, a persist → count → localCheckpoint sandwich. Counting
-the materialized cache first means the checkpoint call snapshots the
+``DEFAULT_DIGIT_LIMIT``, a persist → count → localCheckpoint sandwich.
+Counting the materialized cache first means the checkpoint call snapshots the
 cache's REAL byte size (InMemoryRelation reports measured batch sizes once
 materialized) instead of the compounded estimate — resetting the base, so
 the guard fires only every few iterations and the amortized cost is one
@@ -55,7 +55,7 @@ def estimate_digits(df: DataFrame) -> int:
     except ValueError:
         # py4j materializes the JVM BigInt through int(str); CPython ≥3.11
         # refuses past 4300 digits — which IS the answer: the estimate is
-        # astronomically past any sane digit_limit.
+        # astronomically past any sane digit limit.
         return 1 << 30
     if not isinstance(sz, int):
         return len(sz.toString().lstrip("-"))  # py4j BigInt passthrough
@@ -65,11 +65,9 @@ def estimate_digits(df: DataFrame) -> int:
     return sz.bit_length() * 30103 // 100000 + 1
 
 
-def stats_safe_local_checkpoint(
-    df: DataFrame, digit_limit: int = DEFAULT_DIGIT_LIMIT
-) -> DataFrame:
+def stats_safe_local_checkpoint(df: DataFrame) -> DataFrame:
     """``localCheckpoint`` that never snapshots a runaway size estimate."""
-    if estimate_digits(df) <= digit_limit:
+    if estimate_digits(df) <= DEFAULT_DIGIT_LIMIT:
         return df.localCheckpoint()
     cached = df.persist()
     try:

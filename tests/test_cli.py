@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from bluegraph_spark.__main__ import main
+from bluegraph_spark.__main__ import build_parser, main
 from bluegraph_spark.sources.synthetic import synthetic_repo_files
 
 
@@ -218,3 +218,33 @@ def test_walks_command(spark, corpus_path, tmp_path, capsys):
         spark.read.parquet(edges_out).select("dst")).distinct().count()
     # every (node, replica) has a step-0 row
     assert wk.filter("step = 0").count() == 2 * n_nodes
+
+
+_UNREAD = {  # options no run of the subcommand reads: the parser rejects them
+    "triangles": ["--weight-col", "--checkpoint-dir", "--run-id", "--resume",
+                  "--directed"],
+    "mst": ["--checkpoint-dir", "--run-id", "--resume", "--directed"],
+    "hierarchy": ["--checkpoint-dir", "--run-id", "--resume", "--directed"],
+    "fastrp": ["--checkpoint-dir", "--run-id", "--resume"],
+    "walks": ["--checkpoint-dir", "--run-id", "--resume"],
+    "components": ["--weight-col", "--directed"],
+    "louvain": ["--resume", "--directed"],
+    "lpa": ["--directed"],
+}
+_CASES = [
+    (cmd, [flag] if flag in ("--resume", "--directed") else [flag, "x"])
+    for cmd, flags in _UNREAD.items() for flag in flags
+] + [("pagerank", ["--resume"])]  # resume needs a --checkpoint-dir
+
+
+@pytest.mark.parametrize(
+    "cmd,extra", _CASES, ids=[f"{c}{e[0]}" for c, e in _CASES]
+)
+def test_parser_rejects_options_no_run_reads(cmd, extra):
+    """Parser only, no Spark session: the base command parses, and adding
+    the option is a usage error (exit 2) instead of a silent no-op."""
+    base = [cmd, "--edges", "e", "--output", "o"]
+    build_parser().parse_args(base)
+    with pytest.raises(SystemExit) as exc:
+        build_parser().parse_args(base + extra)
+    assert exc.value.code == 2

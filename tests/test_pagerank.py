@@ -103,6 +103,25 @@ def test_checkpoint_resume(spark, tmp_path):
     assert resumed.iterations == full.iterations
 
 
+def test_fresh_run_replaces_earlier_run(spark, tmp_path):
+    """A run without ``resume`` owns its run directory: a longer earlier
+    run's supersteps must not survive it, or a resume continues that run."""
+
+    def ring(n):
+        return spark.createDataFrame(
+            [(i, (i + 1) % n) for i in range(n)], "src long, dst long"
+        )
+
+    cp = SuperstepCheckpointer(str(tmp_path), "run")
+    pagerank(ring(200), tol=0.0, max_iter=6, checkpointer=cp)
+    b = ring(50)
+    pagerank(b, tol=0.0, max_iter=2, checkpointer=cp)
+    assert cp.iterations() == [0, 1, 2]
+    resumed = pagerank(b, tol=0.0, max_iter=2, checkpointer=cp, resume=True)
+    assert resumed.iterations == 2
+    assert sorted(r.id for r in resumed.ranks.collect()) == list(range(50))
+
+
 class KilledCheckpointer(SuperstepCheckpointer):
     """Raises in ``save(kill_at)``: a run killed during that superstep."""
 

@@ -39,19 +39,27 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
 
 
-@pytest.fixture(params=["local", "checkpointer"])
-def checkpointer(request, tmp_path):
-    """Both ways a loop can run: a storage checkpointer writes the same
-    local checkpoint the loop reads on, so the budget is the same."""
-    return SuperstepCheckpointer(str(tmp_path)) if request.param == "checkpointer" else None
+@pytest.fixture(params=["local", "checkpointer", "int-nodes", "string-nodes"])
+def loop_kwargs(request, graph, tmp_path):
+    """Ways a loop can run at the same budget: a storage checkpointer
+    writes the same local checkpoint the loop reads on, and a caller's
+    ``nodes`` frame of another id type is cast to the edges' type, so the
+    vertex set joins the edge cache without an exchange."""
+    if request.param == "local":
+        return {}
+    if request.param == "checkpointer":
+        return {"checkpointer": SuperstepCheckpointer(str(tmp_path))}
+    ids = graph.select(F.col("src").alias("id")).union(graph.select("dst"))
+    id_type = request.param.split("-")[0]
+    return {"nodes": ids.select(F.col("id").cast(id_type).alias("id"))}
 
 
-def test_pagerank_superstep_is_single_exchange(graph, no_broadcast, checkpointer):
+def test_pagerank_superstep_is_single_exchange(graph, no_broadcast, loop_kwargs):
     res = pagerank(
-        graph, weight_col="w", tol=0.0, max_iter=2, partitions=4,
-        checkpointer=checkpointer,
+        graph, weight_col="w", tol=0.0, max_iter=2, partitions=4, **loop_kwargs
     )
     assert res.superstep_exchanges == 1, res.superstep_plan
+    assert dict(res.ranks.dtypes)["id"] == "bigint"
     # the CSR-blocked edge cache is read through InMemoryTableScan (its
     # partitioning/ordering is what makes the join exchange-free)
     assert "InMemoryTableScan" in res.superstep_plan
@@ -81,15 +89,15 @@ def test_cc_round_exchange_budget(spark, no_broadcast):
     assert res.round_plan.count("InMemoryTableScan") >= 2
 
 
-def test_lpa_superstep_exchange_budget(graph, no_broadcast, checkpointer):
+def test_lpa_superstep_exchange_budget(graph, no_broadcast, loop_kwargs):
     # superstep 1 runs on labels ≡ ids, which lets the planner elide the
     # scores exchange through the alias equivalence: budget is 1 there and
     # at most 2 on later supersteps — guard the snapshot at 1
     res = label_propagation(
-        graph, weight_col="w", max_iter=2, partitions=4,
-        checkpointer=checkpointer,
+        graph, weight_col="w", max_iter=2, partitions=4, **loop_kwargs
     )
     assert res.superstep_exchanges == 1, res.superstep_plan
+    assert dict(res.labels.dtypes)["id"] == "bigint"
     assert "InMemoryTableScan" in res.superstep_plan
     plan = res.superstep_plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
