@@ -212,7 +212,8 @@ def cmd_dedup(args) -> dict:
     else:
         raise ValueError(f"unknown dedup method {args.method!r}")
     _write(out, args)
-    return {"method": args.method, "rows": out.count(), "output": args.output}
+    rows = _read(spark, args.output, args.fmt).count()
+    return {"method": args.method, "rows": rows, "output": args.output}
 
 
 def cmd_ann(args) -> dict:
@@ -243,7 +244,8 @@ def cmd_ann(args) -> dict:
     else:
         raise ValueError(f"unknown ann method {args.method!r}")
     _write(out, args)
-    return {"method": args.method, "rows": out.count(), "output": args.output}
+    rows = _read(spark, args.output, args.fmt).count()
+    return {"method": args.method, "rows": rows, "output": args.output}
 
 
 def cmd_louvain(args) -> dict:

@@ -267,8 +267,7 @@ def embedding_dedup_pairs(
     lsh_candidate_report` before a production run.
     """
     from bluegraph_spark.operators.similarity import (
-        _dot,
-        _norm,
+        _cosine,
         _prep,
         lsh_candidate_pairs,
     )
@@ -284,10 +283,7 @@ def embedding_dedup_pairs(
         .select(
             F.col("query_id").alias("id_a"),
             F.col("neighbor_id").alias("id_b"),
-            (
-                _dot(F.col("a_vec"), F.col("b_vec"))
-                / (_norm(F.col("a_vec")) * _norm(F.col("b_vec")))
-            ).alias("cosine"),
+            _cosine(F.col("a_vec"), F.col("b_vec")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

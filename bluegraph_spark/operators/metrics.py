@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
+from bluegraph_spark.pgframe import endpoint_ids, symmetrize_edges, vertex_ids
 from bluegraph_spark.plans.loop import CacheScope
 
 
@@ -63,12 +63,7 @@ def density(edges: DataFrame, nodes: DataFrame | None = None, directed: bool = F
     with CacheScope() as scope:
         e = scope.persist(edges.select(F.col("src"), F.col("dst")))
         if nodes is None:
-            n = (
-                e.select(F.col("src").alias("id"))
-                .unionByName(e.select(F.col("dst").alias("id")))
-                .distinct()
-                .count()
-            )
+            n = endpoint_ids(e).count()
         else:
             n = nodes.select(nodes.columns[0]).distinct().count()
         m = e.count()

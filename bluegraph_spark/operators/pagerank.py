@@ -36,7 +36,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
+from bluegraph_spark.pgframe import endpoint_ids, symmetrize_edges, vertex_ids
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -128,11 +128,7 @@ def pagerank(
             # (cached, already-distinct) out-weight table IS the vertex set.
             vertices = out.select(F.col("src").alias("id"))
         else:
-            vertices = (
-                e.select(F.col("src").alias("id"))
-                .unionByName(e.select(F.col("dst").alias("id")))
-                .distinct()
-            )
+            vertices = endpoint_ids(e)
         # Size the superstep partitioning from the measured edge count. On
         # the common undirected default path the vertex set IS the
         # out-weight table, so one aggregation job yields both the edge

@@ -36,6 +36,17 @@ def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda s, x: s + x)
 
 
+def _cosine(a, b):
+    return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best ``(query_id, neighbor_id, cosine)`` rows per query,
+    ranked 1..k by cosine, ties broken on neighbor id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+
+
 def _prep(df: DataFrame, id_col: str, vec_col: str, name: str) -> DataFrame:
     """Project (id, double-vector), excluding zero-norm vectors: cosine is
     undefined there, and the exclusion keeps the division ANSI-safe (the
@@ -65,16 +76,9 @@ def cosine_topk(
     scored = pairs.select(
         F.col("q_id").alias("query_id"),
         F.col("c_id").alias("neighbor_id"),
-        (
-            _dot(F.col("q_vec"), F.col("c_vec"))
-            / (_norm(F.col("q_vec")) * _norm(F.col("c_vec")))
-        ).alias("cosine"),
+        _cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _top_k(scored, k)
 
 
 # -- deterministic hyperplanes ------------------------------------------------
@@ -349,14 +353,10 @@ def ivf_cosine_topk(
         .select(
             F.col("q_id").alias("query_id"),
             F.col("c_id").alias("neighbor_id"),
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (_norm(F.col("q_vec")) * _norm(F.col("c_vec")))
-            ).alias("cosine"),
+            _cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, k)
 
 
 def lsh_candidate_pairs(
@@ -514,11 +514,7 @@ def lsh_cosine_topk(
         .select(
             "query_id",
             "neighbor_id",
-            (
-                _dot(F.col("q_vec"), F.col("c_vec"))
-                / (_norm(F.col("q_vec")) * _norm(F.col("c_vec")))
-            ).alias("cosine"),
+            _cosine(F.col("q_vec"), F.col("c_vec")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
+    return _top_k(scored, k)

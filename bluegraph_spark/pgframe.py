@@ -114,6 +114,15 @@ def vertex_ids(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     return nodes.select(F.col(first).cast(id_type).alias("id")).distinct()
 
 
+def endpoint_ids(edges: DataFrame) -> DataFrame:
+    """Distinct ``(id)`` over both endpoints, ``src`` ∪ ``dst``."""
+    return (
+        edges.select(F.col("src").alias("id"))
+        .unionByName(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+
+
 class SparkPGFrame:
     """Property graph = (nodes DataFrame, edges DataFrame)."""
 
@@ -314,13 +323,8 @@ class SparkPGFrame:
             )
         if edges is not None:
             e = e.join(edges.select("src", "dst"), ["src", "dst"], "left_semi")
-            endpoint_ids = (
-                edges.select(F.col("src").alias("id"))
-                .unionByName(edges.select(F.col("dst").alias("id")))
-                .distinct()
-            )
             if nodes is None:
-                n = n.join(endpoint_ids, "id", "left_semi")
+                n = n.join(endpoint_ids(edges), "id", "left_semi")
         out = self._derived(n, e)
         if remove_isolated_nodes:
             out = out.remove_isolated_nodes()
@@ -503,11 +507,7 @@ class SparkPGFrame:
         return d if self.directed else 2 * d
 
     def endpoint_ids(self) -> DataFrame:
-        return (
-            self._edges.select(F.col("src").alias("id"))
-            .unionByName(self._edges.select(F.col("dst").alias("id")))
-            .distinct()
-        )
+        return endpoint_ids(self._edges)
 
     def isolated_nodes(self) -> DataFrame:
         """Nodes with no incident edges — anti-join instead of the

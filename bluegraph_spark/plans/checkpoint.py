@@ -166,7 +166,11 @@ class SuperstepCheckpointer:
             return json.load(f)
 
     def metrics_log(self) -> list[dict[str, Any]]:
-        return [self.load_metrics(i) for i in self.iterations()]
+        """Every superstep's metrics record, in iteration order, including
+        supersteps whose data ``keep_last`` pruned."""
+        names = os.listdir(os.path.join(self.base, "metrics"))
+        its = sorted(int(n[5:-5]) for n in names if n.endswith(".json"))  # iter_NNNNN.json
+        return [self.load_metrics(i) for i in its]
 
 
 def _rows_written(sc, tag: str) -> list[dict[str, int]]:

@@ -4,11 +4,27 @@ Graphs are built with NetworkX generators (karate club is Zachary's public
 dataset, shipped inside networkx itself) and converted to Spark edge
 DataFrames; the same nx object is the differential oracle — mirroring the
 reference's cross-backend test pattern
-(/root/reference/tests/analyse/test_metrics.py:56-69).
+(/root/reference/tests/analyse/test_metrics.py:56-69). ``_jobs_run_by`` is
+the one Spark job counter the tests share.
 """
+
+import uuid
 
 import networkx as nx
 import numpy as np
+
+
+def _jobs_run_by(spark, fn):
+    """(fn's return value, number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"jobs-probe-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def pagerank_oracle(g, alpha=0.85, tol=1e-6, max_iter=100, weight=None):

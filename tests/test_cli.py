@@ -11,6 +11,7 @@ import pytest
 
 from bluegraph_spark.__main__ import build_parser, main
 from bluegraph_spark.sources.synthetic import synthetic_repo_files
+from tests.graph_fixtures import _jobs_run_by
 
 
 @pytest.fixture(scope="module")
@@ -23,6 +24,11 @@ def corpus_path(spark, tmp_path_factory):
 def _run(capsys, argv):
     assert main(argv) == 0
     return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+
+def _run_counting_jobs(spark, capsys, argv):
+    """(``_run``'s result, the Spark jobs the command ran)."""
+    return _jobs_run_by(spark, lambda: _run(capsys, argv))
 
 
 def test_pipeline_command(spark, corpus_path, tmp_path, capsys):
@@ -94,21 +100,35 @@ def test_dedup_command(spark, tmp_path, capsys):
     )
     path = str(tmp_path / "docs")
     docs.write.parquet(path)
-    res = _run(capsys, [
+    # The job counts pin one run of each result plan: the reported row
+    # count reads the written output back instead of re-running the plan.
+    res, jobs = _run_counting_jobs(spark, capsys, [
         "dedup", "--docs", path, "--method", "exact",
         "--output", str(tmp_path / "exact"),
     ])
     assert res["rows"] == 2  # two distinct contents
+    assert jobs == 6
     groups = spark.read.parquet(str(tmp_path / "exact"))
     dup = groups.filter("n_copies > 1").collect()
     assert len(dup) == 1 and dup[0].keep_id == 1
 
-    res = _run(capsys, [
+    res, jobs = _run_counting_jobs(spark, capsys, [
         "dedup", "--docs", path, "--method", "minhash",
         "--output", str(tmp_path / "mh"),
     ])
+    assert jobs == 21
     pairs = {(r.id_a, r.id_b) for r in spark.read.parquet(str(tmp_path / "mh")).collect()}
     assert (1, 2) in pairs
+    assert res["rows"] == len(pairs)
+
+    res, jobs = _run_counting_jobs(spark, capsys, [
+        "dedup", "--docs", path, "--method", "simhash",
+        "--output", str(tmp_path / "sh"),
+    ])
+    assert jobs == 9
+    pairs = {(r.id_a, r.id_b) for r in spark.read.parquet(str(tmp_path / "sh")).collect()}
+    assert (1, 2) in pairs
+    assert res["rows"] == len(pairs)
 
 
 def test_triangles_command(spark, corpus_path, tmp_path, capsys):
@@ -140,17 +160,26 @@ def test_ann_command(spark, tmp_path, capsys):
     path = str(tmp_path / "emb")
     spark.createDataFrame(rows, "vec_id long, embedding array<float>").write.parquet(path)
 
-    exact = _run(capsys, [
+    # job counts: one run of each result plan (see test_dedup_command)
+    exact, jobs = _run_counting_jobs(spark, capsys, [
         "ann", "--corpus", path, "--method", "exact", "-k", "3",
         "--output", str(tmp_path / "exact"),
     ])
     assert exact["rows"] == 32 * 3
-    ivf = _run(capsys, [
+    assert jobs == 7
+    lsh, jobs = _run_counting_jobs(spark, capsys, [
+        "ann", "--corpus", path, "--method", "lsh", "-k", "3",
+        "--output", str(tmp_path / "lsh"),
+    ])
+    assert lsh["rows"] == spark.read.parquet(str(tmp_path / "lsh")).count()
+    assert jobs == 14
+    ivf, jobs = _run_counting_jobs(spark, capsys, [
         "ann", "--corpus", path, "--method", "ivf", "-k", "3",
         "--centroids", "4", "--nprobe", "2",
         "--output", str(tmp_path / "ivf"),
     ])
     assert ivf["rows"] == 32 * 3
+    assert jobs == 9
     got = spark.read.parquet(str(tmp_path / "ivf"))
     assert set(got.columns) == {"query_id", "neighbor_id", "cosine", "rank"}
     # clustered fixture: IVF at nprobe 2/4 recovers most exact neighbors

@@ -4,7 +4,6 @@ nx.pagerank defaults alpha=0.85 tol=1e-6 max_iter=100; north rule requires
 allclose 1e-6)."""
 
 import json
-import uuid
 
 import networkx as nx
 import numpy as np
@@ -14,6 +13,7 @@ from bluegraph_spark.operators.pagerank import pagerank
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 
 from tests.graph_fixtures import (
+    _jobs_run_by,
     karate,
     pagerank_oracle,
     nx_nodes_df,
@@ -202,24 +202,19 @@ def test_resume_from_pending_placeholder_record(spark, tmp_path):
     _assert_same_ranks(full, resumed)
 
 
-def _jobs_run_by(spark, fn):
-    """(fn's return value, number of Spark jobs it ran)."""
-    sc = spark.sparkContext
-    group = f"jobs-probe-{uuid.uuid4()}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-@pytest.mark.parametrize("op", ["pagerank", "cc", "sssp", "kssp"])
-def test_converged_resume_builds_no_edge_cache(spark, tmp_path, op):
+@pytest.mark.parametrize(
+    "op, keep_last",
+    [
+        pytest.param(op, keep_last, id=op + ("" if keep_last is None else "-keep_last"))
+        for keep_last in (None, 2)
+        for op in ("pagerank", "cc", "sssp", "kssp")
+    ],
+)
+def test_converged_resume_builds_no_edge_cache(spark, tmp_path, op, keep_last):
     """Resuming a run that had already converged returns its saved state
     with no Spark job beyond reading that state back: no edge cache, no
-    width sizing, no further superstep."""
+    width sizing, no further superstep. Its history is the whole metrics
+    log, also when ``keep_last`` pruned the older supersteps' data."""
     from bluegraph_spark.operators.components import connected_components
     from bluegraph_spark.operators.paths import (
         k_shortest_distances,
@@ -235,7 +230,7 @@ def test_converged_resume_builds_no_edge_cache(spark, tmp_path, op):
             edges, "0", k=2, weight_col="strength", **kw
         ),
     }[op]
-    cp = SuperstepCheckpointer(str(tmp_path), op)
+    cp = SuperstepCheckpointer(str(tmp_path), op, keep_last=keep_last)
     done = run(checkpointer=cp)
     assert done.converged
 
