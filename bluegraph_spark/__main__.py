@@ -31,7 +31,8 @@ pipeline --corpus ... --output ...``. Subcommands:
   pipeline    corpus -> edges -> pagerank + components + lpa + triangles
 
 Every subcommand reads/writes parquet by default; pass ``--fmt iceberg``
-(and run with an Iceberg catalog configured) to read/write Iceberg tables.
+(and run with an Iceberg catalog configured) to read/write Iceberg tables;
+superstep checkpoints follow the same format.
 """
 
 from __future__ import annotations
@@ -43,7 +44,8 @@ import sys
 
 def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--output", required=True, help="output path (parquet dir / table)")
-    p.add_argument("--fmt", default="parquet", help="storage format (parquet|iceberg)")
+    p.add_argument("--fmt", default="parquet", choices=("parquet", "iceberg"),
+                   help="storage format of tables and checkpoints")
     p.add_argument("--master", default=None, help="override Spark master (else inherit)")
     p.add_argument("--shuffle-partitions", type=int, default=None)
 
@@ -83,12 +85,14 @@ def _session(args):
     return get_session(master=args.master, shuffle_partitions=args.shuffle_partitions)
 
 
-def _checkpointer(args):
+def _checkpointer(args, suffix: str = ""):
     if args.checkpoint_dir is None:
         return None
     from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 
-    return SuperstepCheckpointer(args.checkpoint_dir, run_id=args.run_id)
+    return SuperstepCheckpointer(
+        args.checkpoint_dir, run_id=args.run_id + suffix, data_format=args.fmt
+    )
 
 
 def _write(df, args):
@@ -387,7 +391,6 @@ def cmd_pipeline(args) -> dict:
     edges = _read(spark, f"{args.output}/edges", args.fmt)
 
     out = {"sha256_mismatches": mismatches}
-    cp = args.checkpoint_dir
     for name, run in (
         ("pagerank", lambda c: pagerank(edges, weight_col="npmi",
                                         checkpointer=c, resume=args.resume)),
@@ -396,10 +399,7 @@ def cmd_pipeline(args) -> dict:
         ("lpa", lambda c: label_propagation(edges, weight_col="npmi", checkpointer=c,
                                             resume=args.resume)),
     ):
-        from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-
-        ckpt = SuperstepCheckpointer(cp, run_id=f"{args.run_id}-{name}") if cp else None
-        res = run(ckpt)
+        res = run(_checkpointer(args, f"-{name}"))
         df = {"pagerank": "ranks", "components": "components", "lpa": "labels"}[name]
         getattr(res, df).write.mode("overwrite").format(args.fmt).save(
             f"{args.output}/{name}"

@@ -121,7 +121,6 @@ def connected_components(
     max_rounds: int = 50,
     checkpointer: SuperstepCheckpointer | None = None,
     resume: bool = False,
-    partitions: int | None = None,
 ) -> ComponentsResult:
     """Component labels for an undirected edge DataFrame ``(src, dst)``.
 
@@ -162,7 +161,7 @@ def connected_components(
         # cc_orders at sf0.1, the floor being per-stage fixed costs), but at
         # cluster scale a mis-sized width is the difference between 1 task
         # wave and thousands of empty tasks.
-        n_parts = int(partitions) if partitions else loop.width(prev_sig[0])
+        n_parts = loop.width(prev_sig[0])
         loop.freeze(n_parts)
         for _ in loop.supersteps(max_rounds):
             e_round, caches = _cc_round(loop, loop.state, n_parts)

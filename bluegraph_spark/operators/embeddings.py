@@ -107,7 +107,6 @@ def fastrp_embeddings(
     weight_col: str | None = None,
     seed: int | str = 42,
     directed: bool = False,
-    partitions: int | None = None,
 ) -> DataFrame:
     """FastRP node embeddings; returns ``(id string, emb array<double>)``.
 
@@ -151,7 +150,7 @@ def fastrp_embeddings(
         )
         if not directed:
             e0 = symmetrize_edges(e0)
-        e = loop.edge_cache(e0, "src", partitions)
+        e = loop.edge_cache(e0, "src")
 
         # The vertex set is read three+ times (the init projection and every
         # iteration's zero-degree left join): materialize it once instead of

@@ -82,7 +82,6 @@ def _global_rank(
     out: str,
     base: int = 0,
     dtype: str = "long",
-    partitions: int | None = None,
 ) -> DataFrame:
     """``df`` plus ``out``: each row's ``base``-based position in the
     ``cols`` total order, cast to ``dtype``.
@@ -104,7 +103,7 @@ def _global_rank(
     itself checkpointed so the intermediate blocks are released here.
     """
     spark = df.sparkSession
-    n_parts = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     with CacheScope() as scope:
         ranged = scope.checkpoint(
             df.repartitionByRange(n_parts, *cols).withColumn(
@@ -130,11 +129,11 @@ def _global_rank(
         )
 
 
-def node_index(nodes: DataFrame, id_col: str = "id", partitions: int | None = None) -> DataFrame:
+def node_index(nodes: DataFrame, id_col: str = "id") -> DataFrame:
     """(id, idx) with idx = dense 0-based rank of ``id`` in global order,
     a long; materialized (see :func:`_global_rank`)."""
     ids = nodes.select(F.col(id_col).alias("id")).distinct()
-    return _global_rank(ids, ["id"], "idx", partitions=partitions)
+    return _global_rank(ids, ["id"], "idx")
 
 
 def generate_negative_edges(

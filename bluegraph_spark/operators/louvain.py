@@ -271,22 +271,13 @@ def louvain(
     with SuperstepLoop(edges.sparkSession, checkpointer) as loop:
         edges, nodes = loop.bind(edges), loop.bind(nodes)
         w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-        e0 = loop.persist(
-            edges.select(F.col("src"), F.col("dst"), w.alias("w"))
-            .filter(F.col("src") != F.col("dst"))
+        sym = loop.edge_cache(
+            symmetrize_edges(
+                edges.select(F.col("src"), F.col("dst"), w.alias("w"))
+                .filter(F.col("src") != F.col("dst"))
+            ),
+            "dst",
         )
-        # Sized off the undirected edge count (not the doubled symmetrized
-        # count): the round's window/argmax stages degrade past ~8 tasks at
-        # this state size — measured sweep at sf0.1 (245k edges): 2 parts
-        # 15.2-16.0s, 8 parts 14.8s, 16 parts 21.7s, 31 parts 23.3s.
-        loop.freeze(loop.width(e0.count()))
-        sym = loop.persist(
-            symmetrize_edges(e0)
-            .repartition(loop.n_parts, "dst")
-            .sortWithinPartitions("dst")
-        )
-        sym.count()
-        loop.release(e0)
         if nodes is None:
             vertices = sym.select(F.col("src").alias("id")).distinct()
         else:

@@ -60,7 +60,6 @@ def label_propagation(
     nodes: DataFrame | None = None,
     checkpointer: SuperstepCheckpointer | None = None,
     resume: bool = False,
-    partitions: int | None = None,
 ) -> LPAResult:
     """Deterministic synchronous LPA over undirected ``(src, dst[, w])``.
 
@@ -89,7 +88,6 @@ def label_propagation(
                 ).filter(F.col("src") != F.col("dst"))
             ),
             "src",
-            partitions,
         )
 
         if loop.state is None:

@@ -81,6 +81,8 @@ def pagerank(
     ``resume=True`` continues from the checkpointer's latest complete
     superstep; the saved state ``(id, dangling, rank, delta)`` is all the
     next superstep needs (its dangling sum is re-derived from it).
+    ``partitions`` pins the loop width for a fixed layout; by default it
+    comes from the edge count (``SuperstepLoop.width``).
 
     Conf isolation: the superstep loop pins plan-time session conf (AQE off,
     ``spark.sql.shuffle.partitions=n_parts`` — the exchange-free superstep
@@ -129,8 +131,10 @@ def pagerank(
             vertices = out.select(F.col("src").alias("id"))
         else:
             vertices = endpoint_ids(e)
-        # Size the superstep partitioning from the measured edge count. On
-        # the common undirected default path the vertex set IS the
+        # Size the superstep partitioning from the measured edge count and
+        # freeze the plan right there (see ``SuperstepLoop.freeze``): the
+        # width is known, and every later build is an explicit repartition.
+        # On the common undirected default path the vertex set IS the
         # out-weight table, so one aggregation job yields both the edge
         # count and N (saving a separate vertices.count() job).
         N = None
@@ -147,6 +151,7 @@ def pagerank(
         else:
             n_edges_directed = out.agg(F.sum("_deg")).collect()[0][0] or 0
             n_parts = loop.width(int(n_edges_directed))
+        loop.freeze(n_parts)
         # CSR-blocked layout (north rule), derived from the raw cache: the
         # normalized transition rows, hash-partitioned by src and sorted.
         norm = loop.persist(
@@ -172,13 +177,10 @@ def pagerank(
             empty = vertices.withColumn("rank", F.lit(0.0)).select("id", "rank")
             return PageRankResult(loop.result(empty), 0, True, 0.0)
 
-        # Materialize the edge cache under AQE, then freeze the plan before
-        # the initial state materializes (see ``SuperstepLoop.freeze``).
         # Aligning the loop width with the norm partitioning keeps the
         # superstep joins exchange-free.
         norm.count()
         loop.release(e)
-        loop.freeze(n_parts)
 
         if loop.state is None:
             # Pin the initial state's layout to (id-hash, n_parts) so

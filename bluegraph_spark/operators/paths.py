@@ -75,7 +75,6 @@ def shortest_paths(
     max_iter: int = 50,
     checkpointer: SuperstepCheckpointer | None = None,
     resume: bool = False,
-    partitions: int | None = None,
 ) -> SSSPResult:
     """Single-source shortest-path distances over ``(src, dst[, w])``.
 
@@ -110,16 +109,7 @@ def shortest_paths(
         )
         if not directed:
             e = symmetrize_edges(e)
-        # Width budget 250k rows/partition, NOT the 32k superstep default:
-        # the per-round shuffled state here is the frontier/distance field —
-        # a few thousand rows on typical inputs, two orders below the edge
-        # table the budget divides — so an edge-sized fan-out buys no
-        # parallelism for the state exchanges and pays per-stage scheduling
-        # + straggler cost every round (isolated interleaved A/B at sf0.1, 6
-        # reps: sssp median 6.8s at 32k vs 6.3s at 250k, k-shortest 15.1s vs
-        # 12.1s). Loops whose round state IS the edge set (CC) keep the 32k
-        # budget — same A/B: cc_orders 10.2s at 32k vs 14.9s at 250k.
-        csr = loop.edge_cache(e, "src", partitions, rows_per_partition=250_000)
+        csr = loop.edge_cache(e, "src")
         if loop.state is None:
             id_type = dict(csr.dtypes)["src"]
             loop.start(
@@ -186,7 +176,6 @@ def k_shortest_distances(
     max_iter: int = 50,
     checkpointer: SuperstepCheckpointer | None = None,
     resume: bool = False,
-    partitions: int | None = None,
 ) -> KShortestResult:
     """k smallest DISTINCT walk lengths from ``source`` to every vertex.
 
@@ -239,12 +228,7 @@ def k_shortest_distances(
         e = edges.select(F.col("src"), F.col("dst"), w.alias("w"))
         if not directed:
             e = symmetrize_edges(e)
-        # 250k rows/partition like shortest_paths (see the comment there):
-        # the per-round label state is ≤ k·V rows, far below the edge table.
-        csr = loop.edge_cache(
-            e.filter(F.col("src") != F.col("dst")), "src", partitions,
-            rows_per_partition=250_000,
-        )
+        csr = loop.edge_cache(e.filter(F.col("src") != F.col("dst")), "src")
         if loop.state is None:
             id_type = dict(csr.dtypes)["src"]
             loop.start(

@@ -65,7 +65,6 @@ def generate_random_walks(
     weight_col: str | None = None,
     seed: int | str = 42,
     directed: bool = False,
-    partitions: int | None = None,
 ) -> DataFrame:
     """Walk corpus ``(walk_id, step, node)``, steps 0..walk_length.
 
@@ -82,7 +81,7 @@ def generate_random_walks(
         raise ValueError("walks_per_node must be >= 1")
 
     spark = edges.sparkSession
-    n_parts = int(partitions or spark.conf.get("spark.sql.shuffle.partitions"))
+    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
     e = edges.select(

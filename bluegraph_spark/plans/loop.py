@@ -9,9 +9,10 @@ Every iterative operator follows the same discipline (north rule):
 
 - it runs on its own conf-isolated ``loop_session`` of the caller's
   SparkContext, so its plan-time pins never leak into the caller;
-- it builds a CSR-blocked edge cache (hash-partitioned and sorted on the
-  join key, persisted once), sizes the shuffle width from the measured row
-  count, and then freezes AQE for its fixed-shape round plans;
+- it sizes its shuffle width from a measured row count with the one
+  rule ``width`` and freezes AQE for its fixed-shape plans as soon as the
+  width is known; ``edge_cache`` does both and then builds a CSR-blocked
+  edge cache (hash-partitioned and sorted on the join key, persisted once);
 - each superstep's vertex state is materialized once, through a
   stats-guarded ``localCheckpoint`` (the lineage cut), with the
   superstep's progress metrics riding that one job as observed metrics;
@@ -27,7 +28,7 @@ its observed columns and its convergence test::
         edges = loop.bind(edges)
         if loop.converged:                      # converged resume: no cache
             return loop.result(loop.state)
-        csr = loop.edge_cache(raw_edges, "src", partitions)
+        csr = loop.edge_cache(raw_edges, "src")
         if loop.state is None:
             loop.start(initial_state)           # iteration 0
         for it in loop.supersteps(max_iter):
@@ -55,15 +56,15 @@ from bluegraph_spark.plans.isolation import loop_session, rebind
 from bluegraph_spark.plans.planinfo import executed_exchange_count
 from bluegraph_spark.plans.stats_guard import stats_safe_local_checkpoint
 
-#: Default rows-per-partition budget for a loop's shuffle width
-#: (``SuperstepLoop.width``). Round plans are join/aggregation-heavy —
-#: several chained operators per row — so the budget is smaller than a
-#: scan-style 100 MB+ partition: ~32k rows keeps round tasks in the
-#: 100-500 ms band (measured at sf0.1: a 135k-edge CC round at 1
-#: partition ran 2-3 s serial, at 5 partitions 0.7-1.6 s). The budget is
-#: scale-neutral (not a function of local core count); production runs
-#: raise parallelism by raising ``spark.sql.shuffle.partitions``, which
-#: caps the width from above.
+#: Rows-per-partition budget of every loop's shuffle width
+#: (``SuperstepLoop.width``, the one width rule; no operator overrides it).
+#: Round plans are join/aggregation-heavy — several chained operators per
+#: row — so the budget is smaller than a scan-style 100 MB+ partition: ~32k
+#: rows keeps round tasks in the 100-500 ms band (measured at sf0.1: a
+#: 135k-edge CC round at 1 partition ran 2-3 s serial, at 5 partitions
+#: 0.7-1.6 s). The budget is scale-neutral (not a function of local core
+#: count); production runs raise parallelism by raising
+#: ``spark.sql.shuffle.partitions``, which caps the width from above.
 LOOP_ROWS_PER_PARTITION = 32_000
 
 
@@ -223,11 +224,10 @@ class SuperstepLoop(CacheScope):
 
     # -- width, freeze, edge cache -----------------------------------------
 
-    def width(self, n_rows: int, rows_per_partition: int | None = None) -> int:
-        """Shuffle width for ``n_rows`` state rows, capped by the caller's
-        ``spark.sql.shuffle.partitions``."""
-        rpp = rows_per_partition or LOOP_ROWS_PER_PARTITION
-        return max(1, min(self.conf_parts, int(n_rows) // rpp + 1))
+    def width(self, n_rows: int) -> int:
+        """Shuffle width for ``n_rows`` rows, capped by the caller's
+        ``spark.sql.shuffle.partitions``: the one width rule of every loop."""
+        return max(1, min(self.conf_parts, int(n_rows) // LOOP_ROWS_PER_PARTITION + 1))
 
     def freeze(self, n_parts: int) -> None:
         """Pin AQE off and the shuffle width for the fixed-shape rounds.
@@ -244,30 +244,23 @@ class SuperstepLoop(CacheScope):
         self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         self.spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
 
-    def edge_cache(
-        self,
-        raw: DataFrame,
-        key: str,
-        partitions: int | None = None,
-        rows_per_partition: int | None = None,
-    ) -> DataFrame:
+    def edge_cache(self, raw: DataFrame, key: str) -> DataFrame:
         """CSR-blocked edge cache: hash-partitioned by ``key`` and sorted
         within partitions, so every superstep's join on ``key`` reuses the
         layout (InMemoryTableScan reports both) without moving the big side.
 
         One pass over the (possibly expensive) raw expression: cache it,
-        size the width off its count (unless ``partitions`` is given), build
-        the clustered cache from it, drop it, then freeze the plan.
+        size the width off its count and freeze right there (the build is
+        an explicit ``repartition``, so AQE has nothing left to decide),
+        build the clustered cache from it, then drop it.
         """
         raw = self.persist(raw)
-        n_parts = (
-            int(partitions) if partitions
-            else self.width(raw.count(), rows_per_partition)
+        self.freeze(self.width(raw.count()))
+        csr = self.persist(
+            raw.repartition(self.n_parts, key).sortWithinPartitions(key)
         )
-        csr = self.persist(raw.repartition(n_parts, key).sortWithinPartitions(key))
         csr.count()
         self.release(raw)
-        self.freeze(n_parts)
         return csr
 
     # -- supersteps --------------------------------------------------------

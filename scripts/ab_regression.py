@@ -1,7 +1,8 @@
 """Controlled A/B timer for driver-bench regressions (VERDICT r04 ask).
 
 Runs a fixed warmup query then times the named queries inside a fresh
-``local[N]`` session, importing ``__spark_entry__`` from the repo root
+``local[N]`` session (N = ``SPARK_GRAFT_CPUS``, by default the cores
+this process may run on), importing ``__spark_entry__`` from the repo root
 given on the command line. Meant to be invoked as a subprocess once per
 (version, rep) cell so that JVM/session state never leaks across cells;
 the parent interleaves versions (A,B,A,B,...) so slow VM drift hits both
@@ -22,7 +23,7 @@ def main() -> None:
     repo, sf_dir, qnames = sys.argv[1], sys.argv[2], sys.argv[3].split(",")
     sys.path.insert(0, repo)
     os.chdir(repo)
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 
     from bluegraph_spark.session import get_session
 

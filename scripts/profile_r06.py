@@ -31,7 +31,7 @@ def timed(label, fn):
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     from bluegraph_spark.session import get_session
 
     spark = get_session(app_name="profile-r06", master=f"local[{cpus}]",

@@ -24,7 +24,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def main() -> None:
     from bench import HIGH, PARTS, _ensure_scaling_graph, _session
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", 32))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     spark = _session(f"local[{cpus}]", shuffle_partitions=cpus)
     graph_path = _ensure_scaling_graph(spark)
     edges = spark.read.parquet(graph_path)

@@ -9,7 +9,7 @@ import os
 
 import pytest
 
-from bluegraph_spark.__main__ import build_parser, main
+from bluegraph_spark.__main__ import _checkpointer, build_parser, main
 from bluegraph_spark.sources.synthetic import synthetic_repo_files
 from tests.graph_fixtures import _jobs_run_by
 
@@ -277,3 +277,24 @@ def test_parser_rejects_options_no_run_reads(cmd, extra):
     with pytest.raises(SystemExit) as exc:
         build_parser().parse_args(base + extra)
     assert exc.value.code == 2
+
+
+def test_parser_rejects_csv_fmt():
+    """``--fmt`` takes the formats a checkpoint reads back typed; a csv
+    checkpoint could not resume."""
+    base = ["pagerank", "--edges", "e", "--output", "o"]
+    build_parser().parse_args(base + ["--fmt", "iceberg"])
+    with pytest.raises(SystemExit) as exc:
+        build_parser().parse_args(base + ["--fmt", "csv"])
+    assert exc.value.code == 2
+
+
+def test_checkpointer_follows_fmt(tmp_path):
+    """Builds the checkpointer only: no Spark session, nothing written."""
+    args = build_parser().parse_args([
+        "pagerank", "--edges", "e", "--output", "o", "--fmt", "iceberg",
+        "--checkpoint-dir", str(tmp_path), "--run-id", "r",
+    ])
+    ckpt = _checkpointer(args, "-pagerank")
+    assert ckpt.data_format == "iceberg"
+    assert ckpt.base == os.path.join(str(tmp_path), "r-pagerank")

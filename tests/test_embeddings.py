@@ -95,7 +95,6 @@ def test_fastrp_deterministic_across_partitionings(small_edges):
         iteration_weights=WEIGHTS,
         weight_col="w",
         seed=SEED,
-        partitions=3,
     )
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 

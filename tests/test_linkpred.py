@@ -25,8 +25,11 @@ def small_edges(spark):
 
 def test_node_index_is_global_rank(spark):
     ids = ["m", "a", "z", "k", "b"]
-    df = spark.createDataFrame([(i,) for i in ids], "id string")
-    got = {r["id"]: r["idx"] for r in node_index(df, partitions=3).collect()}
+    # three range partitions for five ids
+    s3 = spark.newSession()
+    s3.conf.set("spark.sql.shuffle.partitions", "3")
+    df = s3.createDataFrame([(i,) for i in ids], "id string")
+    got = {r["id"]: r["idx"] for r in node_index(df).collect()}
     want = {v: i for i, v in enumerate(sorted(ids))}
     assert got == want
 
@@ -41,7 +44,7 @@ def test_node_index_stable_across_executions_at_sampling_scale(spark):
     n = 21_000
     ids = [f"id_{i:06d}" for i in range(n)]
     df = spark.createDataFrame([(i,) for i in ids], "id string").repartition(16)
-    out = node_index(df, partitions=8)
+    out = node_index(df)
     want = {v: i for i, v in enumerate(sorted(ids))}
     for _ in range(3):  # re-execute: the frozen frame may not drift
         got = {r["id"]: r["idx"] for r in out.collect()}

@@ -237,8 +237,7 @@ def test_k_shortest_fixed_rounds_partitioning_invariant(spark):
     )
     b = _collect_k(
         k_shortest_distances(
-            df.repartition(5), "a0", k=2, weight_col="w", max_iter=3,
-            partitions=2,
+            df.repartition(5), "a0", k=2, weight_col="w", max_iter=3
         )
     )
     assert a == b

@@ -178,18 +178,6 @@ def test_louvain_beats_or_matches_lpa_modularity(spark):
     assert q_lv > 0.15  # karate has clear community structure
 
 
-def test_louvain_deterministic_across_partitionings(spark):
-    from bluegraph_spark.operators.louvain import louvain
-
-    g = karate()
-    e = nx_to_edges_df(spark, g, weight="strength")
-    a = louvain(e, weight_col="strength", exact_rounds=4)
-    b = louvain(e.repartition(7), weight_col="strength", exact_rounds=4)
-    rows_a = sorted((r["id"], r["community"]) for r in a.labels.collect())
-    rows_b = sorted((r["id"], r["community"]) for r in b.labels.collect())
-    assert rows_a == rows_b
-
-
 def test_louvain_labels_are_vertex_ids_and_cover(spark):
     from bluegraph_spark.operators.louvain import louvain
 

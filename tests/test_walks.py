@@ -77,8 +77,12 @@ def test_walks_match_pure_python(walk_graph):
     assert got == _py_walks(rows, 7, 3, 9)
 
 
-def test_walks_partitioning_invariant(walk_graph):
-    df, _ = walk_graph
+def test_walks_partitioning_invariant(spark, walk_graph):
+    df, rows = walk_graph
+    # the neighbor table takes its width from the input's session
+    s3 = spark.newSession()
+    s3.conf.set("spark.sql.shuffle.partitions", "3")
+    df3 = s3.createDataFrame(rows, df.schema)
     a = sorted(
         map(
             tuple,
@@ -91,8 +95,7 @@ def test_walks_partitioning_invariant(walk_graph):
         map(
             tuple,
             generate_random_walks(
-                df.repartition(7), walk_length=5, weight_col="w", seed=3,
-                partitions=3,
+                df3.repartition(7), walk_length=5, weight_col="w", seed=3
             ).collect(),
         )
     )
