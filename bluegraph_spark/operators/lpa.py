@@ -21,10 +21,12 @@ labels is asserted at convergence (north rule).
 
 Superstep plan (same scale design as pagerank.py): the symmetrized edge
 table is CSR-blocked (hash-partitioned by src, sorted, cached) so the
-per-superstep label join re-shuffles only the small label state; the
-weighted-majority argmax is a ``min_by`` over (-weight, label) — struct
-ordering gives the max-weight / min-label tie-break in one aggregation, no
-window; the change count rides the checkpoint materialization as an
+per-superstep label join re-shuffles only the small label state; both
+state joins are hinted ``merge``, so the label state, small enough for
+``autoBroadcastJoinThreshold``, never goes out as an extra broadcast job
+per superstep; the weighted-majority argmax is a ``min_by`` over
+(-weight, label) — struct ordering gives the max-weight / min-label
+tie-break in one aggregation, no window; the change count rides the checkpoint materialization as an
 observed metric; AQE and the shuffle width are frozen inside the loop.
 """
 
@@ -114,7 +116,10 @@ def label_propagation(
 
         for _ in loop.supersteps(max_iter):
             scores = (
-                e.join(labels.select(F.col("id").alias("src"), "label"), "src")
+                e.join(
+                    labels.select(F.col("id").alias("src"), "label").hint("merge"),
+                    "src",
+                )
                 .groupBy(F.col("dst").alias("id"), "label")
                 .agg(F.sum("w").alias("s"))
             )
@@ -126,7 +131,7 @@ def label_propagation(
                     "label", F.struct((-F.col("s")).alias("ns"), F.col("label"))
                 ).alias("_new")
             )
-            new_labels = labels.join(best, "id", "left").select(
+            new_labels = labels.join(best.hint("merge"), "id", "left").select(
                 "id",
                 F.coalesce("_new", "label").alias("label"),
                 (F.coalesce("_new", "label") != F.col("label")).alias("_changed"),

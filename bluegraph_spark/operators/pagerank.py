@@ -13,19 +13,28 @@ One deliberate divergence: a vertex whose out-weight sum is exactly 0 (all
 incident weights 0) is treated as dangling; NetworkX propagates NaN there
 (0/0 in ``stochastic_graph``). NaN-free is the only sane distributed choice.
 
-Scale design:
-- the normalized edge table is computed once, hash-partitioned by ``src``
-  and persisted — each superstep joins it with the (much smaller) rank
+Scale design (one job per superstep, two before the loop plus the sizing
+count when ``partitions`` is unset):
+- the vertex state ``(id, dangling)`` comes out of one aggregation over
+  the edge endpoints, hash-partitioned on id at the loop width; N and the
+  dangling count ride that job as observed metrics;
+- the normalized edge table is built in one job: the edges repartitioned
+  by ``src``, joined co-partitioned with their out-weight sums, cached
+  sorted on ``src`` — each superstep joins it with the (much smaller) rank
   state without re-shuffling the big side;
+- both state joins are hinted ``merge``: the state fits under
+  ``autoBroadcastJoinThreshold``, and a broadcast would cost every
+  superstep a second job that re-ships the O(V) state;
 - each superstep materializes vertex state once, through the loop's
   stats-guarded ``localCheckpoint`` (lineage cut); the L1 error and the
   next dangling sum ride that job as observed metrics. A
   ``SuperstepCheckpointer`` adds one job that writes those blocks
   (resumability, north rule) and takes the per-partition lineage from
   that write's task metrics;
-- hub skew in ``groupBy(dst)`` is absorbed by map-side partial aggregation
-  (sum is algebraic) plus AQE; no per-key salting is needed for an
-  algebraic aggregate.
+- hub skew in ``groupBy(dst)`` and in the out-weight ``groupBy(src)`` is
+  absorbed by map-side partial aggregation (sum is algebraic: a hub costs
+  one partial row per map task); AQE is off inside the loop, so nothing
+  splits a hub's partition, and no per-key salting is needed.
 """
 
 from __future__ import annotations
@@ -36,7 +45,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import endpoint_ids, symmetrize_edges, vertex_ids
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -60,6 +69,34 @@ def _dangling_mass():
     return F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))
 
 
+def _vertex_state(e: DataFrame, nodes: DataFrame | None) -> DataFrame:
+    """``(id, dangling)`` in one aggregation over ``(src, w) ∪ (dst, 0)``.
+
+    Dangling means no out-edges or a zero out-weight sum (NULL weights
+    count as absent). Its output is hash-partitioned on id at the loop
+    width, the layout both superstep joins read. With a caller ``nodes``
+    frame the vertex set is exactly its ids: isolated ones join at weight
+    0, and endpoints missing from it are dropped, as the superstep joins
+    drop their edges.
+    """
+    ids = e.select(F.col("src").alias("id"), "w").unionByName(
+        e.select(F.col("dst").alias("id"), F.lit(0.0).alias("w"))
+    )
+    dangling = (~F.coalesce(F.sum("w") > 0, F.lit(False))).alias("dangling")
+    if nodes is None:
+        return ids.groupBy("id").agg(dangling)
+    return (
+        ids.withColumn("_listed", F.lit(False))
+        .unionByName(
+            nodes.select("id", F.lit(0.0).alias("w"), F.lit(True).alias("_listed"))
+        )
+        .groupBy("id")
+        .agg(dangling, F.max("_listed").alias("_listed"))
+        .filter("_listed")
+        .drop("_listed")
+    )
+
+
 def pagerank(
     edges: DataFrame,
     weight_col: str | None = None,
@@ -79,8 +116,9 @@ def pagerank(
     endpoint set. ``tol=0`` runs exactly ``max_iter`` supersteps
     (fixed-iteration mode, used by the DuckDB differential oracle).
     ``resume=True`` continues from the checkpointer's latest complete
-    superstep; the saved state ``(id, dangling, rank, delta)`` is all the
-    next superstep needs (its dangling sum is re-derived from it).
+    superstep; the saved state ``(id, dangling, rank, delta)`` — at
+    iteration 0 just ``(id, dangling)``, every rank being 1/N — is all the
+    next superstep needs (N and its dangling sum are re-derived from it).
     ``partitions`` pins the loop width for a fixed layout; by default it
     comes from the edge count (``SuperstepLoop.width``).
 
@@ -111,93 +149,60 @@ def pagerank(
             e = symmetrize_edges(e)
 
         # The raw edge expression may itself be expensive (e.g. a
-        # co-occurrence self-join); cache it so sizing, out-weights, and the
-        # normalized table cost exactly ONE pass over the source, then drop
-        # it once the derived caches are materialized.
+        # co-occurrence self-join); cache it so the sizing count, the
+        # vertex-state aggregation and the CSR build cost ONE pass over the
+        # source, then drop it once both are materialized.
         e = loop.persist(e)
-
-        # Out-weight normalization (NetworkX stochastic_graph): w_uv / Σ_v
-        # w_uv. ``out`` is persisted because three consumers read it (norm,
-        # the dangling flags, and — on superstep 1 — the state recompute).
-        out = loop.persist(
-            e.groupBy("src").agg(F.sum("w").alias("out_w"), F.count("*").alias("_deg"))
-        )
-
-        if nodes is not None:
-            vertices = vertex_ids(nodes, edges)
-        elif not directed:
-            # Symmetrized graph: every vertex appears as a src, so the
-            # (cached, already-distinct) out-weight table IS the vertex set.
-            vertices = out.select(F.col("src").alias("id"))
-        else:
-            vertices = endpoint_ids(e)
-        # Size the superstep partitioning from the measured edge count and
-        # freeze the plan right there (see ``SuperstepLoop.freeze``): the
-        # width is known, and every later build is an explicit repartition.
-        # On the common undirected default path the vertex set IS the
-        # out-weight table, so one aggregation job yields both the edge
-        # count and N (saving a separate vertices.count() job).
-        N = None
-        if partitions:
-            n_parts = int(partitions)
-            if nodes is None and not directed:
-                N = out.count()
-        elif nodes is None and not directed:
-            row = out.agg(
-                F.count(F.lit(1)).alias("_n"), F.sum("_deg").alias("_m")
-            ).collect()[0]
-            N = int(row["_n"] or 0)
-            n_parts = loop.width(int(row["_m"] or 0))
-        else:
-            n_edges_directed = out.agg(F.sum("_deg")).collect()[0][0] or 0
-            n_parts = loop.width(int(n_edges_directed))
-        loop.freeze(n_parts)
-        # CSR-blocked layout (north rule), derived from the raw cache: the
-        # normalized transition rows, hash-partitioned by src and sorted.
-        norm = loop.persist(
-            e.join(out.filter(F.col("out_w") > 0), "src")
-            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
-            .repartition(n_parts, "src")
-            .sortWithinPartitions("src")
-        )
-        # Dangling = no out-edges or zero out-weight sum.
-        has_out = out.filter(F.col("out_w") > 0).select(
-            F.col("src").alias("id"), F.lit(False).alias("dangling")
-        )
-        vstate0 = vertices.join(has_out, "id", "left").select(
-            "id", F.coalesce("dangling", F.lit(True)).alias("dangling")
-        )
-
-        if N is None:
-            N = vertices.count()
-        if N == 0:
-            # empty result keeps the caller's id type (vertices schema), not
-            # a hardcoded string — unioning/joining against pagerank output
-            # must see one type contract whether or not the graph is empty
-            empty = vertices.withColumn("rank", F.lit(0.0)).select("id", "rank")
-            return PageRankResult(loop.result(empty), 0, True, 0.0)
-
-        # Aligning the loop width with the norm partitioning keeps the
-        # superstep joins exchange-free.
-        norm.count()
-        loop.release(e)
+        loop.freeze(int(partitions) if partitions else loop.width(e.count()))
 
         if loop.state is None:
-            # Pin the initial state's layout to (id-hash, n_parts) so
-            # superstep 1's joins are already exchange-free. The uniform
-            # start's dangling sum rides its materialization job.
+            if nodes is not None:
+                nodes = vertex_ids(nodes, edges)
             loop.start(
-                vstate0.withColumn("rank", F.lit(1.0 / N))
-                .withColumn("delta", F.lit(0.0))
-                .repartition(n_parts, "id"),
-                _dangling_mass().alias("dsum"),
+                _vertex_state(e, nodes),
+                F.count(F.lit(1)).alias("rows"),
+                F.sum(F.col("dangling").cast("long")).alias("nd"),
                 fields=lambda m: {
-                    "danglesum": float(m["dsum"] or 0.0), "converged": False
+                    "rows": int(m["rows"]),
+                    "danglesum": int(m["nd"] or 0) / max(int(m["rows"]), 1),
+                    "converged": False,
                 },
             )
-            danglesum = loop.record["danglesum"]
+            N, danglesum = loop.record["rows"], loop.record["danglesum"]
+        elif "rank" not in loop.state.columns:
+            # resumed at iteration 0: every rank is still 1/N
+            N, nd = loop.state.agg(
+                F.count(F.lit(1)), F.sum(F.col("dangling").cast("long"))
+            ).first()
+            danglesum = (nd or 0) / max(N, 1)
         else:
-            danglesum = float(loop.state.agg(_dangling_mass()).first()[0] or 0.0)
+            N, danglesum = loop.state.agg(F.count(F.lit(1)), _dangling_mass()).first()
+            danglesum = float(danglesum or 0.0)
+        if N == 0:
+            # empty result keeps the caller's id type (the state's schema),
+            # not a hardcoded string — unioning/joining against pagerank
+            # output must see one type contract whether or not the graph is
+            # empty
+            empty = loop.state.select("id", F.lit(0.0).alias("rank"))
+            return PageRankResult(loop.result(empty), 0, True, 0.0)
+
+        # Out-weight normalization (NetworkX stochastic_graph): w_uv / Σ_v
+        # w_uv. CSR-blocked layout (north rule), one job over the raw cache:
+        # the edges repartitioned by src, joined co-partitioned with their
+        # out-weight sums (a groupBy, partially aggregated before its
+        # shuffle to the same hash layout), so the normalized transition
+        # rows come out hash-partitioned and sorted on src. An aggregate,
+        # not a window over src: a hub costs one partial-sum row per map
+        # task, not a buffered partition.
+        out = e.groupBy("src").agg(F.sum("w").alias("out_w"))
+        norm = loop.persist(
+            e.repartition(loop.n_parts, "src")
+            .join(out.filter(F.col("out_w") > 0).hint("merge"), "src")
+            .select("src", "dst", (F.col("w") / F.col("out_w")).alias("p"))
+            .sortWithinPartitions("src")
+        )
+        norm.count()
+        loop.release(e)
 
         def record(m) -> dict[str, Any]:
             err = float(m["err"] or 0.0)
@@ -211,24 +216,31 @@ def pagerank(
         err = float("inf")
         for _ in loop.supersteps(max_iter):
             state = loop.state
+            if "rank" not in state.columns:  # iteration 0, fresh or resumed
+                state = state.withColumn("rank", F.lit(1.0 / N))
             base = (1.0 - alpha) / N + alpha * danglesum / N
             # One exchange per superstep: the message shuffle inside the
             # groupBy. Both the norm join (cached side pre-partitioned and
             # pre-sorted on src) and the rank-update left join (contribs
             # and state both hash-partitioned on id with the same partition
             # count — localCheckpoint preserves output partitioning) run
-            # without re-shuffling. Keeping the shuffled message rows to
+            # without re-shuffling, as merge joins: the state fits under
+            # autoBroadcastJoinThreshold, and broadcasting it would add a
+            # job to every superstep. Keeping the shuffled message rows to
             # (dst, p*rank) measures ~10% faster end-to-end than folding the
             # state through the same shuffle.
             contribs = (
-                norm.join(state.select(F.col("id").alias("src"), "rank"), "src")
+                norm.join(
+                    state.select(F.col("id").alias("src"), "rank").hint("merge"),
+                    "src",
+                )
                 .groupBy(F.col("dst").alias("id"))
                 .agg(F.sum(F.col("p") * F.col("rank")).alias("c"))
             )
             new_rank = F.lit(alpha) * F.coalesce("c", F.lit(0.0)) + F.lit(base)
             new_state = (
                 state.select("id", "dangling", F.col("rank").alias("prev"))
-                .join(contribs, "id", "left")
+                .join(contribs.hint("merge"), "id", "left")
                 .select(
                     "id",
                     "dangling",

@@ -16,6 +16,11 @@ def spark():
         # threads than cores only adds contention.
         master=f"local[{os.environ.get('SPARK_GRAFT_CPUS') or 8}]",
         shuffle_partitions=8,
-        extra_confs={"spark.sql.ansi.enabled": "true"},
+        # A test-sized heap, not the engine's 20g default: on a 15 GB,
+        # 4-core box a 20g JVM grew until the kernel OOM-killed it mid-suite.
+        extra_confs={
+            "spark.sql.ansi.enabled": "true",
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "4g"),
+        },
     )
     yield s

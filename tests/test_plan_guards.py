@@ -42,16 +42,22 @@ def no_broadcast(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
 
 
-@pytest.fixture(params=["local", "checkpointer", "int-nodes", "string-nodes"])
-def loop_kwargs(request, graph, tmp_path):
+@pytest.fixture(
+    params=["local", "checkpointer", "int-nodes", "string-nodes", "alias-nodes"]
+)
+def loop_kwargs(request, spark, graph, tmp_path):
     """Ways a loop can run at the same budget: a storage checkpointer
     writes the same local checkpoint the loop reads on, and a caller's
     ``nodes`` frame of another id type is cast to the edges' type, so the
-    vertex set joins the edge cache without an exchange."""
+    vertex set joins the edge cache without an exchange. ``alias-nodes``
+    is a ``nodes`` id of the edges' type under a no-op cast and alias,
+    which the optimizer strips."""
     if request.param == "local":
         return {}
     if request.param == "checkpointer":
         return {"checkpointer": SuperstepCheckpointer(str(tmp_path))}
+    if request.param == "alias-nodes":
+        return {"nodes": spark.range(300).select(F.col("id").cast("long").alias("id"))}
     ids = graph.select(F.col("src").alias("id")).union(graph.select("dst"))
     id_type = request.param.split("-")[0]
     return {"nodes": ids.select(F.col("id").cast(id_type).alias("id"))}
@@ -93,13 +99,20 @@ def test_cc_round_exchange_budget(spark, no_broadcast):
 
 
 def test_lpa_superstep_exchange_budget(
-    graph, no_broadcast, loop_kwargs, monkeypatch
+    graph, no_broadcast, loop_kwargs, monkeypatch, request
 ):
     # superstep 1 runs on labels ≡ ids, which lets the planner elide the
     # scores exchange through the alias equivalence: budget is 1 there and
     # at most 2 on later supersteps — guard the snapshot at 1. The width
     # rule gives the 1196 symmetrized edge rows width 4 at 300 rows per
     # partition.
+    if request.node.callspec.params["loop_kwargs"] == "alias-nodes":
+        request.applymarker(pytest.mark.xfail(
+            strict=True,
+            reason="the optimizer strips the no-op alias of the nodes id, so "
+            "the checkpointed vertex set's hash partitioning is on an "
+            "attribute the superstep joins do not read: 4 exchanges",
+        ))
     monkeypatch.setattr(loop_module, "LOOP_ROWS_PER_PARTITION", 300)
     res = label_propagation(graph, weight_col="w", max_iter=2, **loop_kwargs)
     assert re.search(r"hashpartitioning\(src#\d+L, 4\)", res.superstep_plan)
@@ -110,20 +123,48 @@ def test_lpa_superstep_exchange_budget(
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="ROADMAP G: at width 1 repartition(1, key) plans as a "
-    "SinglePartition exchange, so the checkpointed state carries no hash "
-    "partitioning and both sides of the state join are re-shuffled",
-)
 @pytest.mark.parametrize(
-    "op", [pagerank, label_propagation], ids=["pagerank", "lpa"]
+    "op, kwargs",
+    [(pagerank, {"partitions": 4, "tol": 0.0}), (label_propagation, {})],
+    ids=["pagerank", "lpa"],
+)
+def test_superstep_never_broadcasts_the_state(graph, op, kwargs, monkeypatch):
+    """At the session's default ``autoBroadcastJoinThreshold`` the O(V)
+    state fits under it; the merge hints on the state joins keep the
+    co-partitioned join, so no superstep runs a broadcast job. LPA runs at
+    width 4 through the smaller row budget."""
+    monkeypatch.setattr(loop_module, "LOOP_ROWS_PER_PARTITION", 300)
+    res = op(graph, weight_col="w", max_iter=2, **kwargs)
+    assert "BroadcastExchange" not in res.superstep_plan, res.superstep_plan
+    assert res.superstep_exchanges == 1, res.superstep_plan
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        pytest.param(pagerank, id="pagerank"),
+        pytest.param(
+            label_propagation,
+            id="lpa",
+            marks=pytest.mark.xfail(
+                strict=True,
+                reason="ROADMAP G: at width 1 repartition(1, key) plans as a "
+                "SinglePartition exchange, so LPA's checkpointed vertex set "
+                "carries no hash partitioning and both sides of the state "
+                "join are re-shuffled",
+            ),
+        ),
+    ],
 )
 def test_width_one_superstep_is_single_exchange(graph, no_broadcast, op):
-    # no partitions, no monkeypatch: 600 edges are width 1 under the rule
+    # No partitions, no monkeypatch: 600 edges are width 1 under the rule.
+    # PageRank's state comes out of an aggregation, as
+    # hashpartitioning(id, 1), and its CSR build's repartition(1, src) as a
+    # single partition; its joins and message groupBy accept both as they
+    # are, so its superstep runs no exchange at all.
     kwargs = {"tol": 0.0} if op is pagerank else {}
     res = op(graph, weight_col="w", max_iter=2, **kwargs)
-    assert res.superstep_exchanges == 1, res.superstep_plan
+    assert res.superstep_exchanges <= 1, res.superstep_plan
 
 
 def test_plan_has_python_stage_detects_all_udf_shapes(spark):
