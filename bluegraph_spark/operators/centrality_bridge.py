@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import endpoint_ids
+from bluegraph_spark.pgframe import vertex_set
 
 DEFAULT_MAX_NODES = 100_000
 DEFAULT_MAX_EDGES = 2_000_000
@@ -59,7 +59,7 @@ def _collect_graph(
             "forest / subgraph), or raise the gate explicitly if you "
             "accept an O(V*E) in-process computation"
         )
-    n_nodes = endpoint_ids(e).count()
+    n_nodes = vertex_set(e).count()
     if n_nodes > max_nodes:
         raise ValueError(
             f"graph has {n_nodes} nodes > max_nodes={max_nodes}: see the "

@@ -55,7 +55,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bluegraph_spark.operators.linkpred import QUANTUM, portable_hash
-from bluegraph_spark.pgframe import endpoint_ids, symmetrize_edges
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_set
 from bluegraph_spark.plans.loop import SuperstepLoop
 
 
@@ -154,8 +154,8 @@ def fastrp_embeddings(
 
         # The vertex set is read three+ times (the init projection and every
         # iteration's zero-degree left join): materialize it once instead of
-        # re-running the union+distinct over the edge cache per consumer.
-        nodes = loop.checkpoint(endpoint_ids(e))
+        # re-running the vertex-set aggregation over the edge cache per consumer.
+        nodes = loop.checkpoint(vertex_set(e))
 
         cur = loop.checkpoint(
             _l2_normalize(_init_embedding(nodes, dim, seed))

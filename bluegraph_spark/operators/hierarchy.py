@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from bluegraph_spark.operators.components import connected_components
 from bluegraph_spark.operators.linkpred import _global_rank
 from bluegraph_spark.operators.mst import minimum_spanning_forest
-from bluegraph_spark.pgframe import endpoint_ids
+from bluegraph_spark.pgframe import vertex_set
 from bluegraph_spark.plans.loop import CacheScope
 
 
@@ -120,7 +120,7 @@ def single_linkage_clusters(
         # source. Measured at sf0.1 (hierarchy_suppliers): 3 full co-occurrence
         # builds → 1, ~34s → ~14s end to end.
         edges = scope.checkpoint(edges.select("src", "dst", distance_col))
-        nodes = scope.checkpoint(endpoint_ids(edges))
+        nodes = scope.checkpoint(vertex_set(edges))
 
         if threshold is not None:
             kept = edges.filter(F.col(distance_col) <= threshold)

@@ -47,8 +47,10 @@ comparisons may differ across engines (documented, like the LPA
 determinism note).
 
 Scale design (same loop discipline as pagerank/lpa): the symmetrized
-loop-free edge table is repartitioned by ``dst``, sorted and persisted
-once per level (the per-round k_{i,c} join reads the cache; the round's
+edge table is repartitioned by ``dst``, sorted and persisted once per
+level; level 1 takes its vertex set (``pgframe.vertex_set``, self-loop-only
+vertices included) from that cache and its rounds read the cache's
+loop-free view (the per-round k_{i,c} join reads the cache; the round's
 shuffles are the two aggregations ``groupBy(id, c)`` / ``groupBy(c)`` and
 the argmax window — all keyed on small per-vertex/per-community state, not
 the edge table); AQE and the shuffle width are frozen on the loop's own
@@ -67,7 +69,7 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_set
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -98,7 +100,8 @@ def _local_move_rounds(
 ) -> tuple[DataFrame, bool]:
     """Run local-move rounds at one level; returns (labels, converged).
 
-    ``sym``: symmetrized loop-free (src, dst, w) — persisted by the caller.
+    ``sym``: symmetrized loop-free (src, dst, w) — the caller's cache or,
+    at level 1, its loop-free view.
     ``loops``: (id, lw) self-loop weights (empty at level 1).
     ``labels``: (id, c) current assignment, ``tm``: the scalar 2m.
     """
@@ -271,21 +274,16 @@ def louvain(
     with SuperstepLoop(edges.sparkSession, checkpointer) as loop:
         edges, nodes = loop.bind(edges), loop.bind(nodes)
         w = F.col(weight_col).cast("double") if weight_col else F.lit(1.0)
-        sym = loop.edge_cache(
-            symmetrize_edges(
-                edges.select(F.col("src"), F.col("dst"), w.alias("w"))
-                .filter(F.col("src") != F.col("dst"))
-            ),
+        cached = loop.edge_cache(
+            symmetrize_edges(edges.select(F.col("src"), F.col("dst"), w.alias("w"))),
             "dst",
         )
-        if nodes is None:
-            vertices = sym.select(F.col("src").alias("id")).distinct()
-        else:
-            vertices = vertex_ids(nodes, edges)
-
-        labels = loop.checkpoint(vertices.select("id", F.col("id").alias("c")))
-        # level-1 graphs are loop-free (filtered above); loops appear at
-        # level 2+
+        labels = loop.checkpoint(
+            vertex_set(cached, nodes).select("id", F.col("id").alias("c"))
+        )
+        # The vertex set keeps self-loop-only vertices; the level-1 rounds
+        # read the loop-free view of the cache (loops appear at level 2+).
+        sym = cached.filter(F.col("src") != F.col("dst"))
         loops = labels.select("id", F.lit(0.0).alias("lw")).limit(0)
 
         levels_run = 0

@@ -20,14 +20,18 @@ The matching pure-Python oracle lives in the test suite; exact equality of
 labels is asserted at convergence (north rule).
 
 Superstep plan (same scale design as pagerank.py): the symmetrized edge
-table is CSR-blocked (hash-partitioned by src, sorted, cached) so the
-per-superstep label join re-shuffles only the small label state; both
-state joins are hinted ``merge``, so the label state, small enough for
-``autoBroadcastJoinThreshold``, never goes out as an extra broadcast job
-per superstep; the weighted-majority argmax is a ``min_by`` over
-(-weight, label) — struct ordering gives the max-weight / min-label
-tie-break in one aggregation, no window; the change count rides the checkpoint materialization as an
-observed metric; AQE and the shuffle width are frozen inside the loop.
+table, self-loops included, is CSR-blocked (hash-partitioned by src,
+sorted, cached) and the vertex set is ``pgframe.vertex_set`` over that
+cache, so a self-loop-only vertex keeps its own label and the label state
+comes out of one aggregation hash-partitioned on id; the per-superstep
+label join reads the loop-free view of the cache and re-shuffles only the
+small label state; both state joins are hinted ``merge``, so the label
+state, small enough for ``autoBroadcastJoinThreshold``, never goes out as
+an extra broadcast job per superstep; the weighted-majority argmax is a
+``min_by`` over (-weight, label) — struct ordering gives the max-weight /
+min-label tie-break in one aggregation, no window; the change count rides
+the checkpoint materialization as an observed metric; AQE and the shuffle
+width are frozen inside the loop.
 """
 
 from __future__ import annotations
@@ -38,7 +42,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_set
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -81,42 +85,32 @@ def label_propagation(
         # Ids (and therefore labels) keep their native type; the min-label
         # tie-break uses that type's ordering (numeric for ints,
         # lexicographic for strings).
+        # Self-loops stay in the cache, so their vertices stay in the vertex
+        # set; only the score join drops them.
         e = loop.edge_cache(
             symmetrize_edges(
                 edges.select(
                     F.col("src").alias("src"),
                     F.col("dst").alias("dst"),
                     w.alias("w"),
-                ).filter(F.col("src") != F.col("dst"))
+                )
             ),
             "src",
         )
 
         if loop.state is None:
-            # Vertex set from the CSR cache, NOT from the raw edges: a
-            # vertices plan rooted on the dropped raw cache would silently
-            # re-execute the full (possibly expensive) upstream edge
-            # expression — measured as an extra complete co-occurrence join
-            # per LPA call on lazy inputs.
-            if nodes is None:
-                # symmetrized + self-loop-free: the src set IS the vertex set
-                vertices = e.select(F.col("src").alias("id")).distinct()
-            else:
-                vertices = vertex_ids(nodes, edges)
-            # Checkpoint the single-column vertex set; label = id is added
-            # below as a lazy projection ABOVE the scan: checkpointing (id,
-            # id AS label) lets the optimizer express the captured
-            # partitioning through the label alias instead of id, which
-            # strands both superstep joins on an unusable clustering
-            # (measured: +2 exchanges on superstep 1).
-            loop.start(vertices.repartition(loop.n_parts, "id"))
+            # One column: label = id is added below, above the checkpoint;
+            # checkpointing (id, id AS label) lets the optimizer express the
+            # captured partitioning through the alias instead of id.
+            loop.start(vertex_set(e, nodes))
         labels = loop.state
         if "label" not in labels.columns:  # iteration 0, fresh or resumed
             labels = labels.withColumn("label", F.col("id"))
 
         for _ in loop.supersteps(max_iter):
             scores = (
-                e.join(
+                e.filter(F.col("src") != F.col("dst"))
+                .join(
                     labels.select(F.col("id").alias("src"), "label").hint("merge"),
                     "src",
                 )

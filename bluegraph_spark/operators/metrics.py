@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import endpoint_ids, symmetrize_edges, vertex_ids
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids, vertex_set
 from bluegraph_spark.plans.loop import CacheScope
 
 
@@ -62,10 +62,7 @@ def density(edges: DataFrame, nodes: DataFrame | None = None, directed: bool = F
     """m / (n(n-1)), doubled when undirected (reference core/io.py:610-615)."""
     with CacheScope() as scope:
         e = scope.persist(edges.select(F.col("src"), F.col("dst")))
-        if nodes is None:
-            n = endpoint_ids(e).count()
-        else:
-            n = nodes.select(nodes.columns[0]).distinct().count()
+        n = vertex_set(e, nodes).count()
         m = e.count()
     if n < 2:
         return 0.0

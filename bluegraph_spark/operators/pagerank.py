@@ -15,8 +15,9 @@ incident weights 0) is treated as dangling; NetworkX propagates NaN there
 
 Scale design (one job per superstep, two before the loop plus the sizing
 count when ``partitions`` is unset):
-- the vertex state ``(id, dangling)`` comes out of one aggregation over
-  the edge endpoints, hash-partitioned on id at the loop width; N and the
+- the vertex state ``(id, dangling)`` is ``pgframe.vertex_set`` over the
+  raw edge cache: one aggregation over the edge endpoints (self-loop-only
+  vertices included), hash-partitioned on id at the loop width; N and the
   dangling count ride that job as observed metrics;
 - the normalized edge table is built in one job: the edges repartitioned
   by ``src``, joined co-partitioned with their out-weight sums, cached
@@ -45,7 +46,7 @@ from typing import Any
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import symmetrize_edges, vertex_ids
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_set
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 from bluegraph_spark.plans.loop import SuperstepLoop
 
@@ -69,34 +70,6 @@ def _dangling_mass():
     return F.sum(F.when(F.col("dangling"), F.col("rank")).otherwise(0.0))
 
 
-def _vertex_state(e: DataFrame, nodes: DataFrame | None) -> DataFrame:
-    """``(id, dangling)`` in one aggregation over ``(src, w) ∪ (dst, 0)``.
-
-    Dangling means no out-edges or a zero out-weight sum (NULL weights
-    count as absent). Its output is hash-partitioned on id at the loop
-    width, the layout both superstep joins read. With a caller ``nodes``
-    frame the vertex set is exactly its ids: isolated ones join at weight
-    0, and endpoints missing from it are dropped, as the superstep joins
-    drop their edges.
-    """
-    ids = e.select(F.col("src").alias("id"), "w").unionByName(
-        e.select(F.col("dst").alias("id"), F.lit(0.0).alias("w"))
-    )
-    dangling = (~F.coalesce(F.sum("w") > 0, F.lit(False))).alias("dangling")
-    if nodes is None:
-        return ids.groupBy("id").agg(dangling)
-    return (
-        ids.withColumn("_listed", F.lit(False))
-        .unionByName(
-            nodes.select("id", F.lit(0.0).alias("w"), F.lit(True).alias("_listed"))
-        )
-        .groupBy("id")
-        .agg(dangling, F.max("_listed").alias("_listed"))
-        .filter("_listed")
-        .drop("_listed")
-    )
-
-
 def pagerank(
     edges: DataFrame,
     weight_col: str | None = None,
@@ -111,10 +84,12 @@ def pagerank(
 ) -> PageRankResult:
     """PageRank over an edge DataFrame ``(src, dst[, weight_col])``.
 
-    ``nodes``: optional (id) DataFrame including isolated vertices, its ids
-    cast to the edges' id type (``pgframe.vertex_ids``); defaults to the
-    endpoint set. ``tol=0`` runs exactly ``max_iter`` supersteps
-    (fixed-iteration mode, used by the DuckDB differential oracle).
+    ``nodes``: optional (id) DataFrame; the vertex set is then exactly its
+    ids, cast to the edges' id type (``pgframe.vertex_set``): listed
+    isolated vertices are dangling, unlisted endpoints are dropped.
+    Defaults to the endpoint set. ``tol=0`` runs exactly ``max_iter``
+    supersteps (fixed-iteration mode, used by the DuckDB differential
+    oracle).
     ``resume=True`` continues from the checkpointer's latest complete
     superstep; the saved state ``(id, dangling, rank, delta)`` — at
     iteration 0 just ``(id, dangling)``, every rank being 1/N — is all the
@@ -156,10 +131,11 @@ def pagerank(
         loop.freeze(int(partitions) if partitions else loop.width(e.count()))
 
         if loop.state is None:
-            if nodes is not None:
-                nodes = vertex_ids(nodes, edges)
+            # dangling: no out-edges or a zero out-weight sum (NULL weights
+            # count as absent)
+            dangling = ~F.coalesce(F.sum("w") > 0, F.lit(False))
             loop.start(
-                _vertex_state(e, nodes),
+                vertex_set(e, nodes, dangling.alias("dangling")),
                 F.count(F.lit(1)).alias("rows"),
                 F.sum(F.col("dangling").cast("long")).alias("nd"),
                 fields=lambda m: {

@@ -43,7 +43,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import vertex_ids
+from bluegraph_spark.pgframe import vertex_set
 from bluegraph_spark.plans.loop import CacheScope
 
 # Entries (= oriented edges) of the adjacency table below which it is
@@ -143,16 +143,9 @@ def triangle_counts(edges: DataFrame, nodes: DataFrame | None = None) -> DataFra
             F.explode(F.array(F.col("x"), F.col("y"), F.col("z"))).alias("id")
         )
         counts = corners.groupBy("id").agg(F.count("*").alias("triangles"))
-        if nodes is None:
-            # vertex set from the cached canonical table — not a re-evaluation
-            # of the upstream edge expression
-            vertices = (
-                canon.select(F.col("a").alias("id"))
-                .unionByName(canon.select(F.col("b").alias("id")))
-                .distinct()
-            )
-        else:
-            vertices = vertex_ids(nodes, edges)
+        # vertex set from the cached canonical table (self-loops kept) — not
+        # a re-evaluation of the upstream edge expression
+        vertices = vertex_set(canon.toDF("src", "dst"), nodes)
         out = vertices.join(counts, "id", "left").select(
             "id", F.coalesce("triangles", F.lit(0)).cast("long").alias("triangles")
         )

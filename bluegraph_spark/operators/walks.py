@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from bluegraph_spark.pgframe import endpoint_ids, symmetrize_edges
+from bluegraph_spark.pgframe import symmetrize_edges, vertex_set
 from bluegraph_spark.plans.loop import CacheScope
 
 #: 12 hex digits = 48 bits: the largest md5 prefix that stays exactly
@@ -109,9 +109,8 @@ def generate_random_walks(
 
         if directed:
             # directed sinks never appear as a neighbor-table src but still
-            # start (length-0) walks, so the vertex set needs both endpoints —
-            # one extra pass over the raw edge expression.
-            nodes = endpoint_ids(e)
+            # start (length-0) walks: the vertex set needs both endpoints
+            nodes = vertex_set(nbr)
         else:
             # symmetrized graph: every vertex is a src in the (cached) neighbor
             # table — deriving the vertex set from it avoids re-executing the

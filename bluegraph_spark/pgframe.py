@@ -99,28 +99,37 @@ def symmetrize_edges(edges: DataFrame, src: str = "src", dst: str = "dst") -> Da
 
 def vertex_ids(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Distinct ``(id)`` from a caller's vertex frame (ids in its first
-    column), cast to the type of ``edges``' ``src``.
-
-    A column already named ``id`` of that type is selected as is: the
-    optimizer strips a no-op cast/alias and rewrites references to the child
-    attribute, which strands the partitioning a later localCheckpoint
-    captures on an attribute absent from the logical output (measured: two
-    avoidable O(V) state shuffles per superstep).
-    """
+    column), cast to the type of ``edges``' ``src``."""
     id_type = dict(edges.dtypes).get("src", "string")
     first = nodes.columns[0]
-    if first == "id" and dict(nodes.dtypes)[first] == id_type:
-        return nodes.select("id").distinct()
     return nodes.select(F.col(first).cast(id_type).alias("id")).distinct()
 
 
-def endpoint_ids(edges: DataFrame) -> DataFrame:
-    """Distinct ``(id)`` over both endpoints, ``src`` ∪ ``dst``."""
-    return (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
+def vertex_set(
+    edges: DataFrame, nodes: DataFrame | None = None, *aggs: Column
+) -> DataFrame:
+    """One row per vertex of ``edges``, from one ``groupBy(id)``.
+
+    The aggregation runs over ``(src, <edge columns>) ∪ (dst, NULLs)``, so
+    every endpoint is a vertex (a self-loop-only one included) and ``aggs``
+    see each edge's columns once, on its ``src`` row. With a caller
+    ``nodes`` frame (cast through :func:`vertex_ids`) the vertex set is
+    exactly its ids: listed isolated ones join with NULL edge columns,
+    endpoints missing from it are dropped. Pass the cache an operator
+    already holds, so the upstream edge expression is not read again.
+    """
+    cols = [c for c in edges.columns if c not in ("src", "dst")] if aggs else []
+    ends = edges.select(F.col("src").alias("id"), *cols).unionByName(
+        edges.select(F.col("dst").alias("id")), allowMissingColumns=True
     )
+    if nodes is not None:
+        aggs = (*aggs, F.max("_listed").alias("_listed"))
+        ends = ends.withColumn("_listed", F.lit(False)).unionByName(
+            vertex_ids(nodes, edges).withColumn("_listed", F.lit(True)),
+            allowMissingColumns=True,
+        )
+    out = ends.groupBy("id").agg(*aggs) if aggs else ends.select("id").distinct()
+    return out if nodes is None else out.filter("_listed").drop("_listed")
 
 
 class SparkPGFrame:
@@ -324,7 +333,7 @@ class SparkPGFrame:
         if edges is not None:
             e = e.join(edges.select("src", "dst"), ["src", "dst"], "left_semi")
             if nodes is None:
-                n = n.join(endpoint_ids(edges), "id", "left_semi")
+                n = n.join(vertex_set(edges), "id", "left_semi")
         out = self._derived(n, e)
         if remove_isolated_nodes:
             out = out.remove_isolated_nodes()
@@ -507,7 +516,7 @@ class SparkPGFrame:
         return d if self.directed else 2 * d
 
     def endpoint_ids(self) -> DataFrame:
-        return endpoint_ids(self._edges)
+        return vertex_set(self._edges)
 
     def isolated_nodes(self) -> DataFrame:
         """Nodes with no incident edges — anti-join instead of the

@@ -5,13 +5,14 @@ row-count, schema (sorted column names), and order-insensitive values.
 Usage: python scripts/check_parity.py [sf_dir] [query ...]
 """
 
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from bluegraph_spark.session import get_session

@@ -98,21 +98,12 @@ def test_cc_round_exchange_budget(spark, no_broadcast):
     assert res.round_plan.count("InMemoryTableScan") >= 2
 
 
-def test_lpa_superstep_exchange_budget(
-    graph, no_broadcast, loop_kwargs, monkeypatch, request
-):
+def test_lpa_superstep_exchange_budget(graph, no_broadcast, loop_kwargs, monkeypatch):
     # superstep 1 runs on labels ≡ ids, which lets the planner elide the
     # scores exchange through the alias equivalence: budget is 1 there and
     # at most 2 on later supersteps — guard the snapshot at 1. The width
     # rule gives the 1196 symmetrized edge rows width 4 at 300 rows per
     # partition.
-    if request.node.callspec.params["loop_kwargs"] == "alias-nodes":
-        request.applymarker(pytest.mark.xfail(
-            strict=True,
-            reason="the optimizer strips the no-op alias of the nodes id, so "
-            "the checkpointed vertex set's hash partitioning is on an "
-            "attribute the superstep joins do not read: 4 exchanges",
-        ))
     monkeypatch.setattr(loop_module, "LOOP_ROWS_PER_PARTITION", 300)
     res = label_propagation(graph, weight_col="w", max_iter=2, **loop_kwargs)
     assert re.search(r"hashpartitioning\(src#\d+L, 4\)", res.superstep_plan)
@@ -148,10 +139,11 @@ def test_superstep_never_broadcasts_the_state(graph, op, kwargs, monkeypatch):
             id="lpa",
             marks=pytest.mark.xfail(
                 strict=True,
-                reason="ROADMAP G: at width 1 repartition(1, key) plans as a "
-                "SinglePartition exchange, so LPA's checkpointed vertex set "
-                "carries no hash partitioning and both sides of the state "
-                "join are re-shuffled",
+                reason="ROADMAP G: at width 1 the edge cache is a "
+                "SinglePartition exchange, so the vertex-set groupBy over it "
+                "plans no exchange, LPA's checkpointed state is "
+                "SinglePartition and both sides of the state join are "
+                "re-shuffled",
             ),
         ),
     ],
