@@ -30,8 +30,9 @@ count when ``partitions`` is unset):
   stats-guarded ``localCheckpoint`` (lineage cut); the L1 error and the
   next dangling sum ride that job as observed metrics. A
   ``SuperstepCheckpointer`` adds one job that writes those blocks
-  (resumability, north rule) and takes the per-partition lineage from
-  that write's task metrics;
+  (resumability, north rule) while the next superstep computes, and takes
+  the per-partition lineage from that write's task metrics; the call
+  returns only once the last superstep's write is on storage;
 - hub skew in ``groupBy(dst)`` and in the out-weight ``groupBy(src)`` is
   absorbed by map-side partial aggregation (sum is algebraic: a hub costs
   one partial row per map task); AQE is off inside the loop, so nothing

@@ -353,28 +353,6 @@ class SparkPGFrame:
         e = self._edges.join(pairs.select("src", "dst"), ["src", "dst"], "left_anti")
         return self._derived(self._nodes, e)
 
-    def rename_nodes(self, mapping: DataFrame) -> "SparkPGFrame":
-        """Id remap on nodes and both edge endpoints (core/io.py:840-857).
-
-        ``mapping`` has columns (id, new_id); ids absent from the mapping
-        keep their name.
-        """
-        m = mapping.select("id", "new_id")
-        n = (
-            self._nodes.join(m, "id", "left")
-            .withColumn("id", F.coalesce("new_id", "id"))
-            .drop("new_id")
-        )
-        e = (
-            self._edges.join(m.withColumnRenamed("id", "src"), "src", "left")
-            .withColumn("src", F.coalesce("new_id", "src"))
-            .drop("new_id")
-            .join(m.withColumnRenamed("id", "dst"), "dst", "left")
-            .withColumn("dst", F.coalesce("new_id", "dst"))
-            .drop("new_id")
-        )
-        return self._derived(n, e)
-
     # ---- properties (core/io.py:792-904) -------------------------------
 
     def add_node_properties(

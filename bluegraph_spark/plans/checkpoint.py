@@ -11,13 +11,21 @@ recompute:
 1. it makes runs resumable after executor/driver loss: the loop continues
    from the last complete iteration (north rule). Only resume reads the
    files; the next superstep reads the local checkpoint, whose captured
-   hash partitioning keeps its joins exchange-free. A lost local checkpoint
-   fails the run instead of recomputing it: rerun with ``resume=True``.
-   A run without ``resume`` first deletes its run directory's supersteps
-   (``clear``), so a resume never continues some earlier run;
+   hash partitioning keeps its joins exchange-free. The loop calls
+   ``save`` on a background thread, so superstep k's write overlaps
+   superstep k+1's compute, with at most one write in flight; it joins
+   the last write before the operator returns, so a returned run is on
+   storage in full (durable on return). ``save`` itself stays synchronous
+   for direct callers. A lost local checkpoint fails the run instead of
+   recomputing it: rerun with ``resume=True``. A run without ``resume``
+   first deletes its run directory's supersteps (``clear``), so a resume
+   never continues some earlier run;
 2. it records per-iteration metrics and per-partition lineage rows (rows
    per written partition, taken from the write's own task metrics, so no
-   job re-reads the files) so progress is observable. Data-source-V2
+   job re-reads the files) so progress is observable. The loop's record
+   for a superstep is complete once its materialization job has run, so
+   it is passed in as a dict; ``write_sec`` times the write alone, which
+   the record's ``superstep_sec`` does not include. Data-source-V2
    formats (Iceberg) report no ``recordsWritten`` from Spark's write task,
    so their lineage rows read 0.
 

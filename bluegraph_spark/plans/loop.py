@@ -17,7 +17,8 @@ Every iterative operator follows the same discipline (north rule):
   stats-guarded ``localCheckpoint`` (the lineage cut), with the
   superstep's progress metrics riding that one job as observed metrics;
   a ``SuperstepCheckpointer`` then writes those blocks to storage with
-  the metrics and lineage (resume);
+  the metrics and lineage (resume), on a background thread while the
+  next superstep computes;
 - the superseded state's blocks are freed as soon as its successor exists,
   and the rest on the scope's exit.
 
@@ -36,11 +37,21 @@ its observed columns and its convergence test::
         return loop.result(loop.state)
 
 A superstep's record (``iteration``, ``superstep_sec`` and the operator's
-``fields``) is appended to ``loop.history`` and, with a checkpointer,
-written once as that superstep's metrics JSON after its observed metrics
-are known: a checkpoint with a metrics file is a finished superstep. A
-resumed loop starts from that superstep's files; only its first superstep
-re-clusters the scan, later ones read local checkpoints.
+``fields``) is built as soon as its materialization job has run and is
+appended to ``loop.history``; ``superstep_sec`` covers the superstep's
+compute and local checkpoint, not its storage write (the metrics JSON
+keeps that as ``write_sec``). With a checkpointer the record then goes to
+``checkpointer.save`` on one background ``InheritableThread`` (it keeps
+the caller's job group, job tags and scheduler pool), so superstep k's
+write overlaps superstep k+1. At most one write is in flight: the next
+commit joins it before it frees the state that write reads and starts the
+next one, so writes land in order and each metrics JSON follows its data
+commit; a checkpoint with a metrics file is a finished superstep.
+``result`` joins the last write, so every superstep is durable when the
+operator returns; a write's error is raised at the next commit or at
+``result``, and the scope then frees everything as on any failure. A
+resumed loop starts from the latest finished superstep's files; only its
+first superstep re-clusters the scan, later ones read local checkpoints.
 """
 
 from __future__ import annotations
@@ -49,6 +60,7 @@ import time
 from typing import Any, Callable, Iterator
 
 from py4j.java_gateway import JavaObject
+from pyspark import InheritableThread
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
@@ -200,6 +212,7 @@ class SuperstepLoop(CacheScope):
         self.plan: str | None = None
         self.exchanges: int | None = None
         self._t0 = time.time()
+        self._write: _Write | None = None  # the storage write in flight
         if checkpointer is not None and not resume:
             checkpointer.clear()
         latest = checkpointer.latest() if resume and checkpointer is not None else None
@@ -217,9 +230,22 @@ class SuperstepLoop(CacheScope):
         """Re-plan a caller DataFrame onto the loop's session."""
         return None if df is None else rebind(df, self.spark)
 
+    def __exit__(self, exc_type, exc, tb) -> None:
+        # the in-flight write reads blocks the scope is about to free; if
+        # the loop is already failing, its own exception wins
+        try:
+            self._await_write()
+        except Exception as e:
+            if exc_type is None:
+                super().__exit__(type(e), e, e.__traceback__)
+                raise
+        super().__exit__(exc_type, exc, tb)
+
     def result(self, df: DataFrame) -> DataFrame:
-        """Hand ``df`` back on the caller's session; the checkpoints it
-        reads survive the loop's exit."""
+        """Hand ``df`` back on the caller's session once the last storage
+        write is durable; the checkpoints ``df`` reads survive the loop's
+        exit."""
+        self._await_write()
         return rebind(super().result(df), self.caller)
 
     # -- width, freeze, edge cache -----------------------------------------
@@ -310,23 +336,48 @@ class SuperstepLoop(CacheScope):
             # the static plan this superstep executes (AQE is off in-loop)
             self.plan = df._jdf.queryExecution().executedPlan().toString()
             self.exchanges = executed_exchange_count(df)
-        rec: dict[str, Any] = {}
-
-        def record() -> dict[str, Any]:
-            # the materialization job has run, so the metrics are in
-            rec.update(
-                iteration=self.iteration,
-                superstep_sec=round(time.time() - self._t0, 3),
-                **fields(obs.get if obs else {}),
-            )
-            return rec
-
         new = self.checkpoint(df)
-        if self.checkpointer is None:
-            record()
-        else:
-            self.checkpointer.save(self.iteration, new, record)
+        # the materialization job has run, so the metrics are in
+        rec = dict(
+            iteration=self.iteration,
+            superstep_sec=round(time.time() - self._t0, 3),
+            **fields(obs.get if obs else {}),
+        )
+        # the previous superstep's write reads the state released here
+        self._await_write()
         self.release(self.state)
         self.state = new
         self.record = rec
+        if self.checkpointer is not None:
+            self._write = _Write(self.checkpointer.save, self.iteration, new, rec)
         return rec
+
+    def _await_write(self) -> None:
+        """Join the in-flight storage write, if any; raise its error."""
+        write, self._write = self._write, None
+        if write is not None:
+            write.join()
+            if write.error is not None:
+                raise write.error
+
+
+class _Write:
+    """One ``save(*args)`` on a background ``InheritableThread``, which
+    inherits the caller's job group, job tags and scheduler pool, so the
+    write's jobs count where the caller's do. ``error`` holds what it
+    raised once ``join`` returns."""
+
+    def __init__(self, save: Callable[..., None], *args: Any):
+        self.error: Exception | None = None
+
+        def run() -> None:
+            try:
+                save(*args)
+            except Exception as e:  # re-raised on the loop's thread
+                self.error = e
+
+        self._thread = InheritableThread(target=run)
+        self._thread.start()
+
+    def join(self) -> None:
+        self._thread.join()

@@ -1,21 +1,23 @@
-"""Build dist/bluegraph_spark.zip for spark-submit --py-files.
+"""Build bluegraph_spark.zip for spark-submit --py-files.
 
-Stdlib-only (no build backend needed on cluster edge nodes):
+Stdlib-only (no build backend needed on cluster edge nodes). The zip goes
+to ``dist/`` of the checkout unless an output directory is given:
 
-    python scripts/make_pyfiles.py
+    python scripts/make_pyfiles.py [OUT_DIR]
     spark-submit --py-files dist/bluegraph_spark.zip scripts/submit_job.py ...
 """
 
 from __future__ import annotations
 
 import os
+import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(REPO, "dist")
+def main(out_dir: str | None = None) -> str:
+    dist = out_dir or os.path.join(REPO, "dist")
     os.makedirs(dist, exist_ok=True)
     out = os.path.join(dist, "bluegraph_spark.zip")
     pkg = os.path.join(REPO, "bluegraph_spark")
@@ -33,4 +35,4 @@ def main() -> str:
 
 
 if __name__ == "__main__":
-    main()
+    main(*sys.argv[1:2])

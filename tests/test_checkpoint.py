@@ -1,10 +1,14 @@
 """SuperstepCheckpointer unit behavior: completeness, resume safety, pruning."""
 
 import os
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
 
+from bluegraph_spark.operators.pagerank import pagerank
+from bluegraph_spark.plans import loop as loop_module
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
 
 
@@ -170,3 +174,65 @@ def test_sssp_and_kshortest_resume(spark, tmp_path):
     ak = sorted(map(tuple, fullk.distances.collect()))
     bk = sorted(map(tuple, resumedk.distances.collect()))
     assert ak == bk
+
+
+def _ring(spark, n=30):
+    return spark.range(n).select(
+        F.col("id").alias("src"), ((F.col("id") * 7 + 3) % n).alias("dst")
+    )
+
+
+class SlowCheckpointer(SuperstepCheckpointer):
+    """Every write starts late, so a write the loop does not wait for is
+    still running when the operator returns."""
+
+    def save(self, iteration, state, metrics=None):
+        time.sleep(0.2)
+        super().save(iteration, state, metrics)
+
+
+def test_checkpoints_are_durable_on_return(spark, tmp_path):
+    """The loop writes each superstep while the next one computes, and
+    joins the last write before it returns: every superstep's data and
+    metrics are on storage the moment the call returns."""
+    cp = SlowCheckpointer(str(tmp_path), "r")
+    res = pagerank(_ring(spark), tol=0.0, max_iter=4, checkpointer=cp)
+    n = res.iterations
+    assert n == 4
+    assert cp.iterations() == list(range(n + 1))
+    assert len(cp.metrics_log()) == n + 1
+
+
+class OverlapProbe(SuperstepCheckpointer):
+    """``save(1)`` returns only after superstep 2's materialization has
+    started (or after 10 s): a loop that writes inline never gets there."""
+
+    def __init__(self, *args):
+        super().__init__(*args)
+        self.saving = threading.Event()
+        self.next_started = threading.Event()
+        self.seen = False
+        self.threads = set()
+
+    def save(self, iteration, state, metrics=None):
+        self.threads.add(threading.get_ident())
+        if iteration == 1:
+            self.saving.set()
+            self.seen = self.next_started.wait(timeout=10)
+        super().save(iteration, state, metrics)
+
+
+def test_write_overlaps_the_next_superstep(spark, tmp_path, monkeypatch):
+    cp = OverlapProbe(str(tmp_path), "r")
+    materialize = loop_module.stats_safe_local_checkpoint
+
+    def probe(df):
+        if cp.saving.is_set():  # a materialization after save(1) began
+            cp.next_started.set()
+        return materialize(df)
+
+    monkeypatch.setattr(loop_module, "stats_safe_local_checkpoint", probe)
+    res = pagerank(_ring(spark), tol=0.0, max_iter=3, checkpointer=cp)
+    assert cp.seen, "superstep 2 did not start while save(1) was running"
+    assert threading.get_ident() not in cp.threads
+    assert cp.iterations() == list(range(res.iterations + 1))

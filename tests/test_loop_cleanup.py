@@ -74,10 +74,26 @@ def _persistent(spark) -> set[int]:
 
 
 class FailingCheckpointer(SuperstepCheckpointer):
+    def __init__(self, base_path, run_id, fail_at):
+        super().__init__(base_path, run_id)
+        self.fail_at = fail_at
+
     def save(self, iteration, state, metrics=None):
-        if iteration == 2:
-            raise RuntimeError("injected failure in save(2)")
+        if iteration == self.fail_at:
+            raise RuntimeError(f"injected failure in save({iteration})")
         return super().save(iteration, state, metrics)
+
+
+@pytest.fixture(scope="module")
+def last_superstep(spark, graph, tmp_path_factory):
+    """Each checkpointed op's last superstep on ``graph``, from one clean run."""
+    base = str(tmp_path_factory.mktemp("last"))
+    out = {}
+    for op in WITH_CHECKPOINTER:
+        cp = SuperstepCheckpointer(base, op)
+        RUNS[op](graph, cp)
+        out[op] = cp.latest()
+    return out
 
 
 def _raise_on_call(monkeypatch, method: str, nth: int) -> None:
@@ -93,11 +109,20 @@ def _raise_on_call(monkeypatch, method: str, nth: int) -> None:
     monkeypatch.setattr(ClassicDataFrame, method, fails)
 
 
-@pytest.mark.parametrize("op", WITH_CHECKPOINTER)
-def test_failing_checkpointer_leaks_nothing(spark, graph, tmp_path, op):
+@pytest.mark.parametrize(
+    "op, at",
+    [pytest.param(op, "mid", id=op) for op in WITH_CHECKPOINTER]
+    + [pytest.param(op, "last", id=f"{op}-last") for op in WITH_CHECKPOINTER],
+)
+def test_failing_checkpointer_leaks_nothing(
+    spark, graph, tmp_path, last_superstep, op, at
+):
+    # a mid-run write fails at the next superstep's commit, the last one
+    # at the loop's result: both must free every block the call made
+    fail_at = 2 if at == "mid" else last_superstep[op]
     before = _persistent(spark)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        RUNS[op](graph, FailingCheckpointer(str(tmp_path), op))
+    with pytest.raises(RuntimeError, match=rf"injected failure in save\({fail_at}\)"):
+        RUNS[op](graph, FailingCheckpointer(str(tmp_path), op, fail_at))
     assert _persistent(spark) - before == set()
 
 
