@@ -34,17 +34,18 @@ Algorithm (GDS-style mean-aggregation variant):
 2. ``e_k = round(normalize(mean_{u ∈ N(v)} w_uv · e_{k-1}[u]), 12)`` — the
    weighted mean over in-neighbors (after symmetrization for undirected
    graphs), L2-normalized per node. Zero-degree nodes keep zero vectors.
-3. ``final = Σ_k iteration_weights[k] · e_k``.
+3. ``final = Σ_k iteration_weights[k] · e_k``, accumulated in the
+   iteration state as each ``e_k`` is made.
 
 The per-iteration **round to 12 decimals is part of the algorithm's
 contract**, not a display choice: it quantizes away the ≤ ~1e-14
 floating-point summation-order differences between engines (Spark partial
 aggregation vs DuckDB serial sums), so the fixpoint is identical
-cross-engine and across cluster sizes. Each iteration is materialized
-with ``SuperstepLoop.checkpoint`` (a stats-guarded ``localCheckpoint``):
-the loop never compounds plan statistics (the round-4 BigInteger driver
-cliff) and superseded iteration blocks are released as soon as their
-successor is materialized.
+cross-engine and across cluster sizes. Each iteration is a
+``SuperstepLoop`` superstep, materialized once as a stats-guarded
+``localCheckpoint``: the loop never compounds plan statistics (the
+round-4 BigInteger driver cliff), and each superseded state is freed as
+soon as its successor is materialized.
 """
 
 from __future__ import annotations
@@ -69,14 +70,12 @@ def _l2_normalize(df: DataFrame) -> DataFrame:
     norm = F.sqrt(
         F.aggregate("emb", F.lit(0.0), lambda acc, x: acc + x * x)
     )
-    return df.select(
-        "id",
+    return df.withColumn(
+        "emb",
         F.when(
             norm > 0.0,
             F.transform("emb", lambda x: F.round(x / norm, QUANTUM)),
-        )
-        .otherwise(F.col("emb"))
-        .alias("emb"),
+        ).otherwise(F.col("emb")),
     )
 
 
@@ -123,9 +122,14 @@ def fastrp_embeddings(
     bytes/vertex is the floor for any propagation embedder; the d
     per-element sums are plain codegen aggregates (no UDF anywhere).
 
-    No ``checkpointer``/``resume``: a run is K (2-4) fixed iterations and
-    the final fold reads every iteration's state, so a restart recomputes
-    them at about the cost of reading K checkpoints back.
+    Each iteration is one ``SuperstepLoop`` superstep whose state is
+    ``(id, emb, acc)``: ``emb`` is ``e_k`` and ``acc`` the weighted sum of
+    ``e_1..e_k``, so only the current iteration's state is held and the
+    result reads the last one.
+
+    No ``checkpointer``/``resume``: a run is K (2-4) fixed iterations of
+    one aggregation each, so a restart recomputes them at about the cost
+    of writing every state out and reading it back.
     """
     if dim < 1:
         raise ValueError("dim must be >= 1")
@@ -135,7 +139,7 @@ def fastrp_embeddings(
     # Same loop discipline as the superstep operators (pagerank/lpa/...):
     # a private conf-isolated session, the CSR edge cache sized to the data,
     # and AQE frozen once the fixed-shape iteration plans start — the K
-    # iteration checkpoints otherwise each fan out into several adaptive
+    # iteration states otherwise each fan out into several adaptive
     # stage-jobs. The per-element QUANTUM rounding already makes the
     # embeddings partitioning-independent (test-pinned), so the re-layout
     # cannot change values.
@@ -152,22 +156,15 @@ def fastrp_embeddings(
             e0 = symmetrize_edges(e0)
         e = loop.edge_cache(e0, "src")
 
-        # The vertex set is read three+ times (the init projection and every
-        # iteration's zero-degree left join): materialize it once instead of
-        # re-running the vertex-set aggregation over the edge cache per consumer.
-        nodes = loop.checkpoint(vertex_set(e))
-
-        cur = loop.checkpoint(
-            _l2_normalize(_init_embedding(nodes, dim, seed))
-        )
+        # iteration 0: the projection, one row per vertex (zero-degree
+        # vertices included: every iteration's left join keeps them)
+        loop.start(_l2_normalize(_init_embedding(vertex_set(e), dim, seed)))
         zeros = F.array(*[F.lit(0.0)] * dim)
-        # Every iteration state stays checkpointed until the final weighted
-        # fold is materialized (K is 2-4; V·d·K doubles is the same order as
-        # the output itself); the loop's exit then frees them all.
-        iters: list[DataFrame] = []
-        for _ in iteration_weights:
+        for k in loop.supersteps(len(iteration_weights)):
+            cur = loop.state
+            w_k = F.lit(float(iteration_weights[k - 1]))
             sums = (
-                e.join(cur.withColumnRenamed("id", "src"), "src")
+                e.join(cur.select(F.col("id").alias("src"), "emb"), "src")
                 .groupBy("dst")
                 .agg(
                     *[
@@ -183,33 +180,19 @@ def fastrp_embeddings(
                     ).alias("emb"),
                 )
             )
-            nxt = (
-                nodes.join(sums, "id", "left")
-                .select("id", F.coalesce("emb", zeros).alias("emb"))
+            nxt = _l2_normalize(
+                cur.drop("emb")
+                .join(sums, "id", "left")
+                .withColumn("emb", F.coalesce("emb", zeros))
             )
-            cur = loop.checkpoint(_l2_normalize(nxt))
-            iters.append(cur)
-
-        folded = iters[0].select(
-            "id",
-            F.transform(
-                "emb", lambda x: x * F.lit(float(iteration_weights[0]))
-            ).alias("emb"),
-        )
-        for w_k, it_df in zip(iteration_weights[1:], iters[1:]):
-            folded = (
-                folded.withColumnRenamed("emb", "_a")
-                .join(it_df.withColumnRenamed("emb", "_b"), "id")
-                .select(
-                    "id",
-                    F.zip_with(
-                        "_a",
-                        "_b",
-                        lambda a, b: a + b * F.lit(float(w_k)),
-                    ).alias("emb"),
-                )
+            # the weighted sum so far: e_1·w_k at k = 1, then acc + e_k·w_k
+            acc = (
+                F.transform("emb", lambda x: x * w_k)
+                if k == 1
+                else F.zip_with("acc", "emb", lambda a, b: a + b * w_k)
             )
-        return loop.result(loop.checkpoint(folded))
+            loop.step(nxt.select("id", "emb", acc.alias("acc")))
+        return loop.result(loop.state.select("id", F.col("acc").alias("emb")))
 
 
 def fastrp_embeddings_long(

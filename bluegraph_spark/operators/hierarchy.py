@@ -105,7 +105,9 @@ def single_linkage_clusters(
 
     Labels are min-id canonical (the CC operator's contract), so they
     hash-compare against any independent implementation using the same
-    canonicalization.
+    canonicalization. ``history`` holds the MST's round records, then
+    CC's, each tagged ``phase`` (``"mst"`` or ``"cc"``); a height cut runs
+    no MST.
     """
     if (n_clusters is None) == (threshold is None):
         raise ValueError("give exactly one of n_clusters / threshold")
@@ -122,6 +124,7 @@ def single_linkage_clusters(
         edges = scope.checkpoint(edges.select("src", "dst", distance_col))
         nodes = scope.checkpoint(vertex_set(edges))
 
+        history = []
         if threshold is not None:
             kept = edges.filter(F.col(distance_col) <= threshold)
             res = connected_components(kept, nodes=nodes)
@@ -129,6 +132,7 @@ def single_linkage_clusters(
             cut = -1
         else:
             mst = minimum_spanning_forest(edges, weight_col=distance_col)
+            history = [{**r, "phase": "mst"} for r in mst.history]
             forest = scope.persist(scope.adopt(mst.tree_edges))
             m = forest.count()
             v = nodes.count()
@@ -152,5 +156,5 @@ def single_linkage_clusters(
             ),
             n_clusters=int(n),
             cut_edges=int(cut),
-            history=res.history,
+            history=history + [{**r, "phase": "cc"} for r in res.history],
         )

@@ -361,7 +361,9 @@ def fit_edge_predictor(
     ``(x - mean) / sqrt(avg(x²) - avg(x)²)`` (constant columns pass
     through unscaled), then full-batch GD runs ``iterations`` steps of
     ``w ← round(w - lr · round(avg((σ(z) - y) · x), q), q)``. One
-    aggregation job per iteration; state on the driver is p+1 floats.
+    aggregation job per iteration; state on the driver is p+1 floats, so
+    each iteration is a ``SuperstepLoop`` superstep with no state frame:
+    ``SuperstepLoop.log`` records its ``loss`` in ``history``.
 
     The per-step rounding to ``QUANTUM`` decimals is the cross-engine /
     cross-partitioning contract (same role as FastRP's): it absorbs both
@@ -446,8 +448,7 @@ def fit_edge_predictor(
 
         b = 0.0
         w = [0.0] * len(fcols)
-        history: list[dict] = []
-        for it in range(1, iterations + 1):
+        for _ in loop.supersteps(iterations):
             z = F.lit(b)
             for i, c in enumerate(fcols):
                 z = z + F.lit(w[i]) * F.col(c)
@@ -477,7 +478,7 @@ def fit_edge_predictor(
                 round(w[i] - lr * float(row[f"_g_{c}"]), QUANTUM)
                 for i, c in enumerate(fcols)
             ]
-            history.append({"iteration": it, "loss": float(row["_loss"])})
+            loop.log({"loss": float(row["_loss"])})
 
     return EdgePredictorModel(
         feature_cols=fcols,
@@ -486,7 +487,7 @@ def fit_edge_predictor(
         means=means,
         stds=stds,
         iterations=iterations,
-        history=history,
+        history=loop.history,
     )
 
 

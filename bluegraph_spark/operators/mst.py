@@ -67,6 +67,12 @@ def minimum_spanning_forest(
     Parallel edges keep their minimum weight; self-loops are dropped
     (never in an MST).
 
+    Each Borůvka round is one ``SuperstepLoop`` superstep whose state is
+    the cross-edge set; its record carries ``cross_edges`` (the cross
+    edges left after the round) and ``offering_components``, and the loop
+    converges once no cross edge is left. ``rounds`` counts the rounds
+    run: 0 for an input with no edge between distinct vertices.
+
     No ``checkpointer``/``resume``: a round's state is the cross-edge set
     plus every earlier round's chosen edges (the forest so far), and a run
     is at most log2(V) rounds of small jobs, so rerunning costs less than
@@ -86,13 +92,22 @@ def minimum_spanning_forest(
             .groupBy("u", "v")
             .agg(F.min("w").alias("w"))
         )
-        obs0 = Observation(f"mst_init_{time.time_ns()}")
-        rem = loop.checkpoint(
-            canon.select(
-                "u", "v", "w", F.col("u").alias("cu"), F.col("v").alias("cv")
-            ).observe(obs0, F.count(F.lit(1)).alias("n"))
+        # The state holds ONLY cross-component edges with current labels
+        # (invariant: cu != cv on every row — round 1 starts from singleton
+        # components cu = u, cv = v on the self-loop-free canon table; each
+        # relabel job below filters newly-intra rows out), so the cross-edge
+        # count needs no separate job: it rides each state's materialization.
+        n_cross = F.count(F.lit(1)).alias("n")
+
+        def cross_fields(m, **extra):
+            n = int(m["n"])
+            return {"cross_edges": n, **extra, "converged": n == 0}
+
+        loop.start(
+            canon.select("u", "v", "w", F.col("u").alias("cu"), F.col("v").alias("cv")),
+            n_cross,
+            fields=cross_fields,
         )
-        n_edges = int(obs0.get["n"] or 0)
         # Size the loop's shuffle width to the data (the round tables are the
         # edge set and the root mapping — at suite scale a 32-wide shuffle of
         # a 1000-row mapping is ~10 empty tasks per stage, and a Borůvka round
@@ -102,32 +117,11 @@ def minimum_spanning_forest(
         # re-planning only splits each round's one checkpoint job into
         # several stage-jobs (measured: ~20 jobs/round with AQE on vs ~4
         # without, identical output) — freeze it on the loop's own session.
-        loop.freeze(loop.width(n_edges))
+        loop.freeze(loop.width(loop.record["cross_edges"]))
 
         forest_parts: list[DataFrame] = []
-        history: list[dict[str, Any]] = []
-        converged = False
-        # Deterministic block release: each round's rem/pointer checkpoints are
-        # dead the moment their successor materializes — free them then rather
-        # than waiting for a periodic-GC ContextCleaner pass. The sel
-        # checkpoints the forest output reads survive the loop's exit.
-        # rem holds ONLY cross-component edges with current labels (invariant:
-        # cu != cv on every row — round 1 starts from singleton components
-        # cu = u, cv = v on the self-loop-free canon table; each relabel job
-        # below filters newly-intra rows out). n_cross therefore needs no
-        # separate counting job: it rides the init/relabel checkpoints.
-        n_cross = n_edges
-        rnd = 0
-        while rnd < max_rounds:
-            rnd += 1
-            t0 = time.time()
-            if n_cross == 0:
-                converged = True
-                history.append(
-                    {"round": rnd, "superstep_sec": round(time.time() - t0, 3),
-                     "cross_edges": 0, "offering_components": 0}
-                )
-                break
+        for rnd in loop.supersteps(max_rounds):
+            rem = loop.state
             # every component's minimum incident edge under (w, u, v); struct
             # min gives the total-order tie-break in one partial aggregation.
             # Explode both endpoints in one pass (a union would re-execute the
@@ -218,9 +212,8 @@ def minimum_spanning_forest(
             # component count; every offering label has a mapping row, and
             # labels of non-offering components are unmapped — the left join +
             # coalesce keeps them, exactly the old comp-table semantics). The
-            # next round's n_cross rides this job's observation.
-            obs_rel = Observation(f"mst_relabel_{rnd}_{time.time_ns()}")
-            new_rem = loop.checkpoint(
+            # new cross-edge set is the next state; the step frees ``rem``.
+            loop.step(
                 rem.join(
                     parent.select(F.col("c").alias("cu"), F.col("p").alias("_pu")),
                     "cu",
@@ -238,18 +231,11 @@ def minimum_spanning_forest(
                     F.coalesce("_pu", "cu").alias("cu"),
                     F.coalesce("_pv", "cv").alias("cv"),
                 )
-                .filter(F.col("cu") != F.col("cv"))
-                .observe(obs_rel, F.count(F.lit(1)).alias("n"))
+                .filter(F.col("cu") != F.col("cv")),
+                n_cross,
+                fields=lambda m: cross_fields(m, offering_components=n_offering),
             )
-            this_cross = n_cross
-            n_cross = int(obs_rel.get["n"] or 0)
             loop.release(parent_cp)
-            loop.release(rem)
-            rem = new_rem
-            history.append(
-                {"round": rnd, "superstep_sec": round(time.time() - t0, 3),
-                 "cross_edges": this_cross, "offering_components": n_offering}
-            )
 
         if forest_parts:
             out = forest_parts[0]
@@ -257,8 +243,8 @@ def minimum_spanning_forest(
                 out = out.unionByName(p)
             out = out.distinct()
         else:
-            out = rem.limit(0)
+            out = loop.state.limit(0)
         out = out.select(
             F.col("u").alias("src"), F.col("v").alias("dst"), F.col("w").alias("weight")
         )
-        return MSTResult(loop.result(out), rnd, converged, history)
+        return MSTResult(loop.result(out), loop.iteration, loop.converged, loop.history)

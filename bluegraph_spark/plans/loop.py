@@ -36,14 +36,23 @@ its observed columns and its convergence test::
             loop.step(round_plan(loop.state), *observed, fields=record)
         return loop.result(loop.state)
 
-A superstep's record (``iteration``, ``superstep_sec`` and the operator's
-``fields``) is built as soon as its materialization job has run and is
-appended to ``loop.history``; ``superstep_sec`` covers the superstep's
-compute and local checkpoint, not its storage write (the metrics JSON
-keeps that as ``write_sec``). With a checkpointer the record then goes to
-``checkpointer.save`` on one background ``InheritableThread`` (it keeps
-the caller's job group, job tags and scheduler pool), so superstep k's
-write overlaps superstep k+1. At most one write is in flight: the next
+Every iterative operator runs its supersteps this way: PageRank,
+connected components, LPA, SSSP, k-shortest distances, Louvain's rounds,
+MST's Borůvka rounds (state: the cross-edge set) and FastRP's
+propagation iterations (state: the current embedding and the weighted
+sum so far). The GD fit of ``fit_edge_predictor`` keeps its p+1 weights
+on the driver, so it has no state frame to materialize: it iterates
+``loop.supersteps`` and records each superstep with ``loop.log`` alone.
+
+A superstep's record (``iteration``, ``superstep_sec``, the operator's
+``fields`` and ``converged``) is built by ``log`` as soon as its
+materialization job has run and is appended to ``loop.history``; the
+iteration-0 record of ``start`` is not, but its ``converged`` counts.
+``superstep_sec`` covers the superstep's compute and local checkpoint,
+not its storage write (the metrics JSON keeps that as ``write_sec``).
+With a checkpointer the record then goes to ``checkpointer.save`` on one
+background ``InheritableThread`` (it keeps the caller's job group, job
+tags and scheduler pool), so superstep k's write overlaps superstep k+1. At most one write is in flight: the next
 commit joins it before it frees the state that write reads and starts the
 next one, so writes land in order and each metrics JSON follows its data
 commit; a checkpoint with a metrics file is a finished superstep.
@@ -297,7 +306,10 @@ class SuperstepLoop(CacheScope):
         *observed: Column,
         fields: Callable[[dict], dict] = lambda m: {},
     ) -> None:
-        """Materialize the iteration-0 state into ``state``."""
+        """Materialize the iteration-0 state into ``state``. Its record is
+        not a superstep and stays out of ``history``, but its ``converged``
+        counts: a start state that is already final (say, MST on an empty
+        edge set) runs no superstep."""
         self._t0 = time.time()
         self._commit(state, observed, fields)
 
@@ -314,7 +326,7 @@ class SuperstepLoop(CacheScope):
         self,
         state: DataFrame,
         *observed: Column,
-        fields: Callable[[dict], dict],
+        fields: Callable[[dict], dict] = lambda m: {},
     ) -> dict[str, Any]:
         """Materialize one superstep's state and record it.
 
@@ -322,9 +334,26 @@ class SuperstepLoop(CacheScope):
         ``fields(metrics)`` turns their values into the record, whose
         ``converged`` key ends the loop. The predecessor state is freed.
         """
-        rec = self._commit(state, observed, fields, snapshot=self.plan is None)
-        self.history.append(rec)
-        self.converged = bool(rec.get("converged"))
+        return self._commit(state, observed, fields, snapshot=self.plan is None)
+
+    def log(self, fields: dict[str, Any]) -> dict[str, Any]:
+        """The current superstep's record: ``iteration``, ``superstep_sec``
+        and the operator's ``fields``, with ``converged`` always present.
+
+        It becomes ``record`` and sets ``converged``; a superstep's record
+        (iteration 1 on) is appended to ``history``. ``start`` and ``step``
+        log through here; a loop whose state lives on the driver (the GD
+        fit's p+1 weights) calls it directly, once per superstep.
+        """
+        rec = dict(
+            iteration=self.iteration,
+            superstep_sec=round(time.time() - self._t0, 3),
+            **fields,
+        )
+        rec["converged"] = self.converged = bool(rec.get("converged"))
+        self.record = rec
+        if self.iteration:
+            self.history.append(rec)
         return rec
 
     def _commit(self, df, observed, fields, snapshot=False) -> dict[str, Any]:
@@ -338,16 +367,11 @@ class SuperstepLoop(CacheScope):
             self.exchanges = executed_exchange_count(df)
         new = self.checkpoint(df)
         # the materialization job has run, so the metrics are in
-        rec = dict(
-            iteration=self.iteration,
-            superstep_sec=round(time.time() - self._t0, 3),
-            **fields(obs.get if obs else {}),
-        )
+        rec = self.log(fields(obs.get if obs else {}))
         # the previous superstep's write reads the state released here
         self._await_write()
         self.release(self.state)
         self.state = new
-        self.record = rec
         if self.checkpointer is not None:
             self._write = _Write(self.checkpointer.save, self.iteration, new, rec)
         return rec

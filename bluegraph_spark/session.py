@@ -57,16 +57,18 @@ def get_session(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession configured for this engine.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default all
-    cores) so the same code path serves tests, bench, and spark-submit (where
-    master is supplied externally and this argument is left None *and* a
-    session already exists).
+    ``master`` defaults to the one ``spark-submit`` passed, when this
+    process runs under it (its JVM is already up and holds
+    ``spark.master``), else to ``local[$SPARK_GRAFT_CPUS]`` (env, default
+    all cores), so the same code path serves tests, bench, and
+    spark-submit.
     """
     builder = SparkSession.builder.appName(app_name)
-    if master is None:
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
-    builder = builder.master(master)
+    if master is not None:
+        builder = builder.master(master)
     confs = dict(DEFAULT_CONFS)
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)

@@ -99,6 +99,23 @@ def test_fastrp_deterministic_across_partitionings(small_edges):
     assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
 
 
+@pytest.mark.parametrize(
+    "rows", [[], [("a", "a", 1.0), ("b", "b", 2.0)]], ids=["empty", "self-loops"]
+)
+def test_fastrp_degenerate_input(spark, rows):
+    """No edges: no rows. Self-loops only: one row per vertex, each the
+    mean over its own loop."""
+    df = spark.createDataFrame(rows, "src string, dst string, w double")
+    res = fastrp_embeddings(
+        df, dim=DIM, iteration_weights=WEIGHTS, weight_col="w", seed=SEED
+    )
+    got = {r.id: list(r.emb) for r in res.collect()}
+    want = _fastrp_py(rows, DIM, WEIGHTS, SEED)
+    assert set(got) == set(want) == {s for s, _, _ in rows}
+    for n in want:
+        assert got[n] == pytest.approx(want[n], abs=1e-9), n
+
+
 def test_fastrp_zero_degree_stays_zero(spark):
     # 'c' has no in- or out-edges after symmetrization beyond itself? —
     # use a directed graph where 'z' only ever appears as src, so with

@@ -41,7 +41,7 @@ from bluegraph_spark.operators.paths import k_shortest_distances, shortest_paths
 from bluegraph_spark.operators.triangles import triangle_count_global, triangle_counts
 from bluegraph_spark.operators.walks import generate_random_walks
 from bluegraph_spark.plans.checkpoint import SuperstepCheckpointer
-from bluegraph_spark.plans.loop import _checkpoint_rdds
+from bluegraph_spark.plans.loop import SuperstepLoop, _checkpoint_rdds
 
 N = 60
 
@@ -58,7 +58,7 @@ RUNS = {
     "fastrp": lambda g, cp: fastrp_embeddings(g, dim=4, weight_col="w"),
 }
 WITH_CHECKPOINTER = ["pagerank", "cc", "lpa", "sssp", "kssp", "louvain"]
-ONE_RESULT_CHECKPOINT = ["pagerank", "cc", "lpa", "sssp", "kssp"]
+ONE_RESULT_CHECKPOINT = ["pagerank", "cc", "lpa", "sssp", "kssp", "fastrp"]
 
 
 @pytest.fixture(scope="module")
@@ -138,14 +138,37 @@ def test_failing_local_checkpoint_leaks_nothing(spark, graph, monkeypatch, op):
 @pytest.mark.parametrize(
     "op, stored",
     [pytest.param(op, False, id=op) for op in ONE_RESULT_CHECKPOINT]
-    + [pytest.param(op, True, id=f"{op}-checkpointer") for op in ONE_RESULT_CHECKPOINT],
+    + [
+        pytest.param(op, True, id=f"{op}-checkpointer")
+        for op in ONE_RESULT_CHECKPOINT
+        if op in WITH_CHECKPOINTER
+    ],
 )
 def test_success_keeps_only_the_result_checkpoint(spark, graph, tmp_path, op, stored):
     before = _persistent(spark)
     res = RUNS[op](graph, SuperstepCheckpointer(str(tmp_path), op) if stored else None)
     assert len(_persistent(spark) - before) == 1
-    out = next(v for v in vars(res).values() if hasattr(v, "collect"))
+    out = res if hasattr(res, "collect") else next(
+        v for v in vars(res).values() if hasattr(v, "collect")
+    )
     assert out.count() > 0  # the kept checkpoint is the one the result reads
+
+
+def test_fastrp_step_frees_the_superseded_state(spark, graph, monkeypatch):
+    # (the state's checkpoints, every persisted RDD) right after each step
+    seen = []
+    step = SuperstepLoop.step
+
+    def spy(self, *args, **kwargs):
+        rec = step(self, *args, **kwargs)
+        seen.append((set(_checkpoint_rdds(self.state)), _persistent(spark)))
+        return rec
+
+    monkeypatch.setattr(SuperstepLoop, "step", spy)
+    fastrp_embeddings(graph, dim=4, iteration_weights=(1.0,) * 4, weight_col="w")
+    assert len(seen) == 4
+    for (superseded, _), (_, live) in zip(seen, seen[1:]):
+        assert superseded and not superseded & live
 
 
 @pytest.fixture(scope="module")

@@ -4,8 +4,9 @@ one width rule, so no result may depend on the width it picks.
 Each loop runs twice on the same small graph (the karate club plus a
 three-vertex path, 81 edges): at the rule's width, which is 1, and with
 ``LOOP_ROWS_PER_PARTITION`` lowered so that every loop freezes at width 3
-or more, over an input repartitioned into 7 slices. Labels, distances and
-embeddings must match exactly, PageRank within the oracle tolerance.
+or more, over an input repartitioned into 7 slices. Labels, distances,
+embeddings and the spanning forest must match exactly, PageRank within
+the oracle tolerance.
 """
 
 import pytest
@@ -14,6 +15,7 @@ from bluegraph_spark.operators.components import connected_components
 from bluegraph_spark.operators.embeddings import fastrp_embeddings
 from bluegraph_spark.operators.louvain import louvain
 from bluegraph_spark.operators.lpa import label_propagation
+from bluegraph_spark.operators.mst import minimum_spanning_forest
 from bluegraph_spark.operators.pagerank import pagerank
 from bluegraph_spark.operators.paths import k_shortest_distances, shortest_paths
 from bluegraph_spark.plans import loop as loop_module
@@ -30,6 +32,7 @@ LOOPS = {
         e, "0", k=2, weight_col=W, max_iter=4
     ).distances,
     "louvain": lambda e: louvain(e, weight_col=W, exact_rounds=4).labels,
+    "mst": lambda e: minimum_spanning_forest(e, weight_col=W).tree_edges,
     "fastrp": lambda e: fastrp_embeddings(
         e, dim=4, iteration_weights=(1.0, 1.0), weight_col=W
     ),

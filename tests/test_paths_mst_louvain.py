@@ -147,6 +147,32 @@ def test_mst_tie_break_deterministic(spark):
     assert got == {(1, 2), (1, 3)}
 
 
+def test_mst_rounds_count_the_rounds_run(spark):
+    """One Borůvka round merges both components of this input, so the run
+    is one round, and its record leaves no cross edge."""
+    from bluegraph_spark.operators.mst import minimum_spanning_forest
+
+    e = spark.createDataFrame(
+        [(1, 2, 5.0), (2, 3, 1.0), (1, 3, 2.0), (10, 11, 7.0)],
+        "src long, dst long, w double",
+    )
+    res = minimum_spanning_forest(e, weight_col="w")
+    assert (res.rounds, res.converged) == (1, True)
+    assert [(r["iteration"], r["cross_edges"]) for r in res.history] == [(1, 0)]
+
+
+@pytest.mark.parametrize(
+    "rows", [[], [(1, 1, 1.0), (2, 2, 3.0)]], ids=["empty", "self-loops"]
+)
+def test_mst_degenerate_input_is_an_empty_converged_forest(spark, rows):
+    from bluegraph_spark.operators.mst import minimum_spanning_forest
+
+    e = spark.createDataFrame(rows, "src long, dst long, w double")
+    res = minimum_spanning_forest(e, weight_col="w")
+    assert res.tree_edges.count() == 0
+    assert (res.rounds, res.converged, res.history) == (0, True, [])
+
+
 # --------------------------------------------------------------------------
 # Louvain
 # --------------------------------------------------------------------------

@@ -302,3 +302,113 @@ class TestTriplesGephiJsonld:
         by_id = {r["@id"]: r for r in out}
         assert by_id["p1"]["@type"] == ["Person", "owner"]
         assert any("knows" in e for e in by_id["p1"]["edges"])
+
+
+def _ids(df, *cols):
+    return sorted(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _frame_shape(pg):
+    return (
+        _ids(pg.nodes(), "id"),
+        _ids(pg.edges(), "src", "dst"),
+        pg.node_properties(),
+        pg.edge_properties(),
+    )
+
+
+def _rename_edge_properties(pg, spark):
+    out = pg.rename_edge_properties({"mi": "npmi"})
+    # the renamed column keeps its numeric type
+    return out.edge_properties(), out.is_numeric_edge_prop("npmi")
+
+
+def _node_prop_as_text(pg, spark):
+    pg.node_prop_as_text("label")
+    return pg.is_text_node_prop("label"), pg.is_categorical_node_prop("label")
+
+
+def _edge_prop_as_category(pg, spark):
+    pg.edge_prop_as_category("mi")
+    return pg.is_categorical_edge_prop("mi"), pg.is_numeric_edge_prop("mi")
+
+
+def _edge_prop_as_numeric(pg, spark):
+    pg.edge_prop_as_category("mi")
+    pg.edge_prop_as_numeric("mi")
+    return pg.is_numeric_edge_prop("mi")
+
+
+def _is_text_edge_prop(pg, spark):
+    before = pg.is_text_edge_prop("note")
+    pg.edge_prop_as_text("note")
+    return before, pg.is_text_edge_prop("note"), pg.is_text_edge_prop("mi")
+
+
+# method -> (call on the small frame, what it returns under SURVEY §1.2/§2.2)
+SURFACE = {
+    # semi-join filters return the matching rows of the frame
+    "filter_nodes": (
+        lambda pg, spark: _ids(pg.filter_nodes(["a", "c", "zz"]), "id"),
+        [("a",), ("c",)],
+    ),
+    "filter_edges": (
+        lambda pg, spark: _ids(
+            pg.filter_edges(spark.createDataFrame([("b", "c")], "src string, dst string")),
+            "src", "dst",
+        ),
+        [("b", "c")],
+    ),
+    # anti-join removes; removing a node detaches its incident edges
+    "remove_nodes": (
+        lambda pg, spark: _frame_shape(pg.remove_nodes(["b"])),
+        ([("a",), ("c",)], [], ["score", "type"], ["mi"]),
+    ),
+    "remove_edges": (
+        lambda pg, spark: _frame_shape(
+            pg.remove_edges(spark.createDataFrame([("a", "b")], "src string, dst string"))
+        ),
+        ([("a",), ("b",), ("c",)], [("b", "c")], ["score", "type"], ["mi"]),
+    ),
+    # dropping and renaming property columns
+    "remove_node_properties": (
+        lambda pg, spark: _frame_shape(pg.remove_node_properties("score")),
+        ([("a",), ("b",), ("c",)], [("a", "b"), ("b", "c")], ["type"], ["mi"]),
+    ),
+    "remove_edge_properties": (
+        lambda pg, spark: _frame_shape(pg.remove_edge_properties("mi")),
+        ([("a",), ("b",), ("c",)], [("a", "b"), ("b", "c")], ["score", "type"], []),
+    ),
+    "rename_edge_properties": (_rename_edge_properties, (["npmi"], True)),
+    # property-type setters and predicates
+    "node_prop_as_text": (_node_prop_as_text, (True, False)),
+    "edge_prop_as_category": (_edge_prop_as_category, (True, False)),
+    "edge_prop_as_numeric": (_edge_prop_as_numeric, True),
+    "is_text_edge_prop": (_is_text_edge_prop, (False, True, False)),
+    # the vertex set induced from edge endpoints; undirected edges canonical
+    "from_edges": (
+        lambda pg, spark: _frame_shape(
+            SparkPGFrame.from_edges(
+                spark.createDataFrame(
+                    [("y", "x", 1.0), ("x", "z", 2.0)], "src string, dst string, w double"
+                )
+            )
+        ),
+        ([("x",), ("y",), ("z",)], [("x", "y"), ("x", "z")], [], ["w"]),
+    ),
+}
+
+
+@pytest.mark.parametrize("method", list(SURFACE))
+def test_pgframe_surface(spark, small_pg, method):
+    pg = small_pg
+    if method in ("node_prop_as_text", "is_text_edge_prop"):
+        # string columns to type as text
+        pg = pg.add_node_properties(
+            spark.createDataFrame([("a", "alpha")], "id string, label string")
+        ).add_edge_properties(
+            spark.createDataFrame([("a", "b", "n1")], "src string, dst string, note string")
+        )
+    call, want = SURFACE[method]
+    assert call(pg, spark) == want
+

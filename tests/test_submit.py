@@ -3,7 +3,9 @@
 The zip comes from ``scripts/make_pyfiles.py`` and the job from
 ``scripts/submit_job.py``, launched with pyspark's bundled ``spark-submit``
 from a working directory outside the checkout and without ``PYTHONPATH``,
-so the package can only come from the zip.
+so the package can only come from the zip. ``SPARK_GRAFT_CPUS`` names
+another master than the submitted one, and the application's event log
+must show the submitted master.
 """
 
 import importlib.util
@@ -30,6 +32,17 @@ def _make_pyfiles():
     return mod
 
 
+def _master_in_event_log(events_dir) -> str:
+    """``spark.master`` of the application whose event log is in the dir."""
+    # a rolling log: one directory of events_<n>_<app id> files
+    for path in events_dir.rglob("events_*"):
+        for line in path.read_text().splitlines():
+            event = json.loads(line)
+            if event["Event"] == "SparkListenerEnvironmentUpdate":
+                return dict(event["Spark Properties"])["spark.master"]
+    raise AssertionError(f"no environment update in {events_dir}")
+
+
 def test_spark_submit_pagerank_matches_in_process(spark, tmp_path):
     zip_path = _make_pyfiles().main(str(tmp_path / "dist"))
     n = 40
@@ -42,24 +55,30 @@ def test_spark_submit_pagerank_matches_in_process(spark, tmp_path):
     out, ckpt = str(tmp_path / "ranks"), str(tmp_path / "ckpt")
     work = tmp_path / "work"
     work.mkdir()
+    events = tmp_path / "events"
+    events.mkdir()
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    # the CLI's get_session sets its master from SPARK_GRAFT_CPUS, so both
-    # say two threads
+    # SPARK_GRAFT_CPUS names another master than the submitted one: the
+    # CLI's get_session must keep the submitted master
     env.update(
         SPARK_GRAFT_DRIVER_MEM="1g",
-        SPARK_GRAFT_CPUS="2",
+        SPARK_GRAFT_CPUS="3",
         PYSPARK_PYTHON=sys.executable,
         PYSPARK_DRIVER_PYTHON=sys.executable,
     )
     submit = os.path.join(os.path.dirname(pyspark.__file__), "bin", "spark-submit")
     proc = subprocess.run(
         [submit, "--master", "local[2]", "--py-files", zip_path,
+         "--conf", "spark.eventLog.enabled=true",
+         "--conf", f"spark.eventLog.dir={events}",
+         "--conf", "spark.eventLog.compress=false",
          os.path.join(REPO, "scripts", "submit_job.py"), "pagerank",
          "--edges", edges_path, "--output", out, "--checkpoint-dir", ckpt],
         cwd=work, env=env, capture_output=True, text=True, timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     summary = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert _master_in_event_log(events) == "local[2]"
 
     # every superstep's metrics are on storage after the process exited:
     # the last write ran in the background and still finished
